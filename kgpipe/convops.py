@@ -11,8 +11,10 @@ segmentation and turn-taking statistics before KG construction.
 Both operators are one hash-exchange-on-conv_id window plans — the same
 shuffle shape as mention detection and co-occurrence, so at 100 TB they
 ride the partitioning the pipeline already has.  Skew is bounded by
-conversation length; pathological mega-conversations are the same case
-the fused plan's ``max_turns_per_group`` guard addresses.
+conversation length: a mega-conversation lands in one task.  These
+operators have no guard for that; the KG path's guard is the fused plan's
+``max_turns_per_group``, which replaces conversation-wide state with
+side-table aggregates.
 """
 
 from __future__ import annotations
@@ -177,8 +179,9 @@ def turn_retries(
 
     One conv_id-keyed self-join: per-conversation cost is quadratic in
     the conversation's OWN turn count (the bounded-skew shape every
-    operator in this module shares — mega-conversations are the fused
-    plan's ``max_turns_per_group`` case), never in the corpus.
+    operator in this module shares; unlike the fused plan's
+    ``max_turns_per_group``, nothing here guards a mega-conversation),
+    never in the corpus.
     """
     toks = F.array_distinct(F.split(F.lower(F.col("text")), " "))
     base = transcripts.select(

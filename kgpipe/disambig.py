@@ -62,40 +62,38 @@ def mayla_filter(
       turn text — SURVEY D1's "document text ≡ per-turn text" mapping,
       and the zero-extra-shuffle contract the fused plan relies on;
     - ``'conversation'``: frequency over the WHOLE conversation text
-      (turns concatenated in stable (turn_idx, text) order) — the
-      reference's exact granularity (it counts over the full document
-      text, ``MaylaPostProcessingComponent.java:115``).  Costs one
-      conv_id groupBy exchange to assemble conversation text; skew is
-      bounded by conversation length (the fused plan's
-      ``max_turns_per_group`` case).
+      (turns joined with ``\\n``) — the reference's exact granularity (it
+      counts over the full document text,
+      ``MaylaPostProcessingComponent.java:115``).  Computed as the sum of
+      per-turn counts per (conversation, surface): a detected surface
+      never contains ``\\n`` (``normalize.chunk_spans`` splits there), so
+      no occurrence crosses a turn boundary and the sum is exact.  No task
+      ever holds a conversation's text, so a mega-conversation costs
+      shuffle rows, not task memory (the fused ``max_turns_per_group``
+      plan relies on this).
     """
     if freq_scope not in ("turn", "conversation"):
         raise ValueError(
             f"freq_scope must be 'turn' or 'conversation', got {freq_scope!r}"
         )
+    surface = F.col("covered_text")
     if freq_scope == "conversation" and concept_freq is not None:
-        conv_text = (
-            transcripts.groupBy("conv_id").agg(
-                F.array_join(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(F.struct("turn_idx", "text"))
-                        ),
-                        lambda s: s["text"],
-                    ),
-                    "\n",
-                ).alias("text")
-            )
+        freq = (
+            mentions.select("conv_id", "covered_text").distinct()
+            .join(transcripts.select("conv_id", "text"), "conv_id")
+            .groupBy("conv_id", "covered_text")
+            .agg(F.sum(_substring_count(F.col("text"), surface))
+                 .alias("__freq"))
         )
-        m = mentions.join(conv_text, ["conv_id"], "left")
+        m = mentions.join(freq, ["conv_id", "covered_text"], "left")
     else:
         text_src = transcripts.select("conv_id", "turn_idx", "text")
         m = mentions.join(text_src, ["conv_id", "turn_idx"], "left")
+        m = m.withColumn("__freq", _substring_count(F.col("text"), surface))
 
     canon = dictionary.select("concept_id", "canonical").dropDuplicates(["concept_id"])
     m = m.join(F.broadcast(canon), "concept_id", "left")
 
-    surface = F.col("covered_text")
     is_all_upper = (surface == F.upper(surface)) & (F.lower(surface) != surface)
     starts_upper = F.substring(surface, 1, 1).rlike("[A-Z]")
 
@@ -115,8 +113,8 @@ def mayla_filter(
             )
         else:
             thr = F.lit(concept_freq)
-        freq = _substring_count(F.col("text"), surface)
-        keep = is_gold | (freq >= thr) | (surface == F.col("canonical"))
+        keep = is_gold | (F.col("__freq") >= thr) | (
+            surface == F.col("canonical"))
 
     return m.filter(keep).select(*mentions.columns)
 
@@ -148,58 +146,6 @@ def mayla_keep_py(
     # non-overlapping count ≡ _substring_count's length arithmetic
     freq = (turn_text or "").count(surface) if surface else 0
     return freq >= thr or surface == canonical
-
-
-def mayla_conv_freq_filter(
-    mentions: DataFrame,
-    transcripts: DataFrame,
-    dictionary: DataFrame,
-    concept_freq: int | dict[str, int],
-    default_freq: int = 1,
-) -> DataFrame:
-    """Exact conversation-scope Mayla frequency filter via a
-    PRE-AGGREGATED per-(conversation, surface) frequency side table —
-    identical keep semantics to ``mayla_filter(freq_scope='conversation')``
-    but WITHOUT ever assembling a conversation's full text in one task:
-    detected surfaces join back to the conversation's turns, each turn
-    contributes its JVM substring count, and the counts sum per
-    conversation.  Per-task state is a running sum, so an adversarial
-    mega-conversation costs shuffle rows, not memory — the side-table
-    shape the fused split plan needs for exact conv-scope scoring
-    (VERDICT r4 #4).
-
-    Exactness vs the joined-text count: conversation text is turns joined
-    with ``\\n``, and dictionary surfaces never contain a newline, so no
-    occurrence spans a turn boundary — the per-turn sum IS the whole-text
-    count (``MaylaPostProcessingComponent.java:115`` counts over the full
-    document text)."""
-    surf = mentions.select("conv_id", "covered_text").distinct()
-    per_turn = surf.join(
-        transcripts.select("conv_id", "text"), "conv_id"
-    ).select(
-        "conv_id", "covered_text",
-        _substring_count(F.col("text"), F.col("covered_text")).alias("c"),
-    )
-    freq = per_turn.groupBy("conv_id", "covered_text").agg(
-        F.coalesce(F.sum("c"), F.lit(0)).alias("__freq")
-    )
-    canon = dictionary.select("concept_id", "canonical").dropDuplicates(
-        ["concept_id"])
-    m = (
-        mentions.join(freq, ["conv_id", "covered_text"], "left")
-        .join(F.broadcast(canon), "concept_id", "left")
-    )
-    if isinstance(concept_freq, dict):
-        pairs = [x for kv in sorted(concept_freq.items()) for x in kv]
-        thr = F.coalesce(
-            F.create_map(*[F.lit(x) for x in pairs])[F.col("ontology")],
-            F.lit(default_freq),
-        )
-    else:
-        thr = F.lit(concept_freq)
-    keep = (F.coalesce("__freq", F.lit(0)) >= thr) | (
-        F.col("covered_text") == F.col("canonical"))
-    return m.filter(keep).select(*mentions.columns)
 
 
 # per-namespace frequency thresholds (MaylaPostProcessingComponent.java:151-181)

@@ -22,16 +22,15 @@ Trade-offs vs the staged path (kgpipe.pipeline):
   staged path scores with global IDF — use it when corpus-level statistics
   must participate;
 - a single conversation must fit in one task — unless
-  ``max_turns_per_group`` is set, which splits conversations into
-  turn-index blocks (ghost-replicated at the boundary so windowed
-  co-occurrence stays exact; offsets are turn-relative so splitting is
-  safe) and bounds per-task state for adversarial mega-conversations.
-  When splitting meets conversation-LEVEL scoring (TF disambiguation or
-  conv-scope Mayla frequency), the plan auto-switches to
-  ``_exact_conv_plan`` — pre-aggregated per-conversation side tables
-  joined onto a narrow detect scan — so the skew guard no longer changes
-  semantics (``exact_conv_scores=False`` restores the one-shuffle
-  block-local approximation).
+  ``max_turns_per_group`` is set and some conversation has more turns
+  than that, which routes the run to ``_exact_conv_plan`` for adversarial
+  mega-conversations: a detect scan over turns spread by (conv_id,
+  turn_idx) with no conversation co-location, conversation-level scores
+  (TF disambiguation, conv-scope Mayla frequency) from pre-aggregated side
+  tables joined back onto the mentions, and the banded co-occurrence
+  join.  Per-task state is bounded
+  by window density, the output equals the scan's for every config, and
+  detect errors quarantine per turn instead of per conversation.
 
 At 1000 executors this is the plan you want: shuffle bytes ≈ input bytes,
 exactly once, no barrier between per-conversation products.
@@ -62,7 +61,8 @@ _FLAT_SCHEMA = (
     " ev_begin int, ev_end int, ev_text string"
 )
 
-#: pred value of quarantined per-conversation failures (obj = message);
+#: pred value of quarantined failures (obj = message): one row per failed
+#: conversation from the scan, per failed turn from ``_exact_conv_plan``;
 #: consumed by kgpipe.pipeline's lineage integration, never written to the
 #: triple table
 ERROR_PRED = "__ERROR__"
@@ -111,49 +111,55 @@ def _exact_conv_plan(
     mayla_default_freq: int,
     mayla_freq_scope: str,
 ) -> DataFrame:
-    """EXACT conversation-scope scoring under block splitting (VERDICT r4
-    #4): instead of block-local in-scan Mayla/TF, the detect scan stays
-    NARROW (no pre-shuffle, no ghosts) and the conversation-level scores
-    come from pre-aggregated side tables joined back onto the mention
-    stream —
+    """The ``max_turns_per_group`` plan: the detect scan needs no
+    conversation co-location (turns are spread by (conv_id, turn_idx)) and
+    the conversation-level scores come from pre-aggregated side tables
+    joined back onto the mention stream —
 
-    - Mayla conv frequency: per-(conv, surface) substring-count sums
-      (disambig.mayla_conv_freq_filter; never assembles conversation text
-      in one task);
+    - Mayla conv frequency: per-(conv, surface) sums of per-turn
+      substring counts (disambig.mayla_filter; never assembles a
+      conversation's text in one task);
     - TF disambiguation: a (conv, concept) window count + span argmax on
       one conv_id exchange (conv_tf_disambiguate);
     - co-occurrence: the banded (conv, turn-bucket) equi-join
       (triples.cooccurrence_pairs), not an in-task pair walk.
 
-    Semantics are identical to the UNSPLIT fused plan for any
-    ``max_turns_per_group`` (test-asserted), and per-task state is bounded
-    by block/window density everywhere, so the skew guard no longer trades
-    correctness.  Errors quarantine PER TURN (detect row quarantine); with
-    ``quarantine_errors=False`` error rows are dropped from the output
-    (the in-scan plan would instead fail the job)."""
-    from .canon import canonicalize_with_map, components_from_rows
-    from .detect import collect_dictionary, detect_mentions
-    from .disambig import mayla_conv_freq_filter, mayla_filter
+    Output equals the unsplit fused plan's for every config
+    (test-asserted), and per-task state is bounded by window density, so
+    a hot conversation costs shuffle rows, not task memory.  Detect errors
+    quarantine PER TURN as ERROR_PRED rows; with
+    ``quarantine_errors=False`` an error row fails the job, as it does in
+    the unsplit scan."""
+    from .canon import canonicalize_with_map
+    from .detect import detect_mentions
+    from .disambig import mayla_filter
+    from .session import cpu_partition_count
     from .triples import cooccurrence_triples, mention_triples
 
     rows = collect_dictionary(dictionary)
-    raw = detect_mentions(transcripts, dictionary, configs,
+    # spread turns over CPU-sized partitions before the Python detect: the
+    # input's own partitioning follows its files (one small file = one
+    # serial detect task), and a turn-level key also splits a hot
+    # conversation across tasks
+    turns = transcripts.repartition(
+        cpu_partition_count(transcripts.sparkSession), "conv_id", "turn_idx")
+    raw = detect_mentions(turns, dictionary, configs,
                           local_rows=rows).persist()
     if cache_registry is not None:
         cache_registry.append(raw)
-    errors = raw.filter(F.col("concept_id") == "__ERROR__")
-    ok = raw.filter(F.col("concept_id") != "__ERROR__")
+    is_err = F.col("concept_id") == "__ERROR__"
+    if quarantine_errors:
+        ok = raw.filter(~is_err)
+    else:
+        ok = raw.withColumn("concept_id", F.when(
+            is_err, F.raise_error(F.concat(
+                F.lit("detect failed in conversation "), F.col("conv_id"),
+                F.lit(": "), F.col("error"))),
+        ).otherwise(F.col("concept_id")))
     if mayla:
-        if (mayla_freq_scope == "conversation"
-                and mayla_concept_freq is not None):
-            ok = mayla_conv_freq_filter(
-                ok, transcripts, dictionary, mayla_concept_freq,
-                mayla_default_freq)
-        else:
-            ok = mayla_filter(ok, transcripts, dictionary,
-                              mayla_concept_freq,
-                              default_freq=mayla_default_freq,
-                              freq_scope="turn")
+        ok = mayla_filter(ok, transcripts, dictionary, mayla_concept_freq,
+                          default_freq=mayla_default_freq,
+                          freq_scope=mayla_freq_scope)
     if disambiguate:
         ok = conv_tf_disambiguate(ok)
     concept_col = "concept_id"
@@ -166,7 +172,7 @@ def _exact_conv_plan(
         .unionByName(conversation_triples(transcripts))
     )
     if quarantine_errors:
-        err_rows = errors.select(
+        err_rows = raw.filter(is_err).select(
             F.concat(F.lit(CONV_NS), F.col("conv_id")).alias("subj"),
             F.lit(ERROR_PRED).alias("pred"),
             F.col("error").alias("obj"),
@@ -193,54 +199,38 @@ def fused_conv_triples(
     mayla_concept_freq: Optional[int | dict] = None,
     mayla_default_freq: int = 1,
     mayla_freq_scope: str = "turn",
-    exact_conv_scores: Optional[bool] = None,
 ) -> DataFrame:
     """transcripts → full triple set with one shuffle (see module doc).
 
     ``max_turns_per_group`` is the mega-conversation skew guard (SURVEY.md
-    §7 "Skew"): when set (must be >= cooc_window), conversations are split
-    into turn-index blocks of that size and the group key becomes
-    (conv_id, block), so no single task ever holds more than ~2 blocks of
-    turns regardless of how hot a conversation is.  With
-    ``disambiguate=False`` co-occurrence parity with the unsplit plan is
-    exact (test-asserted): the first ``cooc_window`` turns of each block
-    are replicated into the previous block as *ghost* rows (they
-    contribute pair partners but no structure/denotes output), every pair
-    is counted in the home block of its earlier turn, and the per-block
-    pair lists are deduplicated conversation-wide afterwards.
-
-    ``exact_conv_scores`` governs conversation-LEVEL scoring under
-    splitting.  Default (None = auto): when ``max_turns_per_group`` is set
-    together with ``disambiguate=True`` or conversation-scope Mayla
-    frequency, the plan switches to ``_exact_conv_plan`` — side-table
-    scoring joined onto a narrow detect scan — whose output is IDENTICAL
-    to the unsplit fused plan at any block size (test-asserted), at the
-    cost of the banded co-occurrence join instead of the in-task pair
-    walk.  ``False`` forces the historical block-local in-scan scoring
-    (one shuffle, documented approximation: a span-ambiguous GHOST
-    mention may resolve differently per block); ``True`` forces the
-    side-table plan even without splitting.
+    §7 "Skew"; must be >= cooc_window): when some conversation has MORE
+    turns than this (one max-count aggregate over *transcripts* decides),
+    the run goes through ``_exact_conv_plan`` instead of the
+    per-conversation scan, so no task ever holds a whole conversation
+    however hot it is.  Its output is IDENTICAL to the scan's for every
+    disambiguation/Mayla config (test-asserted); the price is the banded
+    co-occurrence join and the side-table exchanges instead of the in-task
+    pair walk.  Detect errors then quarantine per turn; the scan
+    quarantines the whole conversation.  Persisted intermediates are
+    appended to *cache_registry* for release after the caller's terminal
+    action.
     """
     if mayla_freq_scope not in ("turn", "conversation"):
         raise ValueError(
             f"mayla_freq_scope must be 'turn' or 'conversation', "
             f"got {mayla_freq_scope!r}"
         )
-    if max_turns_per_group is not None and max_turns_per_group < cooc_window:
-        raise ValueError("max_turns_per_group must be >= cooc_window")
-    if exact_conv_scores is None:
-        exact_conv_scores = (
-            max_turns_per_group is not None
-            and (disambiguate
-                 or (mayla and mayla_freq_scope == "conversation"
-                     and mayla_concept_freq is not None))
-        )
-    if exact_conv_scores:
-        return _exact_conv_plan(
-            transcripts, dictionary, configs, cooc_window, disambiguate,
-            canonical, quarantine_errors, cache_registry, mayla,
-            mayla_concept_freq, mayla_default_freq, mayla_freq_scope,
-        )
+    if max_turns_per_group is not None:
+        if max_turns_per_group < cooc_window:
+            raise ValueError("max_turns_per_group must be >= cooc_window")
+        longest = (transcripts.groupBy("conv_id").count()
+                   .agg(F.max("count")).first()[0])
+        if (longest or 0) > max_turns_per_group:
+            return _exact_conv_plan(
+                transcripts, dictionary, configs, cooc_window, disambiguate,
+                canonical, quarantine_errors, cache_registry, mayla,
+                mayla_concept_freq, mayla_default_freq, mayla_freq_scope,
+            )
     spark = transcripts.sparkSession
     rows = collect_dictionary(dictionary)
     tries = build_tries(rows, configs)
@@ -253,8 +243,7 @@ def fused_conv_triples(
     # rides the existing broadcast.
     # freq_scope='conversation' counts the surface over the WHOLE group's
     # text (the reference's document granularity) — free here because the
-    # group IS the conversation; in split mode (exact_conv_scores=False)
-    # the count is block-local over the block's own non-ghost turns.
+    # group IS the conversation.
     mayla_cfg = None
     if mayla:
         canon_label: dict = {}
@@ -263,14 +252,12 @@ def fused_conv_triples(
         mayla_cfg = (mayla_concept_freq, mayla_default_freq, canon_label,
                      mayla_freq_scope == "conversation")
     bc = spark.sparkContext.broadcast((tries, comp_map, mayla_cfg))
-    block_size = max_turns_per_group
 
-    def _process_conv(conv_id, block, turns, emit, tries_l, comp,
-                      mcfg) -> None:
-        """One conversation (or block): *turns* is ``[(ti, text, ghost)]``
-        already in turn order (the partition is sorted); *emit* appends into
-        the CALLING BATCH's shared output columns — no per-conversation
-        pandas objects anywhere on this path.
+    def _process_conv(conv_id, turns, emit, tries_l, comp, mcfg) -> None:
+        """One conversation: *turns* is ``[(ti, text)]`` already in turn
+        order (the partition is sorted); *emit* appends into the CALLING
+        BATCH's shared output columns — no per-conversation pandas objects
+        anywhere on this path.
 
         Structure triples (conv rdf:type, turn partOf, role, tool) are NOT
         emitted here — they are pure column expressions and come from a
@@ -279,32 +266,20 @@ def fused_conv_triples(
         triples and co-occurrence pairs (plus quarantined error rows).
         This also narrows the shuffle: role/tool never leave the scan side.
         """
+        turns = [(ti, text) for ti, text in turns
+                 if text is not None
+                 and not (isinstance(text, float) and pd.isna(text))]
         # detect per turn (turn-relative offsets — the per-turn text
         # equality invariant), dedupe identical (turn, concept, span).
-        # Ghost rows (next block's first `cooc_window` turns, replicated
-        # here as pair partners) produce NO denotes output.
-        mentions: list[tuple[int, str, int, int, str, bool]] = []
+        mentions: list[tuple[int, str, int, int, str]] = []
         seen: set = set()
-        # conversation-scope Mayla frequency text: the group's turns
-        # joined in (turn_idx, text) order — identical to the staged
-        # mayla_filter(freq_scope='conversation') aggregate when the group
-        # IS the conversation.  Under max_turns_per_group (reachable only
-        # via exact_conv_scores=False — the auto default routes conv-scope
-        # splitting to _exact_conv_plan) the count is block-local over the
-        # block's OWN turns: ghost rows are excluded so boundary text is
-        # never double-counted.
+        # conversation-scope Mayla frequency text: the turns joined in
+        # (turn_idx, text) order — identical to the staged
+        # mayla_filter(freq_scope='conversation') count
         conv_text = None
         if mcfg is not None and mcfg[3]:
-            conv_text = "\n".join(
-                t for _, t, _ in sorted(
-                    (ti, text, g) for ti, text, g in turns
-                    if not g and text is not None
-                    and not (isinstance(text, float) and pd.isna(text))
-                )
-            )
-        for ti, text, ghost in turns:
-            if text is None or (isinstance(text, float) and pd.isna(text)):
-                continue
+            conv_text = "\n".join(t for _, t in sorted(turns))
+        for ti, text in turns:
             pretok = pretokenize(text) if len(tries_l) > 1 else None
             for trie in tries_l.values():
                 for ont, cid, b, e, cov in trie.scan_text(text, pretok):
@@ -320,18 +295,18 @@ def fused_conv_triples(
                             ont, mcfg[2].get(cid), mcfg[0], mcfg[1],
                         ):
                             continue
-                        mentions.append((ti, cid, b, e, cov, ghost))
+                        mentions.append((ti, cid, b, e, cov))
 
         # conversation-local TF disambiguation: for span-ambiguous mentions
         # keep the concept with the highest conv-level frequency, ties to
-        # the smaller id (deterministic; block-local when splitting)
+        # the smaller id (deterministic)
         if disambiguate and mentions:
             tf: dict[str, int] = {}
-            for _, cid, _, _, _, _ in mentions:
+            for _, cid, _, _, _ in mentions:
                 tf[cid] = tf.get(cid, 0) + 1
             by_span: dict[tuple[int, int, int], tuple] = {}
             for m in mentions:
-                ti, cid, b, e, cov, ghost = m
+                ti, cid, b, e, cov = m
                 k = (ti, b, e)
                 best = by_span.get(k)
                 if best is None or (-tf[cid], cid) < (-tf[best[1]], best[1]):
@@ -341,29 +316,22 @@ def fused_conv_triples(
         # canonical mapping + denotes triples + windowed co-occurrence
         pair_counts: dict[tuple[str, str], int] = {}
         canon_mentions = []
-        for ti, cid, b, e, cov, ghost in mentions:
+        for ti, cid, b, e, cov in mentions:
             ccid = comp.get(cid, cid)
-            canon_mentions.append((ti, ccid, b, e, cov, ghost))
-            if not ghost:
-                emit(f"{CONV_NS}{conv_id}#t{ti}", PRED_DENOTES,
-                     _concept_uri(ccid), conv_id, ti, (b, e, cov))
+            canon_mentions.append((ti, ccid))
+            emit(f"{CONV_NS}{conv_id}#t{ti}", PRED_DENOTES,
+                 _concept_uri(ccid), conv_id, ti, (b, e, cov))
         # co-occurrence: |Δturn| <= window, distinct concepts, each
         # unordered mention pair counted once under (min, max) concept
         # order.  Mentions are turn-sorted, so a forward scan that breaks
         # at Δturn > window is O(n · window-density), not O(n²) — the
         # difference between minutes and seconds on a mega-conversation.
-        # When splitting, a pair belongs to the home block of its EARLIER
-        # turn — each unordered pair is visible in exactly one group
-        # (ghost↔ghost pairs belong to the next block, where both turns
-        # are regular rows), so no pair is double-counted.
         canon_mentions.sort(key=lambda m: m[0])
         n = len(canon_mentions)
         for i in range(n):
-            ta, ca = canon_mentions[i][0], canon_mentions[i][1]
-            if block_size is not None and ta // block_size != block:
-                continue  # min(ta, tb) == ta on a sorted scan
+            ta, ca = canon_mentions[i]
             for j in range(i + 1, n):
-                tb, cb = canon_mentions[j][0], canon_mentions[j][1]
+                tb, cb = canon_mentions[j]
                 if tb - ta > cooc_window:
                     break
                 if ca == cb:
@@ -381,14 +349,13 @@ def fused_conv_triples(
         per Arrow batch, not per conversation.  ``groupBy(conv)
         .applyInPandas`` invokes Python once per GROUP — one pandas frame
         per conversation, which dominates runtime on many-short-
-        conversation corpora.  Data arrives repartitioned by the group key
-        and sorted within the partition, so groups are contiguous row
+        conversation corpora.  Data arrives repartitioned by conv_id and
+        sorted within the partition, so conversations are contiguous row
         runs; a plain walk over the batch's column arrays slices them with
         zero pandas machinery, and the only carry between batches is the
-        (possibly incomplete) LAST group — bounded by one conversation
-        (one block in split mode)."""
+        (possibly incomplete) LAST conversation."""
         tries_l, comp, mcfg = bc.value
-        pending_key = None
+        pending_conv = None
         pending_turns: list = []
 
         def make_emit(out):
@@ -404,11 +371,9 @@ def fused_conv_triples(
                 out["ev_text"].append(ev[2])
             return emit
 
-        def process(key, turns, emit):
-            conv_id, block = key
+        def process(conv_id, turns, emit):
             try:
-                _process_conv(conv_id, int(block), turns, emit,
-                              tries_l, comp, mcfg)
+                _process_conv(conv_id, turns, emit, tries_l, comp, mcfg)
             except Exception as exc:
                 if not quarantine_errors:
                     raise
@@ -427,28 +392,26 @@ def fused_conv_triples(
             out = {k: [] for k in _OUT_COLS}
             emit = make_emit(out)
             conv_a = pdf["conv_id"].to_numpy()
-            block_a = pdf["block"].to_numpy()
             ti_a = pdf["turn_idx"].to_numpy()
             text_a = pdf["text"].to_numpy()
-            ghost_a = pdf["is_ghost"].to_numpy()
-            cur_key, cur_turns = pending_key, pending_turns
+            cur_conv, cur_turns = pending_conv, pending_turns
             for i in range(n):
-                key = (conv_a[i], block_a[i])
-                if key != cur_key:
-                    if cur_key is not None:
-                        process(cur_key, cur_turns, emit)
-                    cur_key, cur_turns = key, []
-                cur_turns.append((int(ti_a[i]), text_a[i], bool(ghost_a[i])))
-            pending_key, pending_turns = cur_key, cur_turns
+                # a group is never empty, so an empty list marks "no group
+                # yet" (a NULL conv_id is still a group of its own)
+                if conv_a[i] != cur_conv or not cur_turns:
+                    if cur_turns:
+                        process(cur_conv, cur_turns, emit)
+                    cur_conv, cur_turns = conv_a[i], []
+                cur_turns.append((int(ti_a[i]), text_a[i]))
+            pending_conv, pending_turns = cur_conv, cur_turns
             if out["subj"]:
                 yield pd.DataFrame(out)
-        if pending_key is not None:  # flush the partition's last group
+        if pending_turns:  # flush the partition's last group
             out = {k: [] for k in _OUT_COLS}
-            process(pending_key, pending_turns, make_emit(out))
+            process(pending_conv, pending_turns, make_emit(out))
             if out["subj"]:
                 yield pd.DataFrame(out)
 
-    base = transcripts.select("conv_id", "turn_idx", "text")
     # explicit partition count: a bare repartition("conv_id") is an AQE
     # coalescing target — on a text-light corpus it collapses to one or two
     # ~64MB partitions and SERIALIZES the Python scan stage (measured: 2→8
@@ -457,46 +420,13 @@ def fused_conv_triples(
     # not bytes.
     from .session import cpu_partition_count
 
-    n_parts = cpu_partition_count(transcripts.sparkSession)
-    if block_size is None:
-        keyed = base.withColumn("block", F.lit(0)).withColumn(
-            "is_ghost", F.lit(False)
-        )
-        flat = (
-            keyed.repartition(n_parts, "conv_id")
-            .sortWithinPartitions("conv_id", "turn_idx")
-            .mapInPandas(scan_partition, schema=_FLAT_SCHEMA)
-        )
-    else:
-        keyed = base.withColumn(
-            "block", F.floor(F.col("turn_idx") / block_size).cast("int")
-        ).withColumn("is_ghost", F.lit(False))
-        ghosts = (
-            keyed.filter(
-                (F.col("turn_idx") % block_size < cooc_window)
-                & (F.col("block") > 0)
-            )
-            .withColumn("block", F.col("block") - 1)
-            .withColumn("is_ghost", F.lit(True))
-        )
-        grouped = (
-            keyed.unionByName(ghosts)
-            .repartition(n_parts, "conv_id", "block")
-            .sortWithinPartitions("conv_id", "block", "turn_idx")
-            .mapInPandas(scan_partition, schema=_FLAT_SCHEMA)
-        ).persist()
-        # only the (conv, pair) co-occurrence triples can surface from
-        # several blocks (with IDENTICAL rows — turn_idx/evidence null);
-        # every other row kind is emitted exactly once per group, including
-        # legitimately duplicated denotes rows (two concepts canonicalizing
-        # to one component at the same span), which a full-row
-        # dropDuplicates would wrongly collapse.  Persisting the grouped
-        # output lets the two slices read the Python stage once while only
-        # the (small) cooc slice pays a dedup shuffle — at scale this is
-        # local storage ≈ output bytes instead of a full output shuffle.
-        cooc = grouped.filter(F.col("pred") == PRED_COOCCURS).dropDuplicates()
-        flat = grouped.filter(F.col("pred") != PRED_COOCCURS).unionByName(cooc)
-    result = flat.select(
+    flat = (
+        transcripts.select("conv_id", "turn_idx", "text")
+        .repartition(cpu_partition_count(spark), "conv_id")
+        .sortWithinPartitions("conv_id", "turn_idx")
+        .mapInPandas(scan_partition, schema=_FLAT_SCHEMA)
+    )
+    return flat.select(
         "subj", "pred", "obj", "conv_id", "turn_idx",
         F.when(
             F.col("ev_begin").isNotNull(),
@@ -514,13 +444,3 @@ def fused_conv_triples(
         # quarantined: structure survives, matching staged error semantics)
         conversation_triples(transcripts)
     )
-    if block_size is not None:
-        # split mode persists the mapInPandas output (see above); hand the
-        # cached frame to the caller for release after its terminal action.
-        # Callers that can't pass *cache_registry* still find it on the
-        # returned frame — but any transformation drops that attribute, so
-        # the registry is the supported protocol (kgpipe.pipeline uses it).
-        if cache_registry is not None:
-            cache_registry.append(grouped)
-        result._kgpipe_persisted = grouped  # type: ignore[attr-defined]
-    return result

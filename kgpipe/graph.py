@@ -8,11 +8,12 @@ These operators give the Spark-side equivalent over the triple DataFrame
 the kgpipe pipeline materializes, so KG quality checks (predicate mix,
 hub entities, connectivity fan-out) run in the same job as construction.
 
-Every op except ``pagerank`` is an integer-valued aggregation/equi-join —
-no floats, so each is DuckDB-oracle hashable with no driver-side
-collection.  ``pagerank`` is float-valued and iterative (one scalar
-dangling-mass aggregate per round), validated by pytest against a dense
-power-iteration reference instead.
+Most ops are integer-valued aggregations/equi-joins — no floats, so each
+is DuckDB-oracle hashable with no driver-side collection.  ``pagerank`` and
+``hits`` are float-valued and iterative (one in-plan scalar aggregate per
+round); their oracle rows hash 1e-6-rounded scores against SQL that
+unrolls the same iterations, and pytest checks them against dense
+power-iteration references.
 """
 
 from __future__ import annotations
@@ -279,8 +280,9 @@ def pagerank(
     mass) stays INSIDE the plan as a broadcast 1-row aggregate joined
     onto the rank update — no driver-side ``.first()`` per round, so
     each iteration is exactly ONE job (the eager checkpoint), not two.
-    Float-valued and iterative, so validated by pytest against a dense
-    power-iteration reference rather than a SQL oracle.
+    Float-valued: the oracle row hashes 1e-6-rounded ranks against SQL
+    that unrolls the same iterations; pytest also checks a dense
+    power-iteration reference.
     """
     if not 0.0 < damping < 1.0:
         raise ValueError(f"damping must be in (0, 1), got {damping}")
@@ -680,7 +682,11 @@ def hits(triples: DataFrame, iters: int = 5) -> DataFrame:
     each score frame localCheckpointed so plan depth stays O(1) across
     rounds.  Float-valued; the oracle row hashes 1e-6-rounded scores
     against unrolled MATERIALIZED-CTE SQL (the pagerank precedent).
+    ``iters`` must be >= 1.  An empty edge set has no nodes, so every
+    score frame and the result are empty (no NULL scores).
     """
+    if iters < 1:
+        raise ValueError(f"iters must be >= 1, got {iters}")
     e = _edges(triples)
     nodes = (
         e.select(F.col("subj").alias("id"))

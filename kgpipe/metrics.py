@@ -26,11 +26,13 @@ def observe_counts(df: DataFrame, name: str = "kgpipe") -> tuple[DataFrame, Obse
     Returns ``(instrumented_df, observation)``; after any action on the
     returned DataFrame, ``observation.get`` yields::
 
-        {"n_rows": ..., "n_turns": ..., "n_errors": ...}
+        {"n_rows": ..., "n_turns_approx": ..., "n_errors": ...}
 
-    (n_turns counts distinct (conv_id, turn_idx) pairs when those columns
-    exist; n_errors counts quarantined rows when an ``error`` column
-    exists — the AnnotationOutputLog / ProcessingErrorLog analogue.)
+    (n_turns_approx is an HLL++ ESTIMATE of the distinct (conv_id,
+    turn_idx) pairs when those columns exist — observed metrics cannot
+    take exact distinct aggregates; n_errors counts quarantined rows when
+    an ``error`` column exists — the AnnotationOutputLog /
+    ProcessingErrorLog analogue.)
     """
     aggs = [F.count(F.lit(1)).alias("n_rows")]
     if "conv_id" in df.columns and "turn_idx" in df.columns:
@@ -38,7 +40,7 @@ def observe_counts(df: DataFrame, name: str = "kgpipe") -> tuple[DataFrame, Obse
             F.approx_count_distinct(
                 F.concat_ws(":", F.col("conv_id"),
                             F.col("turn_idx").cast("string"))
-            ).alias("n_turns")
+            ).alias("n_turns_approx")
         )
     if "error" in df.columns:
         aggs.append(

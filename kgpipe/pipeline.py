@@ -45,7 +45,12 @@ class PipelineConfig:
     # unique (the input invariant); set False for sources that may replay
     # rows to restore a corpus-wide duplicate-annotation removal pass
     assume_unique_turns: bool = True
-    max_turns_per_group: Optional[int] = None  # fused-plan mega-conv guard
+    # fused-plan mega-conversation guard (>= cooc_window): when some
+    # conversation has more turns than this, the run takes the exact
+    # side-table plan (kgpipe.fused._exact_conv_plan) — same output as the
+    # per-conversation scan, no whole conversation in one task, detect
+    # errors quarantined per turn
+    max_turns_per_group: Optional[int] = None
     # atomic snapshot-committed sink: readers never see partial data.
     # Alone → triples.write_triples_snapshot (one-shot commit); combined
     # with lineage_path → per-bucket resumable staging whose snapshot
@@ -68,8 +73,10 @@ def build_mentions(
     When ``cfg.disambiguate``, the detect output is persisted before
     ``tfidf_disambiguate`` — its DF/N aggregations are separate consumers
     of the mention stream, and without a cache each one re-runs the Python
-    detection stage.  Persisted frames are appended to *cache_registry*
-    (when given) so the caller can unpersist after its terminal action."""
+    detection stage.  Conversation-scope Mayla persists it for the same
+    reason (its frequency side table reads the mentions too).  Persisted
+    frames are appended to *cache_registry* (when given) so the caller can
+    unpersist after its terminal action."""
     if cfg.salt_partitions:
         # salted repartition before per-conversation work: conv_id plus a
         # random-ish salt derived from turn_idx spreads hot conversations
@@ -90,16 +97,26 @@ def build_mentions(
         from .filters import remove_duplicates
 
         mentions = remove_duplicates(mentions)
+
+    def _persist(df: DataFrame) -> DataFrame:
+        df = df.persist()
+        if cache_registry is not None:
+            cache_registry.append(df)
+        return df
+
     if cfg.mayla:
+        if (cfg.mayla_freq_scope == "conversation"
+                and cfg.mayla_concept_freq is not None):
+            # the conversation frequency side table is a second consumer
+            mentions = _persist(mentions)
         mentions = mayla_filter(
             mentions, transcripts, dictionary, cfg.mayla_concept_freq,
             freq_scope=cfg.mayla_freq_scope,
         )
     if cfg.disambiguate:
-        mentions = mentions.persist()
-        if cache_registry is not None:
-            cache_registry.append(mentions)
-        mentions = tfidf_disambiguate(mentions)
+        # persisted again even after the Mayla persist: without it each
+        # TF-IDF consumer re-runs the Mayla joins (measured slower)
+        mentions = tfidf_disambiguate(_persist(mentions))
     if cfg.canonical:
         mentions = canonicalize(mentions, dictionary)
     return mentions
@@ -169,7 +186,7 @@ def run_pipeline(
             def _fused_stage(tdf: DataFrame):
                 flat = _make_flat(tdf).persist()
                 persisted.append(flat)
-                persisted.extend(fused_caches)  # split-mode scan cache
+                persisted.extend(fused_caches)  # side-table detect cache
                 fused_caches.clear()
                 errors = flat.filter(F.col("pred") == ERROR_PRED).select(
                     "conv_id",
@@ -255,8 +272,12 @@ def main(argv: Optional[list[str]] = None) -> None:
     ap.add_argument("--fused", action="store_true",
                     help="one-shuffle conversation-local plan")
     ap.add_argument("--max-turns-per-group", type=int, default=None,
-                    help="fused mode: split mega-conversations into turn "
-                         "blocks of this size (skew guard)")
+                    help="fused mode skew guard (>= --cooc-window): if "
+                         "some conversation has more turns than this, score "
+                         "conversations from side tables over a narrow "
+                         "detect scan so no task holds a whole "
+                         "conversation; same output, errors quarantined "
+                         "per turn")
     ap.add_argument("--mayla-conv-scope", action="store_true",
                     help="Mayla frequency over the whole conversation "
                          "(the reference's document granularity) instead "

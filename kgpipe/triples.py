@@ -615,8 +615,12 @@ def anaphora_links(
     conversation costs O(pronoun_turns * lookback-window density), not
     O(turns^2); one window (keyed on the pronoun turn) picks the top-1.
     """
+    import re
+
     bw = int(lookback) + 1
-    pat = "(^| )(" + "|".join(pronouns) + ")( |$)"
+    # pronouns are literal tokens: escape them so '.' or '|' in a user
+    # pronoun cannot widen the match (re.escape output is valid Java regex)
+    pat = "(^| )(" + "|".join(map(re.escape, pronouns)) + ")( |$)"
     p = transcripts.filter(F.lower(F.col("text")).rlike(pat)).select(
         "conv_id",
         F.col("turn_idx").alias("t"),

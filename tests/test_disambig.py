@@ -100,6 +100,24 @@ def test_mayla_freq_scope_truth_table(spark):
     )
     assert mayla_filter(m2, transcripts, dictionary, concept_freq=99,
                         freq_scope="conversation").count() == 1
+    # per-ontology threshold map in conversation scope: PR's 3 >= 3 keeps,
+    # an unmapped ontology falls back to default_freq (4 > 3 drops)
+    assert mayla_filter(mentions, transcripts, dictionary,
+                        concept_freq={"PR": 3},
+                        freq_scope="conversation").count() == 1
+    assert mayla_filter(mentions, transcripts, dictionary,
+                        concept_freq={"GO": 1}, default_freq=4,
+                        freq_scope="conversation").count() == 0
+    # a gold-annotator row passes an unreachable conversation threshold
+    gold = spark.createDataFrame(
+        [("c1", 0, "PR", "PR_9", 4, 9, "motif", None, "99099099"),
+         ("c1", 1, "PR", "PR_9", 5, 10, "motif", None, "7")],
+        M_SCHEMA + ", annotator string",
+    )
+    kept = mayla_filter(gold, transcripts, dictionary, concept_freq=99,
+                        annotator_col="annotator",
+                        freq_scope="conversation")
+    assert [r.annotator for r in kept.collect()] == ["99099099"]
     with pytest.raises(ValueError):
         mayla_filter(mentions, transcripts, dictionary, concept_freq=2,
                      freq_scope="document")

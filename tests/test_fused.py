@@ -265,17 +265,6 @@ def test_fused_split_exact_tf_matches_unsplit(spark):
                and r[1] == "http://purl.org/kgpipe/denotes"}
     assert amb_obj == {"http://purl.obolibrary.org/obo/SYN_0000002"}
 
-    # the block-local opt-out still exists — and on this corpus it makes
-    # the documented approximation visible (tf tie in block 0 → min id)
-    block_local = {tuple(r) for r in
-                   fused_conv_triples(tdf, ddf, max_turns_per_group=5,
-                                      exact_conv_scores=False, **kw)
-                   .select(*cols).collect()}
-    bl_obj = {r[2] for r in block_local
-              if r[3] == "amb0" and r[4] == 2
-              and r[1] == "http://purl.org/kgpipe/denotes"}
-    assert bl_obj == {"http://purl.obolibrary.org/obo/SYN_0000001"}
-
 
 def test_fused_split_exact_mayla_conv_scope_matches_unsplit(spark):
     """Conversation-scope Mayla frequency under block splitting: the
@@ -353,6 +342,126 @@ def test_fused_exact_plan_quarantines_per_turn(spark, tmp_path):
     got = spark.read.parquet(out).select(*cols)
     assert got.exceptAll(clean).count() == 0
     assert clean.exceptAll(got).count() == 0
+
+
+def test_fused_exact_plan_lineage_long_conversation(spark, tmp_path):
+    """Side-table plan under lineage (a conversation longer than
+    max_turns_per_group): failing detect quarantines into ERROR buckets,
+    the retry completes them, and the result equals the plain scan's."""
+    from kgpipe.lineage import COMPLETE
+    from kgpipe.normalize import MatchConfig
+    from kgpipe.pipeline import PipelineConfig, run_pipeline
+    from pyspark.sql import functions as F
+
+    rows, _ = generate_transcripts(n_convs=10, seed=9)
+    tdf = spark.createDataFrame(
+        [(r["conv_id"], r["turn_idx"], r["role"], r["text"], r["tool"], r["ts"])
+         for r in rows]
+        + [("long", t, "user", "a neuron near a fibroblast", None, None)
+           for t in range(12)],
+        T_SCHEMA,
+    )
+    bogus = MatchConfig(
+        search_strategy="BOGUS", case_match="CASE_INSENSITIVE",
+        stemmer="NONE", stopwords="NONE", order_independent=False,
+        find_all_matches=False, synonym_type="ALL",
+    )
+    kw = dict(obo_paths={"CL": MINI_OBO}, fused=True, n_buckets=4)
+    out = str(tmp_path / "triples")
+    lin = str(tmp_path / "lineage")
+    errs = run_pipeline(spark, tdf, PipelineConfig(
+        max_turns_per_group=5, detect_configs={"CL": bogus}, **kw),
+        out, lineage_path=lin)
+    assert {r.status for r in errs.collect()} == {"ERROR"}
+    rows2 = run_pipeline(spark, tdf, PipelineConfig(max_turns_per_group=5,
+                                                    **kw),
+                         out, lineage_path=lin)
+    latest = (rows2.groupBy("partition_id")
+              .agg(F.max_by("status", "run_date").alias("status")))
+    assert {r.status for r in latest.collect()} == {COMPLETE}
+
+    out_scan = str(tmp_path / "scan")
+    run_pipeline(spark, tdf, PipelineConfig(**kw), out_scan)
+    cols = ["subj", "pred", "obj", "conv_id", "turn_idx", "evidence"]
+    scan = spark.read.parquet(out_scan).select(*cols)
+    got = spark.read.parquet(out).select(*cols)
+    assert got.exceptAll(scan).count() == 0
+    assert scan.exceptAll(got).count() == 0
+
+
+def test_fused_split_without_lineage_fails_on_detect_error(spark):
+    """Without quarantine (no lineage), a failing detect must fail the job
+    in split mode exactly as it does in the unsplit scan — never silently
+    drop the failed turns."""
+    import pytest
+    from kgpipe.normalize import MatchConfig
+
+    tdf = spark.createDataFrame(
+        [("c1", t, "user", "a neuron appears", None, None)
+         for t in range(7)], T_SCHEMA)
+    bogus = MatchConfig(
+        search_strategy="BOGUS", case_match="CASE_INSENSITIVE",
+        stemmer="NONE", stopwords="NONE", order_independent=False,
+        find_all_matches=False, synonym_type="ALL",
+    )
+    ddf = build_dictionary_df(spark, {"CL": MINI_OBO}, {"CL": bogus})
+    for split in (None, 5):
+        with pytest.raises(Exception, match="BOGUS"):
+            fused_conv_triples(tdf, ddf, configs={"CL": bogus},
+                               max_turns_per_group=split).collect()
+
+
+def test_fused_split_plan_only_for_long_conversations(spark):
+    """max_turns_per_group routes to the side-table plan only when some
+    conversation has more turns than the guard; the quarantine granularity
+    shows which plan ran (per turn there, per conversation in the scan)."""
+    from kgpipe.fused import ERROR_PRED
+    from kgpipe.normalize import MatchConfig
+
+    tdf = spark.createDataFrame(
+        [("c1", t, "user", "a neuron appears", None, None)
+         for t in range(7)], T_SCHEMA)
+    bogus = MatchConfig(
+        search_strategy="BOGUS", case_match="CASE_INSENSITIVE",
+        stemmer="NONE", stopwords="NONE", order_independent=False,
+        find_all_matches=False, synonym_type="ALL",
+    )
+    ddf = build_dictionary_df(spark, {"CL": MINI_OBO}, {"CL": bogus})
+    for split, n_errors in ((5, 7), (6, 7), (7, 1), (None, 1)):
+        out = fused_conv_triples(tdf, ddf, configs={"CL": bogus},
+                                 max_turns_per_group=split,
+                                 quarantine_errors=True)
+        assert out.filter(out.pred == ERROR_PRED).count() == n_errors, split
+
+
+def test_fused_side_table_plan_mayla_high_offsets(spark):
+    """With a conversation longer than the guard (so the side-table plan
+    runs), turn-scope Mayla in every threshold mode and turn indexes far
+    from 0 give the scan's output."""
+    texts = ["a Neuron appears near a fibroblast",
+             "the neuron and the neuron again",
+             "NEURON SHOUTS at an interneurone",
+             "fibroblast then Fibroblast follow"]
+    tdf = spark.createDataFrame(
+        [("c9", 100 + t, "user", texts[t % 4], None, None) for t in range(8)]
+        + [("m2", 0, "user", "nerve cell appears once", None, None)],
+        T_SCHEMA,
+    )
+    ddf = build_dictionary_df(spark, {"CL": MINI_OBO})
+    cols = ["subj", "pred", "obj", "conv_id", "turn_idx", "evidence"]
+    for mayla, freq in ((False, None), (True, None), (True, 2),
+                        (True, {"CL": 2})):
+        kw = dict(cooc_window=3, disambiguate=False, mayla=mayla,
+                  mayla_concept_freq=freq)
+        scan = {tuple(r) for r in
+                fused_conv_triples(tdf, ddf, **kw).select(*cols).collect()}
+        split = {tuple(r) for r in
+                 fused_conv_triples(tdf, ddf, max_turns_per_group=5, **kw)
+                 .select(*cols).collect()}
+        assert split == scan, (mayla, freq, sorted(scan - split)[:3],
+                               sorted(split - scan)[:3])
+    rdf_type = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+    assert any(r[1] == rdf_type and r[3] == "c9" for r in split)
 
 
 def test_fused_block_split_requires_window_fit(spark):

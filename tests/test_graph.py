@@ -396,6 +396,22 @@ def test_hits(spark, triples):
         assert abs(a[e] - av[idx[e]]) < 1e-9
 
 
+def test_hits_rejects_zero_iters(spark, triples):
+    from kgpipe.graph import hits
+
+    with pytest.raises(ValueError, match="iters"):
+        hits(triples, iters=0)
+
+
+def test_hits_empty_edge_set(spark):
+    from kgpipe.graph import hits
+
+    empty = spark.createDataFrame([], "subj string, pred string, obj string")
+    out = hits(empty, iters=3)
+    assert out.columns == ["entity", "hub", "authority"]
+    assert out.count() == 0
+
+
 def test_reciprocity(spark):
     from kgpipe.graph import reciprocity
 

@@ -26,7 +26,8 @@ def test_observe_counts_on_detect(spark):
     got = obs.get
     assert got["n_rows"] == n
     assert got["n_errors"] == 0
-    assert 0 < got["n_turns"] <= n
+    assert "n_turns" not in got  # the distinct count is approximate
+    assert 0 < got["n_turns_approx"] <= n
 
 
 def test_observe_counts_no_optional_columns(spark):

@@ -326,6 +326,28 @@ def test_anaphora_links(spark):
     assert len(got) == 2
 
 
+def test_anaphora_links_escapes_pronouns(spark):
+    """User pronouns are literal tokens: '.' must not match any char and
+    '|' must not split the pronoun into alternatives."""
+    from kgpipe.triples import anaphora_links
+
+    t = spark.createDataFrame(
+        [("c1", 0, "u", "spark is here", None, None),
+         ("c1", 1, "a", "see it. now", None, None),   # literal match
+         ("c1", 2, "u", "see itx now", None, None),   # '.' as wildcard
+         ("c1", 3, "a", "see a now", None, None)],    # 'a|b' alternation
+        "conv_id string, turn_idx int, role string, text string,"
+        " tool string, ts timestamp")
+    m = spark.createDataFrame(
+        [("c1", 0, "T:0001", 0, 5, "spark")],
+        ["conv_id", "turn_idx", "concept_id", "begin", "end",
+         "covered_text"])
+    got = {r["turn_idx"] for r in
+           anaphora_links(m, t, lookback=3, pronouns=("it.", "a|b"))
+           .collect()}
+    assert got == {1}
+
+
 def test_entity_profile(spark):
     from kgpipe.triples import entity_profile
     import pytest as _pt
