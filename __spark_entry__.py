@@ -3987,7 +3987,9 @@ WHERE pred IN ('http://purl.org/kgpipe/hasRole',
 GROUP BY subj""",
         # conversation-level exact dedup with planted '-dup' replays
         # (kgpipe.convops.conversation_fingerprints: md5 over turns in
-        # (turn_idx, text) order, keep = lexicographically first conv)
+        # (turn_idx, text) order, each length-prefixed as
+        # turn_idx:length(text):text with -1 for a NULL text; keep =
+        # lexicographically first conv)
         "conv_dedup": f"""
 WITH {_SQL_TRANSCRIPTS.lstrip()},
 cd_all AS (
@@ -3996,8 +3998,10 @@ cd_all AS (
   SELECT conv_id || '-dup', turn_idx, text FROM transcripts),
 cd_hash AS (
   SELECT conv_id,
-         md5(string_agg(turn_idx::varchar || ':' || text, '|'
-                        ORDER BY turn_idx, text)) AS conv_hash
+         md5(string_agg(turn_idx::varchar || ':'
+                        || coalesce(length(text), -1)::varchar || ':'
+                        || coalesce(text, ''), ''
+                        ORDER BY turn_idx, text NULLS FIRST)) AS conv_hash
   FROM cd_all GROUP BY conv_id)
 SELECT conv_id, conv_hash,
        conv_id = min(conv_id) OVER (PARTITION BY conv_hash) AS keep

@@ -242,26 +242,32 @@ def qa_pairs(transcripts: DataFrame, max_gap: int = 3) -> DataFrame:
     edge a transcript KG wants alongside isPartOf/hasRole: who answered
     whom (unanswered questions simply emit no row).
 
-    One conv_id-keyed equi-join with the candidate side bounded to
-    ``max_gap`` rows per question by the range filter, then a
-    row_number window picking the earliest answer — per-conversation
-    cost is O(turns * max_gap), never quadratic in conversation length.
+    **Banded join** (the ``cooccurrence_pairs`` pattern): both sides
+    key on (conv_id, turn bucket of width ``max_gap + 1``) and each
+    question is replicated to its own bucket and the next one, so every
+    candidate answer turn meets its question on exactly one key; then a
+    row_number window picks the earliest answer.  A conversation costs
+    O(turns * max_gap), never quadratic in its length.
     """
+    width = max(int(max_gap), 0) + 1
+    bucket = F.floor(F.col("turn_idx") / width)
     is_q = F.trim(F.col("text")).endswith("?")
     q = transcripts.filter(is_q).select(
         "conv_id",
         F.col("turn_idx").alias("q_turn"),
         F.col("role").alias("q_role"),
+        F.explode(F.array(bucket, bucket + 1)).alias("_bkt"),
     )
     a = transcripts.select(
         "conv_id",
         F.col("turn_idx").alias("a_turn"),
         F.col("role").alias("a_role"),
+        bucket.alias("_bkt"),
     )
     w = Window.partitionBy("conv_id", "q_turn", "q_role").orderBy(
         F.asc("a_turn"), F.asc("a_role"))
     return (
-        q.join(a, "conv_id")
+        q.join(a, ["conv_id", "_bkt"])
         .filter(
             (F.col("a_turn") > F.col("q_turn"))
             & (F.col("a_turn") <= F.col("q_turn") + int(max_gap))
@@ -275,8 +281,10 @@ def qa_pairs(transcripts: DataFrame, max_gap: int = 3) -> DataFrame:
 
 def conversation_fingerprints(transcripts: DataFrame) -> DataFrame:
     """Conversation-level exact dedup: ``(conv_id, conv_hash, keep)``
-    where ``conv_hash`` is the md5 of the conversation's turns joined
-    in (turn_idx, text) order and ``keep`` marks the lexicographically
+    where ``conv_hash`` is the md5 of the conversation's turns in
+    (turn_idx, text) order, each encoded as
+    ``<turn_idx>:<length(text)>:<text>`` (length -1 and empty text for a
+    NULL text), and ``keep`` marks the lexicographically
     first conv_id per hash — replayed / re-run conversations (the
     agent-log analogue of document exact-dedup, which catches
     per-TURN duplicates but not whole replays) collapse to one keeper.
@@ -285,7 +293,9 @@ def conversation_fingerprints(transcripts: DataFrame) -> DataFrame:
     text) structs, so the hash is order-canonical regardless of input
     row order) + one hash-keyed min window over the per-conversation
     digest table — the second exchange carries one row per
-    conversation, never raw text.
+    conversation, never raw text.  The length prefix makes the encoding
+    injective: text containing ``:`` or ``|`` cannot make two different
+    conversations encode alike.
     """
     digest = (
         transcripts
@@ -294,11 +304,14 @@ def conversation_fingerprints(transcripts: DataFrame) -> DataFrame:
             F.struct("turn_idx", "text"))).alias("_turns"))
         .select(
             "conv_id",
-            F.md5(F.concat_ws("|", F.transform(
+            F.md5(F.array_join(F.transform(
                 "_turns",
-                lambda t: F.concat_ws(
-                    ":", t["turn_idx"].cast("string"), t["text"]),
-            ))).alias("conv_hash"),
+                lambda t: F.concat(
+                    t["turn_idx"].cast("string"), F.lit(":"),
+                    F.coalesce(F.length(t["text"]), F.lit(-1))
+                    .cast("string"), F.lit(":"),
+                    F.coalesce(t["text"], F.lit(""))),
+            ), "")).alias("conv_hash"),
         )
     )
     w = Window.partitionBy("conv_hash")

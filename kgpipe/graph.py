@@ -635,7 +635,11 @@ def link_features(
     the cap.  The recall cost is only pairs whose EVERY shared
     neighbor is a mega-hub — the least informative common-neighbor
     evidence (Adamic-Adar downweights exactly these).  Opt out with
-    ``None``.
+    ``None``.  The cap also biases the pairs that survive it: ``n_common``
+    counts only their capped centers while ``deg_a`` / ``deg_b`` are full
+    degrees, so ``n_common`` is undercounted, ``n_union`` overcounted,
+    and Jaccard (``n_common / n_union``) biased low for every pair with
+    at least one dropped shared neighbor.
     """
     und = _und_edges(triples)
     deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("d"))

@@ -1,5 +1,5 @@
 """Text normalization: offset-preserving tokenization, case/digit folding,
-Porter stemming, stopword handling.
+Porter stemming, stopword handling, and the per-token memo that caches them.
 
 Re-expresses the normalization knobs of the reference ConceptMapper pipeline
 (knob vocabulary: ``ConceptMapperEvalOutputCompiler.java:83-100`` — CaseMatch,
@@ -8,12 +8,21 @@ SynonymType) and the Penn-Treebank-style tokenizer the reference ships
 (``PennTreebankTokenizer.java:28-60``).  Everything here is pure Python — it
 runs inside Arrow-batched pandas UDFs on executors and driver-side during
 dictionary builds, so it must be dependency-free and fast.
+
+Per-token work (stopword check, case folding, Porter stemming) is memoised
+per process: ``token_memo(config)`` maps a raw token to its normalized form,
+or to None for a stopword.  Text side (``DictionaryTrie.scan_text``) and
+dictionary side (``normalize_variant``) both read it, so a token is
+normalized once per process and knob setting, not once per occurrence.  Each
+memo holds at most ``TOKEN_MEMO_MAX`` entries and is cleared when it reaches
+that bound; the bound is a fixed constant, not a knob.
 """
 
 from __future__ import annotations
 
 import re
 from dataclasses import dataclass
+from typing import Optional
 
 # ---------------------------------------------------------------------------
 # Tokenizer
@@ -434,6 +443,67 @@ class MatchConfig:
 
     def is_stopword(self, tok: str) -> bool:
         return self.stopwords == STOP_PUBMED and tok.lower() in PUBMED_STOPWORDS
+
+
+# ---------------------------------------------------------------------------
+# Per-token memo
+# ---------------------------------------------------------------------------
+
+# Entries per memo before it is cleared.  A full memo of 4-11 letter tokens
+# (keys, normal forms and the table) takes about 10 MB, and the working
+# vocabulary of a Zipfian corpus (~16k distinct raw tokens in 141k) fits.
+TOKEN_MEMO_MAX = 1 << 16
+
+
+class _TokenMemo(dict):
+    """Raw token -> ``normalize_token`` result, or None for a stopword,
+    under one knob setting.  A miss computes the decision and stores it;
+    a miss on a full memo clears it first.  Every stored value is a pure
+    function of its key, so threads sharing a memo can at worst clear it
+    twice or overshoot the bound by a few entries, never read a wrong
+    decision."""
+
+    __slots__ = ("config",)
+
+    def __init__(self, config: MatchConfig):
+        super().__init__()
+        self.config = config
+
+    def __missing__(self, tok: str) -> Optional[str]:
+        cfg = self.config
+        norm = None if cfg.is_stopword(tok) else cfg.normalize_token(tok)
+        if len(self) >= TOKEN_MEMO_MAX:
+            self.clear()
+        self[tok] = norm
+        return norm
+
+
+# one memo per (case_match, stemmer, stopwords) — the only knobs that
+# normalize_token and is_stopword read — so configs that differ only in
+# search strategy, lookup order or synonym type (most of the 576-point
+# grid) share a memo
+_TOKEN_MEMOS: dict[tuple[str, str, str], _TokenMemo] = {}
+
+
+def token_memo(config: MatchConfig) -> dict[str, Optional[str]]:
+    """This process's memo for *config*: ``memo[tok]`` is None when *tok*
+    is a stopword under *config*, else ``config.normalize_token(tok)``."""
+    key = (config.case_match, config.stemmer, config.stopwords)
+    memo = _TOKEN_MEMOS.get(key)
+    if memo is None:
+        memo = _TOKEN_MEMOS[key] = _TokenMemo(config)
+    return memo
+
+
+def normalize_variant(config: MatchConfig, text: str) -> str:
+    """Dictionary-side normalization of a variant string: the scan's
+    tokenizer and memoised per-token decision, non-stopword normal forms
+    joined by single spaces (the trie's ``variant_norm`` key)."""
+    memo = token_memo(config)
+    return " ".join(
+        norm for norm in map(memo.__getitem__, _TOKEN_RE.findall(text))
+        if norm is not None
+    )
 
 
 # Per-ontology optimized configurations. The reference pins per-ontology

@@ -18,7 +18,7 @@ import re
 from dataclasses import dataclass, field
 from typing import Callable, Iterable, Optional
 
-from .normalize import MatchConfig, SYN_EXACT_ONLY
+from .normalize import MatchConfig, SYN_EXACT_ONLY, normalize_variant
 
 OBO_URI_PREFIX = "http://purl.obolibrary.org/obo/"
 
@@ -266,11 +266,7 @@ def dictionary_rows(
                     "canonical": t.name,
                     "variant": text,
                     "is_official": scope == "EXACT",
-                    "variant_norm": " ".join(
-                        config.normalize_token(tok)
-                        for tok in re.findall(r"[A-Za-z0-9]+", text)
-                        if not config.is_stopword(tok)
-                    ),
+                    "variant_norm": normalize_variant(config, text),
                 }
             )
     return rows

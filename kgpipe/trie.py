@@ -19,7 +19,16 @@ Search semantics reproduce the SearchStrategy knob
 
 OrderIndependentLookup:ON (used by the PR=478 / NCBI_TAXON=535 optimized
 settings) is a sorted-token-key index: multi-token variants additionally
-indexed under the sorted token sequence.
+indexed under the sorted token sequence.  Such a trie also keeps the set of
+its tokens, and the sorted-window lookup is skipped at a start token that
+is not in it (every window from that start contains the token, so none can
+match).
+
+Per-token normalization goes through the per-process memo of
+``kgpipe.normalize.token_memo``: each distinct raw token is stopword-checked,
+case-folded and stemmed once per process and knob setting, not once per
+occurrence per trie.  The memo holds at most ``normalize.TOKEN_MEMO_MAX``
+entries per knob setting and is cleared when it reaches that bound.
 """
 
 from __future__ import annotations
@@ -32,6 +41,7 @@ from .normalize import (
     SEARCH_SKIP_ANY,
     SEARCH_SKIP_ANY_OVERLAP,
     chunk_spans,
+    token_memo,
     tokenize_with_offsets,
 )
 
@@ -58,12 +68,15 @@ class DictionaryTrie:
     disambiguation stage and union-find canonicalization).
     """
 
-    __slots__ = ("root", "config", "max_len")
+    __slots__ = ("root", "config", "max_len", "vocab")
 
     def __init__(self, config: MatchConfig):
         self.root: dict = {}
         self.config = config
         self.max_len = 0
+        # every token of every inserted key; filled only for
+        # OrderIndependentLookup, whose sorted-window scan it prunes
+        self.vocab: set[str] = set()
 
     def add(self, variant_norm: str, ontology: str, concept_id: str) -> None:
         toks = variant_norm.split()
@@ -76,6 +89,8 @@ class DictionaryTrie:
                 self._insert(s, ontology, concept_id)
 
     def _insert(self, toks: list[str], ontology: str, concept_id: str) -> None:
+        if self.config.order_independent:
+            self.vocab.update(toks)
         node = self.root
         for t in toks:
             node = node.setdefault(t, {})
@@ -108,9 +123,17 @@ class DictionaryTrie:
         multi-ontology scan (the production shape: CHEBI+GO+PR+CL+TAXON
         tries over the same turn) tokenizes each turn once instead of once
         per trie; per-config stopword filtering and normalization still
-        happen here."""
+        happen here.
+
+        Stopword filtering and normalization are read from the
+        per-process ``token_memo(config)`` (raw token -> normal form, None
+        for a stopword), fetched once per call; a token is normalized only
+        on its first occurrence in the process, or after the memo reached
+        its fixed bound (``normalize.TOKEN_MEMO_MAX`` entries) and was
+        cleared."""
         out: list[tuple[str, str, int, int, str]] = []
         cfg = self.config
+        memo = token_memo(cfg)
         if pretok is None:
             pretok = pretokenize(text)
         for cb, ce, raw in pretok:
@@ -118,9 +141,10 @@ class DictionaryTrie:
             begins: list[int] = []
             ends: list[int] = []
             for tok, b, e in raw:
-                if cfg.is_stopword(tok):
+                norm = memo[tok]
+                if norm is None:
                     continue
-                toks.append(cfg.normalize_token(tok))
+                toks.append(norm)
                 begins.append(cb + b)
                 ends.append(cb + e)
             if not toks:
@@ -150,6 +174,7 @@ class DictionaryTrie:
         n = len(toks)
         find_all = self.config.find_all_matches
         order_ind = self.config.order_independent
+        vocab = self.vocab
         emitted: set = set()  # find_all: in-order + sorted-window can
         # surface the same (concept, span) twice; emit once
 
@@ -177,9 +202,13 @@ class DictionaryTrie:
                         for ont, cid in payload:
                             emit_once(ont, cid, begins[i], ends[j])
                 j += 1
-            if order_ind:
-                # permuted multi-token windows, longest wins over in-order
+            if order_ind and toks[i] in vocab:
+                # permuted multi-token windows, longest wins over in-order;
+                # a window holding a token outside the trie cannot match,
+                # nor can any longer window from the same start
                 for length in range(2, min(self.max_len, n - i) + 1):
+                    if toks[i + length - 1] not in vocab:
+                        break
                     payload = self._lookup_sorted_window(toks, i, length)
                     if payload is None:
                         continue
@@ -187,7 +216,9 @@ class DictionaryTrie:
                     if find_all:
                         for ont, cid in payload:
                             emit_once(ont, cid, begins[i], ends[j])
-                    if j > best_j:
+                    # at a tie the sorted key's payload wins: it holds every
+                    # concept of the in-order one, plus the permuted variants
+                    if j >= best_j:
                         best_j = j
                         best_payload = payload
             if best_j >= 0:

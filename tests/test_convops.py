@@ -218,6 +218,55 @@ def test_conversation_fingerprints(spark):
     assert got["c2"]["keep"]
 
 
+def test_conversation_fingerprints_delimiters_in_text(spark):
+    """Turn text holding the encoding's delimiters cannot make two
+    different conversations hash alike: ca's single turn "a|1:b" against
+    cb's turns "a" and "b" (equal under a plain ':'/'|' join)."""
+    from kgpipe.convops import conversation_fingerprints
+
+    rows = [
+        ("ca", 0, "u", "a|1:b", None, None),
+        ("cb", 0, "u", "a", None, None),
+        ("cb", 1, "u", "b", None, None),
+        # NULL text and empty text are different turns
+        ("cn", 0, "u", None, None, None),
+        ("ce", 0, "u", "", None, None),
+    ]
+    t = spark.createDataFrame(
+        rows,
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp")
+    got = {r["conv_id"]: r for r in
+           conversation_fingerprints(t).collect()}
+    assert len({r["conv_hash"] for r in got.values()}) == 4
+    assert all(r["keep"] for r in got.values())
+
+
+def test_qa_pairs_across_buckets(spark):
+    """The banded join finds every answer a conv_id-only join finds,
+    whatever bucket boundary lies between question and answer (negative
+    turn indices included)."""
+    from kgpipe.convops import qa_pairs
+
+    roles = ["user", "user", "assistant", "tool", "user", "assistant"]
+    rows = [("c", i, roles[(i * 7) % 6], "q?" if i % 3 else "a", None, None)
+            for i in range(-9, 30)]
+    t = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp")
+    for max_gap in (1, 2, 3, 5):
+        want = set()
+        for _, qi, qr, text, _, _ in rows:
+            if not text.endswith("?"):
+                continue
+            ans = [(ai, ar) for _, ai, ar, _, _, _ in rows
+                   if qi < ai <= qi + max_gap and ar != qr]
+            if ans:
+                want.add(("c", qi, qr) + min(ans))
+        got = {tuple(r) for r in qa_pairs(t, max_gap=max_gap).collect()}
+        assert got == want, max_gap
+
+
 def test_response_latency(spark):
     import datetime as dt
 

@@ -1,3 +1,7 @@
+from dataclasses import replace
+from itertools import product
+
+from kgpipe import normalize
 from kgpipe.normalize import (
     MatchConfig,
     chunk_spans,
@@ -162,3 +166,105 @@ def test_ptb_tokenize_offsets_property():
             last = e
 
     check()
+
+
+# ---------------------------------------------------------------------------
+# per-token memo
+# ---------------------------------------------------------------------------
+
+_MEMO_TOKENS = [
+    # acronyms and mixed case
+    "RB", "DNA", "TNF", "Rb", "Cell", "cells", "Neurons", "X",
+    # digit tokens
+    "123", "p53", "IL6", "Il6", "2B",
+    # irregular lemma forms
+    "mice", "Mice", "ran", "children", "bacteria", "analyses", "were",
+    # PubMed stopwords in several cases
+    "the", "The", "THE", "of", "Of", "and", "shown", "using",
+]
+
+
+def _all_norm_configs():
+    cases = [normalize.CASE_SENSITIVE, normalize.CASE_INSENSITIVE,
+             normalize.CASE_IGNORE, normalize.CASE_FOLD_DIGITS]
+    stems = [normalize.STEM_NONE, normalize.STEM_PORTER,
+             normalize.STEM_BIOLEMMATIZER]
+    stops = [normalize.STOP_NONE, normalize.STOP_PUBMED]
+    return [MatchConfig(case_match=c, stemmer=s, stopwords=w)
+            for c, s, w in product(cases, stems, stops)]
+
+
+def test_token_memo_equals_direct_decision():
+    normalize._TOKEN_MEMOS.clear()
+    for cfg in _all_norm_configs():
+        memo = normalize.token_memo(cfg)
+        for _ in range(2):  # first a miss, then a hit
+            for tok in _MEMO_TOKENS:
+                want = (None if cfg.is_stopword(tok)
+                        else cfg.normalize_token(tok))
+                assert memo[tok] == want, (cfg, tok)
+
+
+def _isolation_case():
+    from kgpipe.obo import Term
+
+    terms = [
+        Term(id="CL:1", name="neuron"),
+        Term(id="CL:2", name="cell of retina"),
+        Term(id="CL:3", name="RB protein"),
+    ]
+    text = ("Neurons and neurons. The cells in the retina bind RB proteins;"
+            " Rb protein too")
+    return terms, text
+
+
+def _scan(cfg, terms, text):
+    from kgpipe.obo import dictionary_rows
+    from kgpipe.trie import DictionaryTrie
+
+    trie = DictionaryTrie.from_rows(dictionary_rows(terms, "CL", cfg), cfg)
+    return trie, sorted(trie.scan_text(text))
+
+
+def test_token_memo_config_isolation():
+    """Configs that differ only in one normalization knob, scanned
+    alternately over one text, each give what they give alone on an empty
+    memo."""
+    terms, text = _isolation_case()
+    base = MatchConfig(stopwords=normalize.STOP_PUBMED)
+    for knob, other in [("case_match", normalize.CASE_SENSITIVE),
+                        ("stemmer", normalize.STEM_NONE),
+                        ("stopwords", normalize.STOP_NONE)]:
+        cfgs = [base, replace(base, **{knob: other})]
+        alone = []
+        for cfg in cfgs:
+            normalize._TOKEN_MEMOS.clear()
+            alone.append(_scan(cfg, terms, text)[1])
+        assert alone[0] != alone[1], knob  # the knob matters on this text
+        normalize._TOKEN_MEMOS.clear()
+        tries = [_scan(cfg, terms, text)[0] for cfg in cfgs]
+        for _ in range(3):
+            for trie, want in zip(tries, alone):
+                assert sorted(trie.scan_text(text)) == want, knob
+
+
+def test_token_memo_bound(monkeypatch):
+    """More distinct tokens than the bound: every memo stays within it and
+    the mentions do not change."""
+    from kgpipe.trie import DictionaryTrie
+
+    cfg = MatchConfig(stopwords=normalize.STOP_PUBMED)
+    words = [f"w{i}cells" for i in range(300)]
+    text = " ".join(f"The {w} of {w.upper()}." for w in words)
+    trie = DictionaryTrie(cfg)
+    for i, w in enumerate(words[::7]):
+        trie.add(normalize.normalize_variant(cfg, w), "T", f"T:{i}")
+    normalize._TOKEN_MEMOS.clear()
+    want = trie.scan_text(text)
+    assert len(want) == len(words[::7])
+    monkeypatch.setattr(normalize, "TOKEN_MEMO_MAX", 32)
+    normalize._TOKEN_MEMOS.clear()
+    for _ in range(2):
+        assert trie.scan_text(text) == want
+        assert all(len(m) <= 32 for m in normalize._TOKEN_MEMOS.values())
+    assert normalize._TOKEN_MEMOS

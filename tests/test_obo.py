@@ -127,3 +127,49 @@ def test_owl_dictionary_detects_like_obo(spark):
            for r in detect_mentions(tdf, d).collect()}
     assert ("CL:0000540", "neuron") in got
     assert ("CL:0000540", "nerve cell") in got
+
+
+def _direct_rows(terms, ontology, config):
+    """dictionary_rows with the per-token normalization spelled out (no
+    memo, its own tokenizer): the reference the shared normalizer must
+    reproduce."""
+    import re
+
+    rows = dictionary_rows(terms, ontology, config)
+    for r in rows:
+        r["variant_norm"] = " ".join(
+            config.normalize_token(tok)
+            for tok in re.findall(r"[A-Za-z0-9]+", r["variant"])
+            if not config.is_stopword(tok))
+    return rows
+
+
+def test_dictionary_rows_shared_normalizer_unchanged():
+    """variant_norm from the memoised normalizer equals the direct
+    per-token normalization, on the mini fixture and on the benchmark
+    generator's CL / GO_MF / PR ontologies, under every per-ontology
+    config."""
+    import importlib.util
+    import os
+    import sys
+
+    from kgpipe import normalize
+
+    spec = importlib.util.spec_from_file_location("perfbench_gen", os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "perfbench", "gen.py"))
+    gen = importlib.util.module_from_spec(spec)
+    sys.modules[spec.name] = gen  # dataclasses resolve their module
+    spec.loader.exec_module(gen)
+
+    cases = [("CL", parse_obo(MINI_OBO))]
+    for seed in (1, 2):
+        cases += [(name, parse_obo(o.obo, from_text=True))
+                  for name, o in gen.make_ontologies(seed).items()]
+    configs = set(normalize.ONTOLOGY_CONFIGS.values())
+    for ontology, terms in cases:
+        for cfg in configs:
+            normalize._TOKEN_MEMOS.clear()
+            got = dictionary_rows(terms, ontology, cfg)
+            assert got == _direct_rows(terms, ontology, cfg)
+            assert got  # the comparison is not vacuous

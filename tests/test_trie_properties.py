@@ -167,3 +167,69 @@ def test_skip_any_spans_match_spec_oracle(d, text):
     for (b, e, cid), (eb, ee, cands) in zip(got, expected):
         assert (b, e) == (eb, ee)
         assert cid in cands
+
+
+def naive_order_independent(text: str, variants: dict[str, str],
+                            find_all: bool):
+    """Spec oracle for OrderIndependentLookup over CONTIGUOUS windows: a
+    window matches a variant when its tokens equal the variant's in order
+    or, for multi-token variants, as sorted sequences.  Longest-only takes,
+    at each start, the longest matching window and every concept matching
+    it, then continues after it; find-all emits every matching (concept,
+    window) and advances one token.  Shares only the tokenizer."""
+    toks = tokenize_with_offsets(text)
+    words = [t for t, _, _ in toks]
+
+    def concepts(i, j):
+        window = words[i:j + 1]
+        return {
+            cid for v, cid in variants.items()
+            if v.split() == window
+            or (len(window) > 1 and sorted(v.split()) == sorted(window))
+        }
+
+    out = set()
+    i = 0
+    while i < len(words):
+        hits = {j: cids for j in range(i, len(words))
+                if (cids := concepts(i, j))}
+        if find_all:
+            for j, cids in hits.items():
+                out |= {(cid, toks[i][1], toks[j][2]) for cid in cids}
+            i += 1
+        elif hits:
+            j = max(hits)
+            out |= {(cid, toks[i][1], toks[j][2]) for cid in hits[j]}
+            i = j + 1
+        else:
+            i += 1
+    return out
+
+
+@settings(max_examples=300, deadline=None)
+@given(d=dict_st,
+       text=st.lists(st.sampled_from(TOKENS + ["oov", "zeta"]), min_size=0,
+                     max_size=25).map(" ".join),
+       find_all=st.booleans(), data=st.data())
+def test_order_independent_equals_spec_oracle(d, text, find_all, data):
+    """Random dictionaries over TOKENS, some holding permutations of each
+    other under other concepts; texts that also hold tokens outside the
+    dictionary (the scan's vocabulary prune skips sorted windows that
+    contain one); longest-only and find-all."""
+    cfg = MatchConfig(
+        search_strategy="CONTIGUOUS_MATCH", case_match="CASE_SENSITIVE",
+        stemmer="NONE", stopwords="NONE", order_independent=True,
+        find_all_matches=find_all, synonym_type="ALL",
+    )
+    variants = {v: f"C:{i:04d}" for v, i in d.items()}
+    for k, v in enumerate(data.draw(st.lists(st.sampled_from(sorted(d)),
+                                             max_size=3))):
+        perm = " ".join(data.draw(st.permutations(v.split())))
+        variants.setdefault(perm, f"P:{k:04d}")
+    trie = DictionaryTrie(cfg)
+    for v, cid in variants.items():
+        trie.add(v, "T", cid)
+    got = [(cid, b, e) for _, cid, b, e, _ in trie.scan_text(text)]
+    if find_all:
+        assert len(got) == len(set(got))
+    assert set(got) == naive_order_independent(text, variants, find_all)
