@@ -18,7 +18,15 @@ dependency.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
+
+from .session import local_frame
+
+#: a component map as a frame: concept id → its component representative
+COMPONENTS = T.StructType([
+    T.StructField("concept_id", T.StringType(), True),
+    T.StructField("component", T.StringType(), True),
+])
 
 
 def connected_components(
@@ -150,17 +158,20 @@ def components_from_rows(rows: list[dict]) -> dict[str, str]:
     return _dsu_components(edges)
 
 
-def canonicalize_with_map(mentions: DataFrame, comp_map: dict[str, str]) -> DataFrame:
-    """Attach canonical_id given a precomputed component map (broadcast)."""
-    spark = mentions.sparkSession
-    comp = spark.createDataFrame(
-        list(comp_map.items()) or [], "concept_id string, component string"
-    )
+def _attach_components(mentions: DataFrame, comp: DataFrame) -> DataFrame:
     return (
         mentions.join(F.broadcast(comp), "concept_id", "left")
         .withColumn("canonical_id", F.coalesce("component", "concept_id"))
         .drop("component")
     )
+
+
+def canonicalize_with_map(mentions: DataFrame, comp_map: dict[str, str]) -> DataFrame:
+    """Attach canonical_id given a precomputed component map (broadcast;
+    the map frame is Arrow-decoded in the JVM, so no Python worker runs
+    when the broadcast is built)."""
+    comp = local_frame(mentions.sparkSession, list(comp_map.items()), COMPONENTS)
+    return _attach_components(mentions, comp)
 
 
 #: driver-side union-find refuses edge lists past this bound (an ontology
@@ -180,47 +191,40 @@ def canonicalize(
 
     The synonym graph is ontology-sized (10^4–10^6 nodes — tiny next to the
     10^12-turn corpus), so by default the union-find runs **driver-side**
-    (one collect of the pre-aggregated edge list, microseconds of CPU) and
-    ships back as a broadcast map — zero extra Spark jobs on the corpus
-    path.  ``driver_side=False`` switches to the distributed min-label
-    propagation (``connected_components``) for graphs that genuinely exceed
-    driver memory."""
+    and the map ships back as a broadcast frame.  A dictionary from
+    ``build_dictionary_df`` carries its driver rows, so without
+    *extra_edges* the map comes straight from them
+    (``components_from_rows``) and this call starts no Spark job.  Any
+    other dictionary, or *extra_edges*, costs one shuffle + collect job for
+    the pre-aggregated edge list, refused past ``MAX_DRIVER_EDGES``.
+    ``driver_side=False`` switches to the distributed min-label propagation
+    (``connected_components``) for graphs that genuinely exceed driver
+    memory."""
+    rows = getattr(dictionary, "_kgpipe_local_rows", None)
+    if driver_side and extra_edges is None and rows is not None:
+        return canonicalize_with_map(mentions, components_from_rows(rows))
     edges = synonym_edges(dictionary)
     if extra_edges is not None:
         edges = edges.unionByName(extra_edges.select("src", "dst"))
-    if driver_side:
-        # the driver-side contract is ONTOLOGY-sized edge lists; a caller
-        # feeding corpus-derived extra_edges would silently collect the
-        # corpus onto the driver.  Make the contract explicit: refuse past
-        # a bound and direct to the distributed path.
-        edge_rows = edges.limit(MAX_DRIVER_EDGES + 1).collect()
-        if len(edge_rows) > MAX_DRIVER_EDGES:
-            raise ValueError(
-                f"canonicalize(driver_side=True) saw more than "
-                f"{MAX_DRIVER_EDGES:,} synonym edges — this is no longer "
-                "ontology-sized; pass driver_side=False to run the "
-                "distributed connected_components instead"
-            )
-        comp_map = _dsu_components(
-            [(r["src"], r["dst"]) for r in edge_rows]
-        )
-        spark = mentions.sparkSession
-        if comp_map:
-            comp = spark.createDataFrame(
-                list(comp_map.items()), "concept_id string, component string"
-            )
-        else:
-            comp = spark.createDataFrame(
-                [], "concept_id string, component string"
-            )
-    else:
+    if not driver_side:
         comp = connected_components(edges).withColumnRenamed(
             "node", "concept_id"
         )
-    return (
-        mentions.join(F.broadcast(comp), "concept_id", "left")
-        .withColumn("canonical_id", F.coalesce("component", "concept_id"))
-        .drop("component")
+        return _attach_components(mentions, comp)
+    # the driver-side contract is ONTOLOGY-sized edge lists; a caller
+    # feeding corpus-derived extra_edges would silently collect the
+    # corpus onto the driver.  Make the contract explicit: refuse past
+    # a bound and direct to the distributed path.
+    edge_rows = edges.limit(MAX_DRIVER_EDGES + 1).collect()
+    if len(edge_rows) > MAX_DRIVER_EDGES:
+        raise ValueError(
+            f"canonicalize(driver_side=True) saw more than "
+            f"{MAX_DRIVER_EDGES:,} synonym edges — this is no longer "
+            "ontology-sized; pass driver_side=False to run the "
+            "distributed connected_components instead"
+        )
+    return canonicalize_with_map(
+        mentions, _dsu_components([(r["src"], r["dst"]) for r in edge_rows])
     )
 
 

@@ -6,8 +6,11 @@ ConceptMapper dictionary lookup (aggregate built at
 ``ConceptMapperPipelineFactory.java:94-96``, invoked per sentence by
 ``EntityFinder.java:97-125``).  Design (SURVEY.md §2.3 "dictionary lookup"):
 
-- the dictionary (10^4–10^6 rows) is collected driver-side, compiled into a
+- the dictionary (10^4–10^6 rows) is built driver-side, compiled into a
   token trie, and **broadcast** — no shuffle of the 10^12-row transcript side;
+  its DataFrame form (for Mayla's label map and canonicalization) is an
+  Arrow table decoded in the JVM (``session.local_frame``), so no Python
+  worker runs outside the detect map;
 - detection is a **narrow** transformation: one fused stage from the
   transcripts scan to the mentions output, no wide dependency, so it scales
   linearly with executors (the scaling-efficiency target);
@@ -28,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from . import schemas
 from .normalize import MatchConfig, config_for
 from .obo import dictionary_rows, parse_ontology
+from .session import local_frame
 from .trie import DictionaryTrie, pretokenize
 
 
@@ -44,10 +48,13 @@ def build_dictionary_df(
     for ontology, path in sorted(obo_paths.items()):
         cfg = (configs or {}).get(ontology) or config_for(ontology)
         all_rows.extend(dictionary_rows(parse_ontology(path), ontology, cfg))
-    df = spark.createDataFrame(all_rows, schema=schemas.DICTIONARY)
+    # Arrow-decoded in the JVM: a list-built frame would start Python
+    # workers on every evaluation (Mayla's label map, each broadcast build)
+    df = local_frame(spark, all_rows, schemas.DICTIONARY)
     # the rows already live on the driver — let collect_dictionary skip the
     # driver→executor→driver round trip (a fixed seconds-scale job that
-    # erodes scaling efficiency; parquet-sourced dictionaries still collect)
+    # erodes scaling efficiency; parquet-sourced dictionaries still
+    # collect), and let canonicalize union-find them without a Spark job
     df._kgpipe_local_rows = all_rows  # type: ignore[attr-defined]
     return df
 

@@ -25,9 +25,11 @@ from __future__ import annotations
 import datetime as dt
 from typing import Callable
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import schemas
+from .session import local_frame
 
 COMPLETE = "COMPLETE"
 OUTSTANDING = "OUTSTANDING"
@@ -43,10 +45,17 @@ def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
 
 
 def read_lineage(spark: SparkSession, path: str) -> DataFrame:
+    """The lineage table at *path*; empty when nothing was ever committed
+    there (missing path, or an empty directory).  Any other failure — an
+    unreadable or corrupt file — raises: reading it as "nothing COMPLETE"
+    would silently recompute every bucket on resume."""
     try:
-        return spark.read.parquet(path)
-    except Exception:
-        return spark.createDataFrame([], schema=schemas.LINEAGE)
+        # the explicit schema also skips the schema-inference job
+        return spark.read.schema(schemas.LINEAGE).parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return local_frame(spark, [], schemas.LINEAGE)
 
 
 def complete_buckets(lineage: DataFrame, run_key: str) -> DataFrame:
@@ -175,8 +184,8 @@ def run_with_lineage(
     # makes repeat invocations near-free)
     if todo.limit(1).count() == 0:
         _commit_if_complete(lineage)
-        # reuse the exception-guarded read — lineage_path may not exist yet
-        # (first run over an empty input)
+        # reuse the read above — lineage_path may not exist yet (first run
+        # over an empty input), which read_lineage gives as an empty frame
         return lineage.filter(F.col("run_key") == run_key)
 
     mentions, triples = pipeline_fn(todo.drop("partition_id"))
@@ -241,7 +250,7 @@ def run_with_lineage(
     rows.write.mode("append").parquet(lineage_path)
     mentions.unpersist()
     triples.unpersist()
-    current = spark.read.parquet(lineage_path)
+    current = read_lineage(spark, lineage_path)
     _commit_if_complete(current)
     return current.filter(F.col("run_key") == run_key)
 

@@ -1,16 +1,22 @@
-"""SparkSession factory tuned for the pipeline.
+"""SparkSession factory tuned for the pipeline, and the driver-rows frame
+builder.
 
 Settings chosen for scale (see SURVEY.md §4): AQE on (skew-join splitting +
 shuffle coalescing), Arrow on (the trie scanner is an Arrow-batched
 ``mapInPandas``), shuffle partitions sized for the local harness but meant
 to be overridden via ``spark-submit --conf`` on a real cluster.
+
+``local_frame`` is the one way the KG path turns driver-side rows into a
+DataFrame (tests/test_session.py parses the KG modules to keep it so).
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Mapping, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -53,3 +59,37 @@ def cpu_partition_count(spark, default: int = 200) -> int:
             return int(spark.sparkContext.defaultParallelism)
         except Exception:
             return default
+
+
+def local_frame(spark: SparkSession, rows: Sequence, schema: StructType) -> DataFrame:
+    """DataFrame over driver-side *rows* (mappings keyed by field name, or
+    sequences in schema order) that no Python worker ever touches.
+
+    ``spark.createDataFrame(list)`` plans the rows as a ``PythonRDD`` of
+    pickled rows, so every evaluation of the frame (a collect, each
+    broadcast-exchange build) starts Python workers to unpickle them.  An
+    Arrow table is decoded in the JVM instead.  The table is built one
+    column at a time, so a None in a non-nullable field or a value of the
+    wrong type raises a ValueError/TypeError naming the field, as the list
+    path's row verifier does."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    by_name = bool(rows) and isinstance(rows[0], Mapping)
+    columns = []
+    for i, field in enumerate(schema.fields):
+        key = field.name if by_name else i
+        values = [r[key] for r in rows]
+        if not field.nullable and any(v is None for v in values):
+            raise ValueError(
+                f"local_frame: field {field.name!r} is not nullable but "
+                "holds None")
+        try:
+            columns.append(pa.array(values, type=arrow_schema.field(i).type))
+        except pa.ArrowTypeError as e:
+            raise TypeError(f"local_frame: field {field.name!r}: {e}") from e
+        except pa.ArrowInvalid as e:
+            raise ValueError(f"local_frame: field {field.name!r}: {e}") from e
+    table = pa.Table.from_arrays(columns, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

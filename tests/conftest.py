@@ -26,6 +26,32 @@ def spark():
     spark.stop()
 
 
+def load_perfbench_gen():
+    """The benchmark's seeded corpus/ontology generator
+    (``perfbench/gen.py``), imported by path."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location("perfbench_gen", os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "perfbench", "gen.py"))
+    gen = importlib.util.module_from_spec(spec)
+    sys.modules[spec.name] = gen  # dataclasses resolve their module
+    spec.loader.exec_module(gen)
+    return gen
+
+
+def perfbench_obo_paths(directory, seed: int) -> dict[str, str]:
+    """The generator's CL / GO_MF / PR ontologies for *seed*, written as
+    OBO files under *directory*; {ontology: path}."""
+    paths = {}
+    for name, ont in load_perfbench_gen().make_ontologies(seed).items():
+        path = os.path.join(str(directory), f"{name}-{seed}.obo")
+        with open(path, "w", encoding="utf-8") as fh:
+            fh.write(ont.obo)
+        paths[name] = path
+    return paths
+
+
 def load_a1(path: str) -> set[tuple[str, int, int]]:
     """Parse a BioNLP .a1 standoff file (format: README.md:98-113 of the
     reference) into {(concept_id, begin, end)}."""

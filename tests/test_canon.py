@@ -115,3 +115,58 @@ def test_rewrite_triples(spark):
     assert sorted(got) == sorted([
         ("x", "p", "x", 7), ("x", "p", "x", 8), ("a", "q", "x", 9),
         ("x", "p", "x", 10)])
+
+
+def _canonical_ids(mentions, dictionary, **kw) -> dict[str, str]:
+    return {r.concept_id: r.canonical_id
+            for r in canonicalize(mentions, dictionary, **kw).collect()}
+
+
+def test_canonicalize_driver_rows_equal_edge_paths(spark, tmp_path):
+    """The map computed from a built dictionary's driver rows gives every
+    mention the same canonical_id as the Spark edge paths: the collected
+    edge list (a transformed copy carries no driver rows) and the
+    distributed connected_components."""
+    from conftest import MINI_OBO, perfbench_obo_paths
+    from kgpipe.detect import build_dictionary_df
+
+    for obo_paths, n_merged in (({"SYN": MINI_OBO}, 1),
+                                (perfbench_obo_paths(tmp_path, 1), 1076)):
+        ddf = build_dictionary_df(spark, obo_paths)
+        mentions = ddf.select("concept_id").distinct()
+        got = _canonical_ids(mentions, ddf)
+        assert sum(c != rep for c, rep in got.items()) == n_merged
+        assert _canonical_ids(mentions, ddf.select("*")) == got
+        assert _canonical_ids(mentions, ddf.select("*"),
+                              driver_side=False) == got
+
+
+def test_canonicalize_built_dictionary_starts_no_job(spark):
+    """canonicalize over a build_dictionary_df dictionary computes its map
+    from the driver rows: no Spark job until the caller's action.  The
+    same call on a copy without driver rows collects the edge list."""
+    import time
+
+    from conftest import MINI_OBO
+    from kgpipe.detect import build_dictionary_df
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ddf = build_dictionary_df(spark, {"SYN": MINI_OBO})
+    mentions = ddf.select("concept_id").distinct()
+    try:
+        sc.setJobGroup("canon-driver-rows", "canonicalize, driver rows")
+        canonicalize(mentions, ddf)
+        sc.setJobGroup("canon-edge-collect", "canonicalize, edge collect")
+        canonicalize(mentions, ddf.select("*"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job events reach the tracker asynchronously and in order: once the
+    # later group's job shows, any job of the earlier group would too
+    deadline = time.monotonic() + 30
+    while (not tracker.getJobIdsForGroup("canon-edge-collect")
+           and time.monotonic() < deadline):
+        time.sleep(0.1)
+    assert tracker.getJobIdsForGroup("canon-edge-collect")
+    assert tracker.getJobIdsForGroup("canon-driver-rows") == []

@@ -383,3 +383,30 @@ def test_fused_rejects_staged_only_options(spark, tmp_path):
         cfg = PipelineConfig(obo_paths={"CL": MINI_OBO}, fused=True, **kw)
         with pytest.raises(ValueError):
             run_pipeline(spark, tdf, cfg, str(tmp_path / "x"))
+
+
+def test_read_lineage_missing_or_empty_is_empty(spark, tmp_path):
+    from kgpipe import schemas
+
+    for path in (tmp_path / "never-written", tmp_path / "empty"):
+        if path.name == "empty":
+            path.mkdir()
+        df = read_lineage(spark, str(path))
+        assert df.count() == 0
+        assert [f.name for f in df.schema] == schemas.LINEAGE.names
+
+
+def test_read_lineage_corrupt_file_raises(spark, tmp_path):
+    """An unreadable lineage is an error, not "nothing COMPLETE": reading it
+    as empty would make a resume recompute every bucket."""
+    import pytest
+
+    lin = tmp_path / "lineage"
+    lin.mkdir()
+    (lin / "part-0.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception):
+        read_lineage(spark, str(lin)).collect()
+    with pytest.raises(Exception):
+        run_with_lineage(spark, _transcripts(spark), _fake_pipeline, RUN_KEY,
+                         str(lin), str(tmp_path / "out"), n_buckets=4)
+    assert not (tmp_path / "out").exists()

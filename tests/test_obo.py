@@ -1,6 +1,6 @@
 from __future__ import annotations
 
-from conftest import MINI_OBO
+from conftest import MINI_OBO, load_perfbench_gen
 from kgpipe.normalize import MatchConfig
 from kgpipe.obo import (
     CHEBI_DROP_IDS,
@@ -149,19 +149,9 @@ def test_dictionary_rows_shared_normalizer_unchanged():
     per-token normalization, on the mini fixture and on the benchmark
     generator's CL / GO_MF / PR ontologies, under every per-ontology
     config."""
-    import importlib.util
-    import os
-    import sys
-
     from kgpipe import normalize
 
-    spec = importlib.util.spec_from_file_location("perfbench_gen", os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "perfbench", "gen.py"))
-    gen = importlib.util.module_from_spec(spec)
-    sys.modules[spec.name] = gen  # dataclasses resolve their module
-    spec.loader.exec_module(gen)
-
+    gen = load_perfbench_gen()
     cases = [("CL", parse_obo(MINI_OBO))]
     for seed in (1, 2):
         cases += [(name, parse_obo(o.obo, from_text=True))
