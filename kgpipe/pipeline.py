@@ -2,8 +2,9 @@
 
 transcripts → detect (broadcast trie, mapInPandas) → filters → Mayla/TF-IDF
 disambiguation → union-find canonicalization → triples → partitioned write,
-with per-partition lineage (resume = anti-join).  Mirrors the reference's
-three pipeline entry points (SURVEY.md §3) in one configurable driver.
+with per-bucket lineage (resume = the OUTSTANDING buckets, found on the
+driver).  Mirrors the reference's three pipeline entry points (SURVEY.md
+§3) in one configurable driver.
 
 Run: ``spark-submit --py-files kgpipe.zip -m kgpipe.pipeline <args>`` or
 ``python -m kgpipe.pipeline --transcripts ... --obo CL=path.obo --out ...``.

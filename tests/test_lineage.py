@@ -410,3 +410,186 @@ def test_read_lineage_corrupt_file_raises(spark, tmp_path):
         run_with_lineage(spark, _transcripts(spark), _fake_pipeline, RUN_KEY,
                          str(lin), str(tmp_path / "out"), n_buckets=4)
     assert not (tmp_path / "out").exists()
+
+
+# ---------------------------------------------------------------------------
+# ERROR status, latest-wins commit decision, job budget
+# ---------------------------------------------------------------------------
+
+def _quarantine(messages):
+    """A pipeline that quarantines the conversations in *messages* (conv_id
+    -> error message, None for none) as ``__ERROR__`` mention rows."""
+    def _pipeline(sub):
+        mentions, triples = _fake_pipeline(sub)
+        poisoned = F.col("conv_id").isin(list(messages))
+        message = F.lit(None).cast("string")
+        for conv, msg in messages.items():
+            message = F.when(F.col("conv_id") == conv, F.lit(msg)).otherwise(message)
+        mentions = mentions.withColumn(
+            "concept_id",
+            F.when(poisoned, F.lit("__ERROR__")).otherwise(F.col("concept_id")),
+        ).withColumn("error", message)
+        return mentions, triples
+    return _pipeline
+
+
+def test_error_rows_without_a_message_still_fail_the_bucket(spark, tmp_path):
+    from kgpipe.lineage import NO_ERROR_MESSAGE, bucket_col
+
+    tdf = _transcripts(spark, n=8)
+    lin = str(tmp_path / "lin")
+    rows = run_with_lineage(spark, tdf, _quarantine({"conv0000": None}),
+                            RUN_KEY, lin, str(tmp_path / "out"), n_buckets=4,
+                            snapshot=True)
+    bad = tdf.filter(F.col("conv_id") == "conv0000").select(
+        bucket_col(4).alias("b")).first().b
+    by_bucket = {r.partition_id: r for r in rows.collect()}
+    assert len(by_bucket) == with_bucket(tdf, 4).select(
+        "partition_id").distinct().count()
+    assert by_bucket[bad].status == ERROR
+    assert by_bucket[bad].error == NO_ERROR_MESSAGE
+    assert by_bucket[bad].component_at_fault == "detect"
+    assert all(r.status == COMPLETE and r.error is None
+               for b, r in by_bucket.items() if b != bad)
+    # the quarantined bucket is retried, and the snapshot did not flip
+    from kgpipe.triples import committed_snapshot
+
+    assert committed_snapshot(str(tmp_path / "out")) is None
+    todo = outstanding(with_bucket(tdf, 4), read_lineage(spark, lin), RUN_KEY)
+    assert {r.partition_id for r in todo.select("partition_id").distinct()
+            .collect()} == {bad}
+
+
+def test_error_message_is_the_least_of_the_bucket(spark, tmp_path):
+    tdf = _transcripts(spark, n=6)
+    pipeline = _quarantine({"conv0000": "ValueError: b",
+                            "conv0001": None,
+                            "conv0002": "ValueError: a",
+                            "conv0003": "ValueError: c"})
+    rows = run_with_lineage(spark, tdf, pipeline, RUN_KEY,
+                            str(tmp_path / "lin"), str(tmp_path / "out"),
+                            n_buckets=1)
+    (row,) = rows.collect()
+    assert row.status == ERROR and row.error == "ValueError: a"
+    # the quarantined rows are not counted as mentions
+    assert row.n_turns == 18 and row.n_mentions == 6 and row.n_triples == 18
+
+
+def test_commit_decision_follows_latest_run_date(spark, tmp_path):
+    """A run dated before an existing ERROR row of a bucket records its row,
+    but the later ERROR row still wins that bucket: no COMPLETE, no flip —
+    the same decision complete_buckets takes over the stored lineage."""
+    from kgpipe import schemas
+    from kgpipe.lineage import complete_buckets
+    from kgpipe.triples import committed_snapshot
+
+    tdf = _transcripts(spark, n=8)
+    all_buckets = {r.partition_id for r in with_bucket(tdf, 4)
+                   .select("partition_id").distinct().collect()}
+    bad = min(all_buckets)
+    for prior_year, flips in ((2030, False), (2020, True)):
+        lin = str(tmp_path / f"lin{prior_year}")
+        out = str(tmp_path / f"out{prior_year}")
+        spark.createDataFrame(
+            [(RUN_KEY, bad, ERROR, 0, 0, 0, dt.datetime(prior_year, 1, 1),
+              "boom", "detect")],
+            schemas.LINEAGE,
+        ).write.parquet(lin)
+        run_with_lineage(spark, tdf, _fake_pipeline, RUN_KEY, lin, out,
+                         n_buckets=4, snapshot=True,
+                         run_date=dt.datetime(2025, 1, 1,
+                                              tzinfo=dt.timezone.utc))
+        stored = read_lineage(spark, lin)
+        assert (stored.filter(F.year("run_date") == 2025).count()
+                == len(all_buckets))
+        done = {r.partition_id for r in complete_buckets(stored, RUN_KEY)
+                .collect()}
+        assert (done == all_buckets) is flips
+        assert (committed_snapshot(out) == "snap-1") is flips
+
+
+def test_naive_run_date_is_stored_as_local_time(spark, tmp_path, monkeypatch):
+    """A naive run_date means Python local time (as F.lit reads it); an
+    aware one its own instant.  Both are stored as before."""
+    import time
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        tdf = _transcripts(spark, n=2)
+        for i, run_date in enumerate((
+                dt.datetime(2025, 6, 1, 12, 30, 0, 123456),
+                dt.datetime(2025, 6, 1, 12, 30, tzinfo=dt.timezone.utc))):
+            lin = str(tmp_path / f"lin{i}")
+            run_with_lineage(spark, tdf, _fake_pipeline, RUN_KEY, lin,
+                             str(tmp_path / f"out{i}"), n_buckets=2,
+                             run_date=run_date)
+            want = spark.range(1).select(
+                F.unix_micros(F.lit(run_date)).alias("u")).first().u
+            got = {r.u for r in read_lineage(spark, lin)
+                   .select(F.unix_micros("run_date").alias("u")).collect()}
+            assert got == {want}
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run *fn* under job group *group*; the ids of the jobs it started."""
+    import time
+
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup(group, group)
+        fn()
+        # a marker job: job events reach the tracker asynchronously and in
+        # order, so once it shows, every job *fn* started shows too
+        sc.setJobGroup(group + "-end", group)
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while (not tracker.getJobIdsForGroup(group + "-end")
+           and time.monotonic() < deadline):
+        time.sleep(0.1)
+    assert tracker.getJobIdsForGroup(group + "-end")
+    return tracker.getJobIdsForGroup(group)
+
+
+# the probe: the turns-per-bucket and latest-status collects, two jobs each
+PROBE_JOBS = 4
+# one staged run_pipeline(lineage_path=..., snapshot=True) over
+# _gen_tdf(spark): 58 jobs when the lineage counts were joined Spark
+# aggregates over an anti-join, 26 since they come to the driver
+STAGED_LINEAGE_JOBS = 40
+
+
+def test_complete_reinvocation_starts_only_the_probe(spark, tmp_path):
+    tdf = _transcripts(spark, n=8)
+    lin, out = str(tmp_path / "lin"), str(tmp_path / "out")
+    run_with_lineage(spark, tdf, _fake_pipeline, RUN_KEY, lin, out,
+                     n_buckets=4, snapshot=True)
+
+    def _never(sub):
+        raise AssertionError("pipeline_fn called with nothing OUTSTANDING")
+
+    jobs = _jobs_in_group(spark, "lineage-noop", lambda: run_with_lineage(
+        spark, tdf, _never, RUN_KEY, lin, out, n_buckets=4, snapshot=True))
+    assert 0 < len(jobs) <= PROBE_JOBS
+
+
+def test_staged_lineage_run_job_budget(spark, tmp_path):
+    from conftest import MINI_OBO
+    from kgpipe.pipeline import PipelineConfig, run_pipeline
+
+    tdf = _gen_tdf(spark)
+    cfg = PipelineConfig(obo_paths={"CL": MINI_OBO}, n_buckets=8,
+                         snapshot=True)
+    jobs = _jobs_in_group(spark, "lineage-staged", lambda: run_pipeline(
+        spark, tdf, cfg, str(tmp_path / "out"),
+        lineage_path=str(tmp_path / "lin")))
+    assert len(jobs) < STAGED_LINEAGE_JOBS
+    rows = read_lineage(spark, str(tmp_path / "lin")).collect()
+    assert len(rows) == 8 and {r.status for r in rows} == {COMPLETE}
