@@ -3,6 +3,8 @@
 Default: run the headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]; print ONE JSON line
 {"metric", "value", "unit": "sec", "queries": {...}, "sf", ...}.
+$SPARK_GRAFT_CPUS defaults to nproc; the line also carries "cpus" and
+"dictionary": {"source", "rows"}.
 
 --scaling: run the KG end-to-end job at two parallelism levels (local[8]
 vs local[32]) on identical synthetic input and report throughput at both
@@ -22,7 +24,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS")
+           or len(os.sched_getaffinity(0)))  # nproc
 CL_OBO = (
     "/root/reference/nlp-pipelines-conceptmapper/src/test/resources/"
     "oboFiles/cl-basic.obo"
@@ -55,14 +58,25 @@ def _make_transcripts(spark, n_convs: int):
 
 
 def _dictionary(spark):
+    """(dictionary frame, {"source", "rows"}): the reference's cl-basic.obo
+    when present, else the benchmark generator's seeded synthetic CL
+    ontology (``perfbench/gen.py``, 4 000 terms)."""
     from kgpipe.detect import build_dictionary_df
 
     if os.path.exists(CL_OBO):
-        return build_dictionary_df(spark, {"CL": CL_OBO})
-    # fall back to the test mini ontology if the reference tree is absent
-    mini = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        "tests", "fixtures", "mini.obo")
-    return build_dictionary_df(spark, {"CL": mini})
+        d = build_dictionary_df(spark, {"CL": CL_OBO})
+        source = CL_OBO
+    else:
+        from perfbench import gen
+
+        # the build parses the file on the driver, so it can go right after
+        with tempfile.TemporaryDirectory(prefix="kgpipe_bench_obo_") as tmp:
+            path = os.path.join(tmp, "CL.obo")
+            with open(path, "w", encoding="utf-8") as fh:
+                fh.write(gen.make_ontologies(seed=1)["CL"].obo)
+            d = build_dictionary_df(spark, {"CL": path})
+        source = "perfbench/gen.py synthetic CL ontology, seed 1"
+    return d, {"source": source, "rows": d.count()}
 
 
 def kg_e2e(spark, tdf, dictionary, out_dir: str) -> int:
@@ -135,7 +149,7 @@ def run_default(reps: int | None = None) -> None:
     tdf, n_turns = _make_transcripts(spark, N_CONVS)
     tdf = tdf.cache()
     n_turns_df = tdf.count()
-    d = _dictionary(spark)
+    d, dictionary = _dictionary(spark)
     from kgpipe.detect import detect_mentions
 
     detect_mentions(tdf.limit(64), d).count()
@@ -194,6 +208,8 @@ def run_default(reps: int | None = None) -> None:
                          for k, v in samples.items()},
         "reps": reps,
         "sf": _sf_of(SF_DIR),
+        "cpus": CPUS,
+        "dictionary": dictionary,
         "n_turns": n_turns_df,
         **extras,
     }))
@@ -234,7 +250,7 @@ def run_scaling() -> None:
             " tool string, ts timestamp",
         ).repartition(hi * 4, "conv_id").cache()
         tdf.count()
-        d = _dictionary(spark)
+        d, _ = _dictionary(spark)
         # warm the Python workers / broadcast path outside the timed window
         detect_mentions(tdf.limit(64), d).count()
         fused = os.environ.get("KGPIPE_SCALE_FUSED", "1") == "1"

@@ -13,7 +13,8 @@ a plain appendable table whose per-bucket facts come to the driver:
   row;
 - per-output metrics (annotationCount — ``AnnotationOutput.java:10-15``,
   logged at ``AnnotationSerializerAE.java:176-183``) → per-partition
-  n_turns/n_mentions/n_triples counts;
+  n_turns/n_mentions/n_triples counts, n_triples read from the parquet
+  footers of the files the write produced;
 - per-document error capture with component-at-fault
   (``Neo4jRunCatalog.java:687-693``) → quarantined error rows aggregated
   into ERROR lineage rows.
@@ -32,8 +33,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from . import schemas
-from .session import local_frame
+from . import schemas, triples as _triples
+from .session import arrow_table, local_frame
 
 COMPLETE = "COMPLETE"
 OUTSTANDING = "OUTSTANDING"
@@ -128,31 +129,39 @@ def _as_stored(run_date: dt.datetime) -> tuple[dt.datetime, int]:
 
 
 def _bucket_metrics(
-    mentions: DataFrame, triples: DataFrame, n_buckets: int
-) -> dict[int, tuple[int, int, int, str | None]]:
-    """{bucket: (n_mentions, n_triples, n_errors, least error message)} from
-    one aggregate over the mentions united with the triples.  Quarantined
-    ``__ERROR__`` mentions count as errors, not mentions."""
-    cid, kind = F.col("concept_id"), F.col("kind")
-    tagged = mentions.select(
-        bucket_col(n_buckets).alias("partition_id"),
-        F.when(cid == "__ERROR__", F.lit("error"))
-        .when(cid != "__ERROR__", F.lit("mention")).alias("kind"),
-        "error",
-    ).unionByName(triples.select(
-        bucket_col(n_buckets).alias("partition_id"),
-        F.lit("triple").alias("kind"),
-        F.lit(None).cast("string").alias("error"),
-    ))
+    mentions: DataFrame, n_buckets: int
+) -> dict[int, tuple[int, int, str | None]]:
+    """{bucket: (n_mentions, n_errors, least error message)} from one
+    aggregate over the mentions.  Quarantined ``__ERROR__`` mentions count
+    as errors, not mentions."""
+    is_error = F.col("concept_id") == "__ERROR__"
     return {
-        r.partition_id: (r.n_mentions, r.n_triples, r.n_errors, r.error)
-        for r in tagged.groupBy("partition_id").agg(
-            F.count_if(kind == "mention").alias("n_mentions"),
-            F.count_if(kind == "triple").alias("n_triples"),
-            F.count_if(kind == "error").alias("n_errors"),
-            F.min(F.when(kind == "error", F.col("error"))).alias("error"),
+        r.partition_id: (r.n_mentions, r.n_errors, r.error)
+        for r in mentions.groupBy(
+            bucket_col(n_buckets).alias("partition_id")).agg(
+            F.count_if(~is_error).alias("n_mentions"),
+            F.count_if(is_error).alias("n_errors"),
+            F.min(F.when(is_error, F.col("error"))).alias("error"),
         ).collect()
     }
+
+
+def append_lineage(spark: SparkSession, lineage_path: str, rows: list) -> None:
+    """Append driver-side lineage *rows* (``schemas.LINEAGE`` order, checked
+    by ``session.arrow_table``) to the table at *lineage_path* as one
+    parquet file, without a Spark job.  ``triples.publish_file`` writes it
+    under a hidden ``.``-prefixed name, which Spark's file index skips,
+    and then renames it into place, so no reader ever sees a partial
+    file; any path Spark can write works."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sink = pa.BufferOutputStream()
+    pq.write_table(arrow_table(rows, schemas.LINEAGE), sink)
+    _triples.publish_file(spark, lineage_path, f"part-{uuid.uuid4()}.parquet",
+                          sink.getvalue().to_pybytes())
 
 
 def run_with_lineage(
@@ -200,13 +209,24 @@ def run_with_lineage(
     2. the write — *pipeline_fn* over a narrow ``isin`` filter of the
        input; the mentions it returns are cached first, so the triple
        write reads the staged mention plan once (the write's own jobs);
-    3. metrics — one aggregate over the cached mentions united with the
-       triples, collected per bucket (two jobs);
-    4. the lineage rows, built on the driver and appended (one job);
+    3. metrics — n_mentions and errors from one aggregate over the cached
+       mentions alone, collected per bucket (two jobs), so the triple plan
+       runs only inside the write; n_triples of each OUTSTANDING bucket
+       from the parquet footers of the files the write put in its
+       ``bucket=N/`` directory (``triples.bucket_row_counts``, no job).
+       Dynamic partition overwrite has just replaced those directories;
+       files that were there before the write are not counted, so a
+       bucket this run wrote no triple for counts 0.  Local paths are
+       listed by the OS and their footers read by ``pyarrow``; any other
+       scheme goes through Spark's Hadoop FileSystem and parquet-hadoop;
+    4. the lineage rows, built on the driver and appended as one parquet
+       file written with ``pyarrow`` under a hidden name and renamed into
+       *lineage_path* (``append_lineage``, no job);
     5. the commit — decided on the driver with ``complete_buckets``'
        latest-wins rule: a bucket is COMPLETE if it was before, or if this
        run's row is COMPLETE and later than every earlier row of the
-       bucket; ``finalize_snapshot`` then flips the snapshot;
+       bucket; ``finalize_snapshot`` then flips the snapshot, with its
+       manifest counted from the footers too (no job);
     6. the returned rows — a lazy read of the lineage (no job).
 
     Returns the CURRENT lineage rows for *run_key* (rows appended by this
@@ -237,12 +257,8 @@ def run_with_lineage(
     done = {b for b, (status, _) in latest.items() if status == COMPLETE}
     todo = sorted(set(n_turns) - done)
 
-    if snapshot:
-        from .triples import snapshot_staging_path
-
-        data_path = snapshot_staging_path(output_path, run_key)
-    else:
-        data_path = output_path
+    data_path = (_triples.snapshot_staging_path(output_path, run_key)
+                 if snapshot else output_path)
 
     def _commit_if_complete(complete: set[int]) -> None:
         """Flip the staged snapshot iff every input bucket is COMPLETE.
@@ -250,9 +266,7 @@ def run_with_lineage(
         the staging dir is still present, lineage says all-complete, so
         the rerun's no-op pass finishes the commit."""
         if snapshot and os.path.isdir(data_path) and complete >= n_turns.keys():
-            from .triples import finalize_snapshot
-
-            finalize_snapshot(spark, output_path, data_path)
+            _triples.finalize_snapshot(spark, output_path, data_path)
 
     # fully-resumed run: nothing OUTSTANDING → skip the whole pipeline
     # (running the detect/disambig/write plans over an empty input still
@@ -263,6 +277,11 @@ def run_with_lineage(
         # over an empty input), which read_lineage gives as an empty frame
         return lineage.filter(F.col("run_key") == run_key)
 
+    # the files already in the table: the footer counts below take only
+    # the files this write adds (listed before the pipeline runs, so a
+    # path no filesystem serves fails here)
+    before = frozenset(f for files in _triples.bucket_files(
+        spark, data_path).values() for f in files)
     mentions, triples = pipeline_fn(
         inputs.filter(F.col("partition_id").isin(todo)).drop("partition_id"))
     # the triples are built from this same mention plan: caching it before
@@ -284,27 +303,27 @@ def run_with_lineage(
             .partitionBy("bucket")
             .parquet(data_path)
         )
-        metrics = _bucket_metrics(mentions, triples, n_buckets)
+        metrics = _bucket_metrics(mentions, n_buckets)
     finally:
         mentions.unpersist()
+    n_triples = _triples.bucket_row_counts(spark, data_path, skip=before)
 
     rows, won = [], set()
     for b in todo:
-        n_mentions, n_triples, n_errors, error = metrics.get(b, (0, 0, 0, None))
+        n_mentions, n_errors, error = metrics.get(b, (0, 0, None))
         status = ERROR if n_errors else COMPLETE
         if n_errors and error is None:
             error = NO_ERROR_MESSAGE
         rows.append((
-            run_key, b, status, n_turns[b], n_mentions, n_triples, run_date,
-            error, "detect" if n_errors else None,
+            run_key, b, status, n_turns[b], n_mentions, n_triples.get(b, 0),
+            run_date, error, "detect" if n_errors else None,
         ))
         # this run's row is the bucket's latest iff it is later than every
         # earlier row (max_by's order, compared as stored microseconds)
         prior = latest.get(b, (None, None))[1]
         if status == COMPLETE and (prior is None or prior < run_micros):
             won.add(b)
-    local_frame(spark, rows, schemas.LINEAGE).write.mode("append").parquet(
-        lineage_path)
+    append_lineage(spark, lineage_path, rows)
     _commit_if_complete(done | won)
     return read_lineage(spark, lineage_path).filter(F.col("run_key") == run_key)
 

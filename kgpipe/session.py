@@ -1,5 +1,5 @@
-"""SparkSession factory tuned for the pipeline, and the driver-rows frame
-builder.
+"""SparkSession factory tuned for the pipeline, and the driver-rows
+Arrow builder.
 
 Settings chosen for scale (see SURVEY.md §4): AQE on (skew-join splitting +
 shuffle coalescing), Arrow on (the trie scanner is an Arrow-batched
@@ -8,6 +8,8 @@ to be overridden via ``spark-submit --conf`` on a real cluster.
 
 ``local_frame`` is the one way the KG path turns driver-side rows into a
 DataFrame (tests/test_session.py parses the KG modules to keep it so).
+``arrow_table`` is its row builder and validator, shared with the lineage
+append, which writes driver rows to parquet without a Spark job.
 """
 
 from __future__ import annotations
@@ -61,17 +63,13 @@ def cpu_partition_count(spark, default: int = 200) -> int:
             return default
 
 
-def local_frame(spark: SparkSession, rows: Sequence, schema: StructType) -> DataFrame:
-    """DataFrame over driver-side *rows* (mappings keyed by field name, or
-    sequences in schema order) that no Python worker ever touches.
+def arrow_table(rows: Sequence, schema: StructType):
+    """A ``pyarrow`` table of driver-side *rows* (mappings keyed by field
+    name, or sequences in schema order) typed by the Spark *schema*.
 
-    ``spark.createDataFrame(list)`` plans the rows as a ``PythonRDD`` of
-    pickled rows, so every evaluation of the frame (a collect, each
-    broadcast-exchange build) starts Python workers to unpickle them.  An
-    Arrow table is decoded in the JVM instead.  The table is built one
-    column at a time, so a None in a non-nullable field or a value of the
-    wrong type raises a ValueError/TypeError naming the field, as the list
-    path's row verifier does."""
+    The table is built one column at a time, so a None in a non-nullable
+    field or a value of the wrong type raises a ValueError/TypeError naming
+    the field, as ``createDataFrame``'s row verifier does."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -83,13 +81,23 @@ def local_frame(spark: SparkSession, rows: Sequence, schema: StructType) -> Data
         values = [r[key] for r in rows]
         if not field.nullable and any(v is None for v in values):
             raise ValueError(
-                f"local_frame: field {field.name!r} is not nullable but "
+                f"field {field.name!r} is not nullable but "
                 "holds None")
         try:
             columns.append(pa.array(values, type=arrow_schema.field(i).type))
         except pa.ArrowTypeError as e:
-            raise TypeError(f"local_frame: field {field.name!r}: {e}") from e
+            raise TypeError(f"field {field.name!r}: {e}") from e
         except pa.ArrowInvalid as e:
-            raise ValueError(f"local_frame: field {field.name!r}: {e}") from e
-    table = pa.Table.from_arrays(columns, schema=arrow_schema)
-    return spark.createDataFrame(table, schema)
+            raise ValueError(f"field {field.name!r}: {e}") from e
+    return pa.Table.from_arrays(columns, schema=arrow_schema)
+
+
+def local_frame(spark: SparkSession, rows: Sequence, schema: StructType) -> DataFrame:
+    """DataFrame over driver-side *rows* (as ``arrow_table`` takes them)
+    that no Python worker ever touches.
+
+    ``spark.createDataFrame(list)`` plans the rows as a ``PythonRDD`` of
+    pickled rows, so every evaluation of the frame (a collect, each
+    broadcast-exchange build) starts Python workers to unpickle them.  An
+    Arrow table is decoded in the JVM instead."""
+    return spark.createDataFrame(arrow_table(rows, schema), schema)

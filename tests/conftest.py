@@ -13,7 +13,21 @@ CL_OBO = f"{REF}/oboFiles/cl-basic.obo"
 DOID_OBO = f"{REF}/oboFiles/doid.obo"
 CL_A1 = f"{REF}/17608565_CL.a1"
 DOID_A1 = f"{REF}/17608565_DOID.a1"
-MINI_OBO = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures", "mini.obo")
+FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
+MINI_OBO = os.path.join(FIXTURES, "mini.obo")
+# six CL annotations in the reference's .a1 format over SAMPLE_A1_TEXT
+SAMPLE_A1 = os.path.join(FIXTURES, "sample_CL.a1")
+SAMPLE_A1_TEXT = ("Neuronal progenitor cells and fibroblasts were compared with"
+                  " T cells and B cells.")
+
+
+def require_reference(*paths: str) -> None:
+    """Skip the calling test, naming the first missing file, unless every
+    reference file in *paths* exists; with the files present the test runs
+    as written."""
+    for path in paths:
+        if not os.path.exists(path):
+            pytest.skip(f"reference file missing: {path}")
 
 
 @pytest.fixture(scope="session")

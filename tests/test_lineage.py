@@ -6,12 +6,14 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from kgpipe.lineage import (
     COMPLETE,
     ERROR,
     OUTSTANDING,
+    bucket_col,
     outstanding,
     read_lineage,
     run_with_lineage,
@@ -562,8 +564,10 @@ def _jobs_in_group(spark, group, fn):
 PROBE_JOBS = 4
 # one staged run_pipeline(lineage_path=..., snapshot=True) over
 # _gen_tdf(spark): 58 jobs when the lineage counts were joined Spark
-# aggregates over an anti-join, 26 since they come to the driver
-STAGED_LINEAGE_JOBS = 40
+# aggregates over an anti-join, 26 when they came to the driver, 20 since
+# the triple counts come from parquet footers and the lineage rows and the
+# snapshot manifest are written without a job
+STAGED_LINEAGE_JOBS = 24
 
 
 def test_complete_reinvocation_starts_only_the_probe(spark, tmp_path):
@@ -593,3 +597,194 @@ def test_staged_lineage_run_job_budget(spark, tmp_path):
     assert len(jobs) < STAGED_LINEAGE_JOBS
     rows = read_lineage(spark, str(tmp_path / "lin")).collect()
     assert len(rows) == 8 and {r.status for r in rows} == {COMPLETE}
+
+
+# ---------------------------------------------------------------------------
+# the commit from the written files: footer counts, driver-side append
+# ---------------------------------------------------------------------------
+
+def _table_counts(df):
+    return {r.bucket: r["count"] for r in df.groupBy("bucket").count().collect()}
+
+
+def _last_run_rows(spark, lin):
+    """{bucket: row} of the latest invocation (its rows share a run_date)."""
+    rows = read_lineage(spark, lin).collect()
+    last = max(r.run_date for r in rows)
+    return {r.partition_id: r for r in rows if r.run_date == last}
+
+
+def _with_null_conv(tdf):
+    return tdf.unionByName(tdf.sparkSession.createDataFrame(
+        [(None, t, "user", "a neuron cell with no conversation", None, None)
+         for t in range(2)], T_SCHEMA))
+
+
+def test_null_conv_lands_in_its_lineage_bucket(spark, tmp_path):
+    """write_triples and lineage bucket a NULL conv_id the same way, so a
+    resumable run replaces exactly the bucket lineage records it under."""
+    from kgpipe.triples import read_triples_snapshot, write_triples_snapshot
+
+    tdf = _with_null_conv(_transcripts(spark, n=16))
+    (null_bucket,) = {r.partition_id for r in with_bucket(tdf, 8)
+                      .filter(F.col("conv_id").isNull()).collect()}
+
+    def _null_buckets(df):
+        return {r.bucket for r in
+                df.filter(F.col("conv_id").isNull()).select("bucket").collect()}
+
+    # the one-shot write
+    one_shot = str(tmp_path / "one_shot")
+    manifest = write_triples_snapshot(_fake_pipeline(tdf)[1], one_shot,
+                                      n_buckets=8)
+    got = read_triples_snapshot(spark, one_shot)
+    assert _null_buckets(got) == {null_bucket}
+    assert manifest["bucket_counts"] == {
+        str(b): n for b, n in _table_counts(got).items()}
+
+    # a run whose conv0000 bucket fails (the NULL conv's bucket commits),
+    # then the resume of that bucket
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lin")
+    for pipeline_fn in (_quarantine({"conv0000": "ValueError: bad"}),
+                        _fake_pipeline):
+        run_with_lineage(spark, tdf, pipeline_fn, RUN_KEY, lin, out,
+                         n_buckets=8, snapshot=True)
+    failed = {r.partition_id for r in read_lineage(spark, lin).collect()
+              if r.status == ERROR}
+    assert failed and null_bucket not in failed
+    got = read_triples_snapshot(spark, out)
+    assert _null_buckets(got) == {null_bucket}
+    rows = {r.partition_id: r for r in read_lineage(spark, lin).collect()}
+    assert rows[null_bucket].n_triples == _table_counts(got)[null_bucket]
+
+
+@pytest.mark.parametrize("fused", [False, True], ids=["staged", "fused"])
+def test_commit_counts_equal_the_written_table(spark, tmp_path, fused):
+    """Lineage n_triples (an ERROR run, then its resume) and the snapshot
+    manifest equal a groupBy count of the table the run wrote."""
+    import json
+    import os
+
+    from conftest import MINI_OBO
+    from kgpipe.normalize import MatchConfig
+    from kgpipe.pipeline import PipelineConfig, run_pipeline
+    from kgpipe.triples import read_triples_snapshot, snapshot_staging_path
+
+    tdf = _gen_tdf(spark, n_convs=12, seed=3)
+    if fused:  # the staged plan's detect schema holds conv_id NOT NULL
+        tdf = _with_null_conv(tdf)
+    bogus = MatchConfig(
+        search_strategy="BOGUS", case_match="CASE_INSENSITIVE",
+        stemmer="NONE", stopwords="NONE", order_independent=False,
+        find_all_matches=False, synonym_type="ALL",
+    )
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lin")
+    base = dict(obo_paths={"CL": MINI_OBO}, fused=fused, disambiguate=False,
+                n_buckets=4, snapshot=True)
+    half = tdf.filter(bucket_col(4) < 2)
+    run_pipeline(spark, half,
+                 PipelineConfig(**base, detect_configs={"CL": bogus}),
+                 out, lineage_path=lin)
+    rows = _last_run_rows(spark, lin)
+    assert {r.status for r in rows.values()} == {ERROR}
+    counts = _table_counts(spark.read.parquet(
+        snapshot_staging_path(out, PipelineConfig().run_key)))
+    assert {b: r.n_triples for b, r in rows.items()} == {
+        b: counts.get(b, 0) for b in rows}
+
+    run_pipeline(spark, tdf, PipelineConfig(**base), out, lineage_path=lin)
+    got = read_triples_snapshot(spark, out)
+    counts = _table_counts(got)
+    rows = _last_run_rows(spark, lin)
+    assert {r.status for r in rows.values()} == {COMPLETE}
+    assert {b: r.n_triples for b, r in rows.items()} == counts
+    manifest = json.load(open(os.path.join(out, "snap-1", "_manifest.json")))
+    assert manifest["bucket_counts"] == {str(b): n for b, n in counts.items()}
+    if fused:
+        assert got.filter(F.col("conv_id").isNull()).count() > 0
+
+
+def test_finalize_and_lineage_append_start_no_job(spark, tmp_path):
+    from kgpipe import schemas
+    from kgpipe.lineage import append_lineage
+    from kgpipe.triples import finalize_snapshot, write_triples
+
+    out = str(tmp_path / "out")
+    staging = str(tmp_path / "out" / "staging")
+    write_triples(_fake_pipeline(_transcripts(spark, n=8))[1], staging,
+                  n_buckets=4, mode="overwrite")
+    jobs = _jobs_in_group(spark, "finalize",
+                          lambda: finalize_snapshot(spark, out, staging))
+    assert jobs == []
+
+    lin = str(tmp_path / "lin")
+    row = (RUN_KEY, 0, COMPLETE, 3, 3, 3, dt.datetime(2025, 1, 1), None, None)
+    jobs = _jobs_in_group(spark, "append",
+                          lambda: append_lineage(spark, lin, [row]))
+    assert jobs == []
+    assert [tuple(r) for r in read_lineage(spark, lin)
+            .select(*schemas.LINEAGE.names[:6]).collect()] == [row[:6]]
+
+
+def test_finalize_rejects_data_outside_bucket_dirs(spark, tmp_path):
+    """A clustered staging directory (files at its root) cannot be counted
+    per bucket from its files: the commit raises and flips nothing."""
+    import os
+
+    from kgpipe.triples import committed_snapshot, finalize_snapshot, write_triples
+
+    out = str(tmp_path / "out")
+    staging = os.path.join(out, "snap-1.inprogress")
+    write_triples(_fake_pipeline(_transcripts(spark, n=8))[1], staging,
+                  n_buckets=4, mode="overwrite", layout="clustered")
+    with pytest.raises(ValueError, match="outside its bucket=N/"):
+        finalize_snapshot(spark, out, staging)
+    assert committed_snapshot(out) is None and os.path.isdir(staging)
+
+
+def test_commit_through_hadoop_filesystem(spark, tmp_path, monkeypatch):
+    """Paths that are not local (hdfs://, s3a://, ...) are listed, counted
+    and appended through Spark's Hadoop FileSystem: the same run with every
+    path sent that way records the counts of the table it wrote."""
+    from kgpipe import triples as triples_mod
+
+    tdf = _gen_tdf(spark, n_convs=12, seed=5)
+    lin, out = str(tmp_path / "lin"), str(tmp_path / "out")
+    monkeypatch.setattr(triples_mod, "_local_path", lambda path: None)
+    # half the buckets, then the rest: the second run's footer counts must
+    # leave out the files the first run wrote
+    for sub in (tdf.filter(bucket_col(4) < 2), tdf):
+        run_with_lineage(spark, sub, _fake_pipeline, RUN_KEY, lin, out,
+                         n_buckets=4)
+    rows = {r.partition_id: r for r in read_lineage(spark, lin).collect()}
+    assert len(rows) == 4 and {r.status for r in rows.values()} == {COMPLETE}
+    assert {b: r.n_triples for b, r in rows.items()} == _table_counts(
+        spark.read.parquet(out))
+
+
+def test_unknown_scheme_fails_before_the_pipeline(spark, tmp_path):
+    def _never(sub):
+        raise AssertionError("pipeline_fn called for an unusable output path")
+
+    with pytest.raises(Exception, match="(?i)no filesystem for scheme"):
+        run_with_lineage(spark, _transcripts(spark, n=4), _never, RUN_KEY,
+                         str(tmp_path / "lin"), "kgpipe-none://host/out",
+                         n_buckets=4)
+
+
+def test_read_lineage_ignores_a_hidden_temp_file(spark, tmp_path):
+    """An append that died before its rename leaves a hidden ``.``-prefixed
+    file; readers and the next resume skip it."""
+    tdf = _transcripts(spark, n=8)
+    lin, out = str(tmp_path / "lin"), str(tmp_path / "out")
+    run_with_lineage(spark, tdf, _fake_pipeline, RUN_KEY, lin, out,
+                     n_buckets=4)
+    before = sorted(map(tuple, read_lineage(spark, lin).collect()))
+    (tmp_path / "lin" / ".part-crashed.parquet.tmp").write_bytes(b"partial")
+    assert sorted(map(tuple, read_lineage(spark, lin).collect())) == before
+
+    def _never(sub):
+        raise AssertionError("pipeline_fn called with nothing OUTSTANDING")
+
+    rows = run_with_lineage(spark, tdf, _never, RUN_KEY, lin, out, n_buckets=4)
+    assert {r.status for r in rows.collect()} == {COMPLETE}

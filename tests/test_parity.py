@@ -11,7 +11,10 @@ from __future__ import annotations
 
 import pytest
 
-from conftest import ARTICLE_TXT, CL_A1, CL_OBO, DOID_A1, DOID_OBO, load_a1, prf
+from conftest import (
+    ARTICLE_TXT, CL_A1, CL_OBO, DOID_A1, DOID_OBO, load_a1, prf,
+    require_reference,
+)
 from kgpipe.normalize import MatchConfig, config_for
 from kgpipe.obo import concept_uri, dictionary_rows, parse_obo
 from kgpipe.trie import DictionaryTrie
@@ -32,6 +35,7 @@ def scan(obo_path: str, ontology: str, cfg: MatchConfig) -> set:
 
 
 def test_cl_parity_exact():
+    require_reference(CL_OBO, ARTICLE_TXT, CL_A1)
     mine = scan(CL_OBO, "CL", CL_CFG)
     gold = load_a1(CL_A1)
     p, r, f = prf(mine, gold)
@@ -41,6 +45,7 @@ def test_cl_parity_exact():
 
 
 def test_doid_parity():
+    require_reference(DOID_OBO, ARTICLE_TXT, DOID_A1)
     mine = scan(DOID_OBO, "DOID", CL_CFG)
     mine = {(concept_uri(c), b, e) for c, b, e in mine}
     gold = load_a1(DOID_A1)
@@ -63,6 +68,7 @@ def test_spark_detection_parity(spark):
     the golden .a1 set."""
     from kgpipe.detect import build_dictionary_df, detect_mentions
 
+    require_reference(ARTICLE_TXT, CL_OBO, CL_A1)
     with open(ARTICLE_TXT, encoding="utf-8") as f:
         content = f.read()
 
@@ -101,6 +107,7 @@ def test_multi_ontology_detection(spark):
     from conftest import MINI_OBO
     from kgpipe.detect import build_dictionary_df, detect_mentions
 
+    require_reference(CL_OBO, DOID_OBO)
     rows = [
         ("c1", 0, "user", "a neuron with melanoma markers", None, None),
         ("c1", 1, "tool", "the fibroblast shows no carcinoma", None, None),

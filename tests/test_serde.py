@@ -70,10 +70,27 @@ def test_a1_roundtrip(spark, tmp_path):
 
 
 def test_golden_a1_file_parses(spark):
-    from conftest import CL_A1
+    from conftest import CL_A1, require_reference
 
+    require_reference(CL_A1)
     df = parse_a1_text(spark, CL_A1)
     assert df.count() == 262  # 524 lines = 262 annotations (EntityFinderTest)
+
+
+def test_sample_a1_fixture_parses(spark):
+    """The in-repo fixture in the reference's .a1 format: T and N lines
+    joined on their index, offsets into SAMPLE_A1_TEXT, a nested span
+    kept as its own annotation; the Spark parser and the test loader
+    agree."""
+    from conftest import SAMPLE_A1, SAMPLE_A1_TEXT, load_a1
+
+    rows = {(r.concept_id, r.begin, r.end, r.covered_text)
+            for r in parse_a1_text(spark, SAMPLE_A1).collect()}
+    assert len(rows) == 6
+    assert ("CL:0000084", 61, 68, "T cells") in rows
+    assert ("CL:0000000", 63, 68, "cells") in rows
+    assert all(SAMPLE_A1_TEXT[b:e] == text for _, b, e, text in rows)
+    assert {(c, b, e) for c, b, e, _ in rows} == load_a1(SAMPLE_A1)
 
 
 def test_generic_tsv_loader_score_cutoff(spark, tmp_path):
