@@ -2,7 +2,8 @@
 
 ``entry(spark)`` smoke-runs the flagship KG-construction pipeline on
 sf0.001.  ``queries()`` exposes one entry per implemented operator family
-from SURVEY.md §2 (+ the training-data operators); ``oracle_sql()`` gives
+from SURVEY.md §2 (+ the graph, inference and conversation analytics over
+its output, and the training-data text operators); ``oracle_sql()`` gives
 the DuckDB-equivalent ANSI SQL for everything SQL-expressible.
 
 The KG queries derive a transcripts view from the ``documents`` table
@@ -196,16 +197,6 @@ transcripts_neg AS (
   FROM transcripts)""" + _SQL_MENTIONS[len(_SQL_TRANSCRIPTS):].replace(
     "FROM transcripts\n", "FROM transcripts_neg\n")
 
-# the same mention-detection body over the UNIQUE-turn-key transcripts
-# variant (_conv_transcripts) — used by oracles whose semantics join
-# mentions back to their turn's text (mention_contexts)
-_SQL_CT_MENTIONS = """
-transcripts AS (
-  SELECT source || '-' || (doc_id % 10)::varchar AS conv_id,
-         (doc_id // 10)::int AS turn_idx, text
-  FROM documents
-)""" + _SQL_MENTIONS[len(_SQL_TRANSCRIPTS):]
-
 # full triple construction (all families incl. banded co-occurrence) as a
 # reusable prefix: kg_triples projects it raw; the graph_* analytics
 # queries aggregate over the same `tri` CTE
@@ -274,143 +265,6 @@ und AS MATERIALIZED (SELECT subj AS a, obj AS b FROM e_d
 # is recursive (the bfs_dist / rdfs_types oracles); the triple-construction
 # prefix itself is unchanged
 _SQL_TRIPLES_REC = _SQL_TRIPLES.replace("WITH ", "WITH RECURSIVE ", 1)
-
-# deterministic random-walk corpus (kgpipe.kgtrain.random_walks with
-# walk_length=3, walks_per_node=2, seed='rw'): rounds unrolled; neighbor
-# pick = md5(start|walk|step|rw) %% deg indexing the row_number-ranked
-# adjacency. Shared by the kg_walks and walk_pairs oracle rows.
-_SQL_ADJ = """
-e_w AS MATERIALIZED (SELECT DISTINCT subj, obj FROM tri),
-adj_w AS MATERIALIZED (
-  SELECT subj AS node,
-         row_number() OVER (PARTITION BY subj ORDER BY obj) - 1 AS idx,
-         obj AS nxt
-  FROM e_w),
-deg_w AS MATERIALIZED (SELECT node, count(*) AS deg FROM adj_w
-                       GROUP BY node),
-nodes_w AS (SELECT DISTINCT node FROM (
-  SELECT subj AS node FROM e_w UNION ALL SELECT obj FROM e_w))"""
-
-_SQL_WALKS = _SQL_ADJ + """,
-s0 AS MATERIALIZED (
-  SELECT node AS "start", w.walk, 0 AS step, node
-  FROM nodes_w, (SELECT unnest([0, 1]) AS walk) w),
-s1 AS MATERIALIZED (
-  SELECT s."start", s.walk, 1 AS step, a.nxt AS node
-  FROM s0 s JOIN deg_w d ON s.node = d.node
-  JOIN adj_w a ON a.node = s.node
-   AND a.idx = ('0x' || substr(md5(s."start" || '|' || s.walk::varchar
-         || '|' || s.step::varchar || '|rw'), 1, 8))::bigint % d.deg),
-s2 AS MATERIALIZED (
-  SELECT s."start", s.walk, 2 AS step, a.nxt AS node
-  FROM s1 s JOIN deg_w d ON s.node = d.node
-  JOIN adj_w a ON a.node = s.node
-   AND a.idx = ('0x' || substr(md5(s."start" || '|' || s.walk::varchar
-         || '|' || s.step::varchar || '|rw'), 1, 8))::bigint % d.deg),
-s3 AS MATERIALIZED (
-  SELECT s."start", s.walk, 3 AS step, a.nxt AS node
-  FROM s2 s JOIN deg_w d ON s.node = d.node
-  JOIN adj_w a ON a.node = s.node
-   AND a.idx = ('0x' || substr(md5(s."start" || '|' || s.walk::varchar
-         || '|' || s.step::varchar || '|rw'), 1, 8))::bigint % d.deg),
-walks AS (SELECT * FROM s0 UNION ALL SELECT * FROM s1
-  UNION ALL SELECT * FROM s2 UNION ALL SELECT * FROM s3)"""
-
-
-def _sql_n2v_step(i: int, w_return: int, w_common: int, w_far: int) -> str:
-    """One unrolled biased step of kgpipe.kgtrain.biased_walks: weight
-    each candidate by second-order distance to the walk's previous node,
-    then the cumulative-weight draw picks the next hop."""
-    return f"""cand{i} AS MATERIALIZED (
-  SELECT s."start", s.walk, s.node, s.prev, a.idx, a.nxt,
-         CASE WHEN a.nxt = s.prev THEN {w_return}
-              WHEN c._c IS NOT NULL THEN {w_common}
-              ELSE {w_far} END AS w
-  FROM b{i - 1} s
-  JOIN adj_w a ON a.node = s.node
-  LEFT JOIN cmn c ON c.prev = s.prev AND c.nxt = a.nxt),
-b{i} AS MATERIALIZED (
-  SELECT "start", walk, {i} AS step, nxt AS node, node AS prev FROM (
-    SELECT *,
-           sum(w) OVER (PARTITION BY "start", walk ORDER BY idx) AS cum,
-           sum(w) OVER (PARTITION BY "start", walk) AS tot,
-           ('0x' || substr(md5("start" || '|' || walk::varchar
-              || '|' || '{i - 1}' || '|n2v'), 1, 8))::bigint AS h
-    FROM cand{i})
-  WHERE cum - w <= h % tot AND h % tot < cum)"""
-
-
-# node2vec-style biased walks (kgpipe.kgtrain.biased_walks with
-# walk_length=3, walks_per_node=2, weights 1/4/2, seed 'n2v'):
-# step 1 uniform, steps 2-3 second-order biased
-_SQL_N2V = _SQL_ADJ + f""",
-cmn AS MATERIALIZED (SELECT node AS prev, nxt, 1 AS _c FROM adj_w),
-b0 AS MATERIALIZED (
-  SELECT node AS "start", w.walk, 0 AS step, node,
-         NULL::varchar AS prev
-  FROM nodes_w, (SELECT unnest([0, 1]) AS walk) w),
-b1 AS MATERIALIZED (
-  SELECT s."start", s.walk, 1 AS step, a.nxt AS node, s.node AS prev
-  FROM b0 s JOIN deg_w d ON s.node = d.node
-  JOIN adj_w a ON a.node = s.node
-   AND a.idx = ('0x' || substr(md5(s."start" || '|' || s.walk::varchar
-         || '|0|n2v'), 1, 8))::bigint % d.deg),
-{_sql_n2v_step(2, 1, 4, 2)},
-{_sql_n2v_step(3, 1, 4, 2)},
-bwalks AS (
-  SELECT "start", walk, step, node FROM b0
-  UNION ALL SELECT "start", walk, step, node FROM b1
-  UNION ALL SELECT "start", walk, step, node FROM b2
-  UNION ALL SELECT "start", walk, step, node FROM b3)"""
-
-# link-prediction ranks (kgpipe.kgtrain.link_prediction_ranks, dim=8,
-# scale=1000, filtered): exact-integer hash embeddings, L1 scores,
-# deterministic tie-break. Shared by lp_ranks and lp_eval oracle rows.
-_SQL_LP_RANKS = """
-t AS MATERIALIZED (SELECT DISTINCT subj, pred, obj FROM tri),
-ents_lp AS MATERIALIZED (SELECT DISTINCT entity FROM (
-  SELECT subj AS entity FROM t UNION ALL SELECT obj FROM t)),
-dims AS (SELECT unnest(generate_series(0, 7)) AS j),
-ev AS MATERIALIZED (
-  SELECT entity, j,
-         ('0x' || substr(md5(entity || '|' || j::varchar || '|emb'),
-            1, 8))::bigint % 2001 - 1000 AS v
-  FROM ents_lp, dims),
-test_lp AS MATERIALIZED (
-  SELECT subj, pred, obj FROM t
-  WHERE ('0x' || substr(md5(subj || '|' || pred || '|' || obj || '|lp'),
-           1, 8))::bigint % 100 < 10),
-pv AS MATERIALIZED (
-  SELECT pred, j,
-         ('0x' || substr(md5(pred || '|' || j::varchar || '|rel'),
-            1, 8))::bigint % 2001 - 1000 AS v
-  FROM (SELECT DISTINCT pred FROM test_lp), dims),
-qv AS MATERIALIZED (
-  SELECT q.subj, q.pred, q.obj, se.j, se.v + pv.v AS qv
-  FROM test_lp q
-  JOIN ev se ON se.entity = q.subj
-  JOIN pv ON pv.pred = q.pred AND pv.j = se.j),
-scored_lp AS MATERIALIZED (
-  SELECT qv.subj, qv.pred, qv.obj, ev.entity,
-         sum(abs(qv.qv - ev.v)) AS score
-  FROM qv JOIN ev ON ev.j = qv.j
-  GROUP BY 1, 2, 3, 4),
-filt_lp AS MATERIALIZED (
-  SELECT s.* FROM scored_lp s
-  WHERE s.entity = s.obj OR NOT EXISTS (
-    SELECT 1 FROM t WHERE t.subj = s.subj AND t.pred = s.pred
-      AND t.obj = s.entity)),
-ts_lp AS (SELECT subj, pred, obj, score AS true_score FROM filt_lp
-          WHERE entity = obj),
-ranks_lp AS (
-  SELECT f.subj, f.pred, f.obj,
-         (1 + sum(CASE WHEN f.score < ts_lp.true_score
-                    OR (f.score = ts_lp.true_score
-                        AND f.entity < f.obj)
-                  THEN 1 ELSE 0 END))::bigint AS rank
-  FROM filt_lp f JOIN ts_lp ON f.subj = ts_lp.subj
-    AND f.pred = ts_lp.pred AND f.obj = ts_lp.obj
-  GROUP BY 1, 2, 3)"""
 
 # RDFS vocabulary for the rdfs_types contract row: domain/range
 # declarations over the kgpipe predicates plus a 3-level class hierarchy
@@ -1212,20 +1066,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             )
         )
 
-    def q_lineitem_pricing(spark, sf_dir):
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        return (
-            li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("date"))
-            .groupBy("l_returnflag", "l_linestatus")
-            .agg(
-                F.sum(F.col("l_quantity").cast("decimal(18,2)"))
-                .cast("double").alias("sum_qty"),
-                F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-                .cast("double").alias("sum_base_price"),
-                F.count(F.lit(1)).alias("count_order"),
-            )
-        )
-
     def q_topk_orders_per_segment(spark, sf_dir):
         from pyspark.sql import Window
 
@@ -1478,11 +1318,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         cooc = cooccurrence_stats(m, window=3).select(
             "ca", "cb", "n_pair")
         return coherence_disambig(cand, cooc)
-
-    def q_pra_features(spark, sf_dir):
-        from kgpipe.kgtrain import pra_path_features
-
-        return pra_path_features(_triples(spark, sf_dir))
 
     def q_turn_retries(spark, sf_dir):
         from kgpipe.convops import turn_retries
@@ -1820,57 +1655,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return dedup_exact(red).select(
             "doc_id", F.md5("text").alias("text_md5"))
 
-    def q_neg_samples(spark, sf_dir):
-        from kgpipe.kgtrain import negative_samples
-
-        return negative_samples(_triples(spark, sf_dir), k=2,
-                                n_buckets=64)
-
-    def q_kg_split(spark, sf_dir):
-        from kgpipe.kgtrain import split_triples
-
-        return split_triples(_triples(spark, sf_dir), valid_frac=0.2,
-                             test_frac=0.2)
-
-    def q_kg_walks(spark, sf_dir):
-        from kgpipe.kgtrain import random_walks
-
-        return random_walks(_triples(spark, sf_dir), walk_length=3,
-                            walks_per_node=2)
-
-    def q_n2v_walks(spark, sf_dir):
-        from kgpipe.kgtrain import biased_walks
-
-        return biased_walks(_triples(spark, sf_dir), walk_length=3,
-                            walks_per_node=2, w_return=1, w_common=4,
-                            w_far=2)
-
-    def q_walk_pairs(spark, sf_dir):
-        from kgpipe.kgtrain import random_walks, walk_pairs
-
-        return walk_pairs(
-            random_walks(_triples(spark, sf_dir), walk_length=3,
-                         walks_per_node=2),
-            window=2)
-
-    def _lp_ranks(spark, sf_dir):
-        from kgpipe.kgtrain import _h32, link_prediction_ranks
-
-        t = (_triples(spark, sf_dir)
-             .select("subj", "pred", "obj").distinct())
-        test = t.filter(
-            F.pmod(_h32("subj", "pred", "obj", F.lit("lp")),
-                   F.lit(100)) < 10)
-        return link_prediction_ranks(t, test, dim=8, scale=1000)
-
-    def q_lp_ranks(spark, sf_dir):
-        return _lp_ranks(spark, sf_dir)
-
-    def q_lp_eval(spark, sf_dir):
-        from kgpipe.kgtrain import lp_metrics
-
-        return lp_metrics(_lp_ranks(spark, sf_dir))
-
     def q_functional_violations(spark, sf_dir):
         from kgpipe.quality import functional_violations
 
@@ -1955,20 +1739,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         return lsh_topk(e, queries_df, dim=64, k=5, n_planes=8,
                         n_tables=4).select("q_id", "vec_id", "rank")
-
-    def q_frame_sample(spark, sf_dir):
-        from kgpipe.multimodal import frame_sample_plan
-
-        media = _docs(spark, sf_dir).select(
-            F.col("doc_id").cast("string").alias("media_id"),
-            F.when(F.col("doc_id") % 2 == 0, F.lit("video"))
-            .otherwise(F.lit("image")).alias("modality"),
-            F.lit(None).cast("binary").alias("payload"),
-            F.create_map(
-                F.lit("n_frames"), (F.col("doc_id") % 50 + 1).cast("string")
-            ).alias("meta"),
-        )
-        return frame_sample_plan(media, every_n=10)
 
     def q_embedding_disambig(spark, sf_dir):
         from kgpipe.disambig import embedding_disambiguate
@@ -2074,56 +1844,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("segs")[0]["r"].alias("first_raw"),
             (F.length("raw_text") - F.length("text")).cast("int")
             .alias("n_removed"),
-        )
-
-    def q_media_features(spark, sf_dir):
-        from kgpipe.multimodal import extract_features
-
-        media = _docs(spark, sf_dir).select(
-            F.col("doc_id").cast("string").alias("media_id"),
-            F.lit("image").alias("modality"),
-            F.encode("text", "utf-8").alias("payload"),
-            F.create_map(F.lit("src"), F.col("source")).alias("meta"),
-        )
-        feats = extract_features(media, fake=True)
-        # contract projection: scalar digest of the feature vector (the
-        # driver's canonicalizer cannot sort array<float> columns).  The
-        # fake decoder is sha256-of-payload scaled to [0,1], so the hex
-        # digest reconstructs exactly — and gives DuckDB an oracle.
-        feat_hex = F.concat_ws(
-            "",
-            F.transform(
-                F.col("feature"),
-                lambda f: F.lpad(
-                    F.lower(F.hex(F.round(f * 255).cast("int"))), 2, "0"
-                ),
-            ),
-        )
-        return feats.select(
-            "media_id", "modality", "n_bytes", feat_hex.alias("feat_hex")
-        )
-
-    def q_media_probe(spark, sf_dir):
-        # header-only container probing: deterministic P5 payloads whose
-        # dims derive from doc_id, so the oracle recomputes the probe's
-        # answer arithmetically (asserting parse == construction)
-        from kgpipe.multimodal import probe_media
-
-        w = (F.col("doc_id") % 16 + 1).cast("int")
-        h = (F.col("doc_id") % 8 + 1).cast("int")
-        payload = F.encode(
-            F.concat(
-                F.format_string("P5 %d %d 255\n", w, h),
-                F.repeat(F.lit("x"), w * h),
-            ),
-            "utf-8",
-        )
-        media = _docs(spark, sf_dir).select(
-            F.col("doc_id").cast("string").alias("media_id"),
-            payload.alias("payload"),
-        )
-        return probe_media(media).select(
-            "media_id", "format", "width", "height", "n_bytes", "error"
         )
 
     def q_stream_triples(spark, sf_dir):
@@ -2251,18 +1971,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("doc_id").alias("doc_a"),
             (F.col("doc_id") + 100000).alias("doc_b"))
         return blocking_quality(cand, gold)
-
-    def q_mention_contexts(spark, sf_dir):
-        from kgpipe.detect import detect_mentions
-        from kgpipe.kgtrain import mention_contexts
-
-        # unique-turn-key transcripts so each mention joins exactly its
-        # own turn's text (the input_hint key-uniqueness contract)
-        ct = _conv_transcripts(spark, sf_dir)
-        m = detect_mentions(
-            ct, _tech_dictionary(spark), configs={"TECH": TECH_CFG}
-        ).select("conv_id", "turn_idx", "concept_id", "begin", "end")
-        return mention_contexts(m, ct, window_chars=30)
 
     def q_abbreviations(spark, sf_dir):
         from kgpipe.textops import abbreviations
@@ -2402,7 +2110,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "path_query": q_path_query,
         "sameas_rewrite": q_sameas_rewrite,
         "concept_trends": q_concept_trends,
-        "mention_contexts": q_mention_contexts,
         "abbreviations": q_abbreviations,
         "rule_stats": q_rule_stats,
         "path_rules": q_path_rules,
@@ -2418,7 +2125,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # round-2 driver artifact (sweep stopped at 50 entries), so they
         # must not sit at the tail of the dict
         "markup_strip": q_markup_strip,
-        "media_features": q_media_features,
         "stream_triples": q_stream_triples,
         "stream_cooc": q_stream_cooc,
         "mention_count_per_turn": q_mention_count_per_turn,
@@ -2450,7 +2156,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "langid": q_langid,
         "fingerprint": q_fingerprint,
         "cosine_topk": q_cosine_topk,
-        # flagship triple table + graph analytics, ANN, multimodal — keep
+        # flagship triple table + graph analytics and ANN — keep
         # these well inside the driver sweep's first 50 entries
         "kg_triples": q_kg_triples,
         "graph_pred_stats": q_graph_pred_stats,
@@ -2477,13 +2183,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "diff_summary": q_diff_summary,
         "hub_report": q_hub_report,
         "kg_stats": q_kg_stats,
-        "neg_samples": q_neg_samples,
-        "kg_split": q_kg_split,
-        "kg_walks": q_kg_walks,
-        "n2v_walks": q_n2v_walks,
-        "walk_pairs": q_walk_pairs,
-        "lp_ranks": q_lp_ranks,
-        "lp_eval": q_lp_eval,
         "local_clustering": q_local_clustering,
         "char_sets": q_char_sets,
         "state_at": q_state_at,
@@ -2493,7 +2192,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "negated_mentions": q_negated_mentions,
         "topic_boundaries": q_topic_boundaries,
         "dialogue_acts": q_dialogue_acts,
-        "pra_features": q_pra_features,
         "turn_retries": q_turn_retries,
         "coherence_disambig": q_coherence_disambig,
         "verb_relations": q_verb_relations,
@@ -2507,14 +2205,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pack_plan": q_pack_plan,
         "sessionize": q_sessionize,
         "session_triples": q_session_triples,
-        "media_probe": q_media_probe,
         "role_transitions": q_role_transitions,
         "lsh_topk": q_lsh_topk,
         "ivf_topk": q_ivf_topk,
         "ivf_centroids": q_ivf_centroids,
         "pagerank": q_pagerank,
         "embedding_disambig": q_embedding_disambig,
-        "frame_sample": q_frame_sample,
         "conv_metadata": q_conv_metadata,
         "per_doc_summary": q_per_doc_summary,
         "score_cutoff": q_score_cutoff,
@@ -2535,7 +2231,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "eval_shared_start_or_end": q_eval_shared_start_or_end,
         "eval_ignore_span": q_eval_ignore_span,
         "revenue_by_segment": q_revenue_by_segment,
-        "lineitem_pricing": q_lineitem_pricing,
         "topk_orders_per_segment": q_topk_orders_per_segment,
         "top10_orders": q_top10_orders,
         "events_by_type": q_events_by_type,
@@ -3142,16 +2837,6 @@ SELECT '<https://kg.example.org/conv/' || conv_id || '#t'
     || '> <http://purl.org/kgpipe/denotes> <http://purl.obolibrary.org/obo/'
     || replace(concept_id, ':', '_') || '> .' AS value
 FROM mentions""",
-        "frame_sample": """
-WITH m AS (
-  SELECT doc_id::varchar AS media_id,
-         CASE WHEN doc_id % 2 = 0 THEN 'video' ELSE 'image' END AS modality,
-         (doc_id % 50 + 1)::int AS n_frames
-  FROM documents)
-SELECT media_id,
-       unnest(generate_series(0, greatest(n_frames - 1, 0), 10))::int
-         AS frame_idx
-FROM m WHERE modality = 'video'""",
         "simhash_near_dup": _simhash_near_dup_sql(),
         "embedding_near_dup": _embedding_near_dup_sql(),
         "revenue_by_segment": """
@@ -3160,14 +2845,6 @@ SELECT c.c_mktsegment,
        count(*) AS n_orders
 FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
 GROUP BY c.c_mktsegment""",
-        "lineitem_pricing": """
-SELECT l_returnflag, l_linestatus,
-       (sum(l_quantity::DECIMAL(18,2)))::double AS sum_qty,
-       (sum(l_extendedprice::DECIMAL(18,2)))::double AS sum_base_price,
-       count(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= DATE '1998-09-02'
-GROUP BY l_returnflag, l_linestatus""",
         "topk_orders_per_segment": """
 WITH j AS (
   SELECT c.c_mktsegment, o.o_orderkey, o.o_totalprice
@@ -3377,100 +3054,6 @@ dd AS (SELECT doc_id, text,
          row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
        FROM r)
 SELECT doc_id, md5(text) AS text_md5 FROM dd WHERE rn = 1""",
-        # deterministic filtered negative sampling (kgpipe.kgtrain):
-        # md5 bucket/index arithmetic identical in both engines
-        "neg_samples": f"""
-{_SQL_TRIPLES},
-t AS MATERIALIZED (SELECT DISTINCT subj, pred, obj FROM tri),
-ents AS (SELECT DISTINCT entity FROM (
-  SELECT subj AS entity FROM t UNION ALL SELECT obj FROM t)),
-ei AS MATERIALIZED (
-  SELECT entity, bucket,
-         row_number() OVER (PARTITION BY bucket ORDER BY entity) - 1 AS idx
-  FROM (SELECT entity,
-               ('0x' || substr(md5(entity || '|ent'), 1, 8))::bigint % 64
-                 AS bucket
-        FROM ents)),
-cnts AS MATERIALIZED (
-  SELECT bucket, count(*) AS cnt,
-         row_number() OVER (ORDER BY bucket) - 1 AS bseq
-  FROM ei GROUP BY bucket),
-nb AS (SELECT count(*) AS nb FROM cnts),
-drawn AS (
-  SELECT t.subj, t.pred, t.obj, i.neg_i,
-         ('0x' || substr(md5(t.subj || '|' || t.pred || '|' || t.obj
-            || '|' || i.neg_i::varchar || '|b'), 1, 8))::bigint
-           % nb.nb AS bseq,
-         ('0x' || substr(md5(t.subj || '|' || t.pred || '|' || t.obj
-            || '|' || i.neg_i::varchar || '|p'), 1, 8))::bigint AS ph
-  FROM t, (SELECT unnest([0, 1]) AS neg_i) i, nb),
-picked AS (
-  SELECT d.subj, d.pred, d.obj, d.neg_i, ei.entity AS neg_obj
-  FROM drawn d
-  JOIN cnts ON d.bseq = cnts.bseq
-  JOIN ei ON ei.bucket = cnts.bucket AND ei.idx = d.ph % cnts.cnt)
-SELECT subj, pred, obj, neg_i, neg_obj FROM picked p
-WHERE NOT EXISTS (SELECT 1 FROM t WHERE t.subj = p.subj
-                  AND t.pred = p.pred AND t.obj = p.neg_obj)""",
-        # leakage-safe train/valid/test split (kgpipe.kgtrain.split_triples):
-        # md5 assignment + one demotion pass mirrored exactly
-        "kg_split": f"""
-{_SQL_TRIPLES},
-t AS MATERIALIZED (SELECT DISTINCT subj, pred, obj FROM tri),
-assigned AS MATERIALIZED (
-  SELECT subj, pred, obj,
-         CASE WHEN u < 200000 THEN 'test'
-              WHEN u < 400000 THEN 'valid'
-              ELSE 'train' END AS split0
-  FROM (SELECT subj, pred, obj,
-               ('0x' || substr(md5(subj || '|' || pred || '|' || obj
-                  || '|split'), 1, 8))::bigint % 1000000 AS u
-        FROM t)),
-tr_ents AS MATERIALIZED (SELECT DISTINCT entity FROM (
-  SELECT subj AS entity FROM assigned WHERE split0 = 'train'
-  UNION ALL SELECT obj FROM assigned WHERE split0 = 'train')),
-tr_preds AS (SELECT DISTINCT pred FROM assigned WHERE split0 = 'train')
-SELECT a.subj, a.pred, a.obj,
-       CASE WHEN a.split0 = 'train' THEN 'train'
-            WHEN se.entity IS NULL OR oe.entity IS NULL
-              OR tp.pred IS NULL THEN 'train'
-            ELSE a.split0 END AS split
-FROM assigned a
-LEFT JOIN tr_ents se ON a.subj = se.entity
-LEFT JOIN tr_ents oe ON a.obj = oe.entity
-LEFT JOIN tr_preds tp ON a.pred = tp.pred""",
-        # deterministic random walks (kgpipe.kgtrain.random_walks):
-        # shared unrolled-walk body (_SQL_WALKS)
-        "kg_walks": f"""
-{_SQL_TRIPLES},{_SQL_WALKS}
-SELECT * FROM walks""",
-        # node2vec-style second-order biased walks
-        # (kgpipe.kgtrain.biased_walks; shared body _SQL_N2V)
-        "n2v_walks": f"""
-{_SQL_TRIPLES},{_SQL_N2V}
-SELECT * FROM bwalks""",
-        # skip-gram pairs over the walk corpus
-        # (kgpipe.kgtrain.walk_pairs, window=2)
-        "walk_pairs": f"""
-{_SQL_TRIPLES},{_SQL_WALKS}
-SELECT a.node AS center, b.node AS context, count(*)::bigint AS cnt
-FROM walks a JOIN walks b
-  ON a."start" = b."start" AND a.walk = b.walk
- AND a.step <> b.step AND abs(a.step - b.step) <= 2
-GROUP BY 1, 2""",
-        # TransE-style filtered link-prediction ranks over exact-integer
-        # hash embeddings (kgpipe.kgtrain.link_prediction_ranks)
-        "lp_ranks": f"""
-{_SQL_TRIPLES},{_SQL_LP_RANKS}
-SELECT subj, pred, obj, rank FROM ranks_lp""",
-        # integer summary metrics (kgpipe.kgtrain.lp_metrics)
-        "lp_eval": f"""
-{_SQL_TRIPLES},{_SQL_LP_RANKS}
-SELECT count(*)::bigint AS n_test,
-       sum(CASE WHEN rank <= 1 THEN 1 ELSE 0 END)::bigint AS hits_at_1,
-       sum(CASE WHEN rank <= 10 THEN 1 ELSE 0 END)::bigint AS hits_at_10,
-       sum(rank)::bigint AS rank_sum
-FROM ranks_lp""",
         # KG quality checks (kgpipe.quality): functional-predicate
         # violations, host-level domain/range namespace signatures, minority
         # signature flagging (two planted anomalies mirror q_dr_violations),
@@ -3658,20 +3241,6 @@ SELECT conv_id, turn_idx, begin, "end", concept_id, score FROM (
     ORDER BY score DESC, concept_id ASC) AS rk
   FROM scf)
 WHERE rk = 1""",
-        # PRA-style length-2 path-type features with the two_hop hub
-        # guard (kgpipe.kgtrain.pra_path_features)
-        "pra_features": f"""
-{_SQL_TRIPLES},
-e_p AS MATERIALIZED (SELECT DISTINCT subj, pred, obj FROM tri),
-eu AS (SELECT DISTINCT subj, obj FROM e_p),
-okm AS (SELECT subj FROM eu GROUP BY subj HAVING count(*) <= 100000)
-SELECT e1.subj, e2.obj, e1.pred AS pred1, e2.pred AS pred2,
-       count(DISTINCT e1.obj)::bigint AS n_paths
-FROM e_p e1
-JOIN e_p e2 ON e1.obj = e2.subj
-JOIN okm ON e2.subj = okm.subj
-WHERE e2.obj <> e1.subj
-GROUP BY 1, 2, 3, 4""",
         # same-role near-duplicate turn pairs (retry/loop detection;
         # kgpipe.convops.turn_retries at 75%)
         "turn_retries": """
@@ -3867,16 +3436,6 @@ SELECT (SELECT count(*) FROM bq_c)::bigint AS n_cand,
        (SELECT count(*) FROM bq_g)::bigint AS n_gold,
        (SELECT count(*) FROM bq_g g JOIN bq_c c
          ON g.a = c.a AND g.b = c.b)::bigint AS n_matched""",
-        # entity-mention training contexts: ±30 chars around each span
-        # (kgpipe.kgtrain.mention_contexts over unique-turn-key
-        # transcripts; substr arithmetic identical in both engines)
-        "mention_contexts": f"""WITH {_SQL_CT_MENTIONS.lstrip()}
-SELECT m.conv_id, m.turn_idx, m.concept_id, m.begin, m."end",
-       substr(t.text, greatest(m.begin - 29, 1),
-              least(m.begin, 30)) AS left_ctx,
-       substr(t.text, m."end" + 1, 30) AS right_ctx
-FROM mentions m JOIN transcripts t
-  ON m.conv_id = t.conv_id AND m.turn_idx = t.turn_idx""",
         # initialism abbreviation mining (kgpipe.textops.abbreviations,
         # the deterministic Schwartz–Hearst initials subset) with one
         # valid k=2, one valid k=3, and one mismatched negative injected
@@ -4331,19 +3890,6 @@ SELECT conv_id, turn_idx,
                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))::int
          AS session_idx
 FROM lagd""",
-        # header probe over constructed P5 payloads: the oracle recomputes
-        # the probe's answer from the same doc_id arithmetic the payload
-        # was built with (parse == construction)
-        "media_probe": """
-WITH dims AS (
-  SELECT doc_id, (doc_id % 16 + 1)::int AS w, (doc_id % 8 + 1)::int AS h
-  FROM documents)
-SELECT doc_id::varchar AS media_id,
-       'pnm' AS format, w AS width, h AS height,
-       (length('P5 ' || w::varchar || ' ' || h::varchar || ' 255') + 1
-          + w * h)::bigint AS n_bytes,
-       NULL::varchar AS error
-FROM dims""",
         # session-membership triples over the same sessionize window
         "session_triples": """
 WITH ct AS (
@@ -4519,9 +4065,4 @@ SELECT conv_id, clean,
        (13 + length(conv_id))::int AS first_raw,
        (length(raw_text) - length(clean))::int AS n_removed
 FROM c""",
-        "media_features": """
-SELECT doc_id::varchar AS media_id, 'image' AS modality,
-       strlen(text)::bigint AS n_bytes,
-       substr(sha256(text), 1, 32) AS feat_hex
-FROM documents""",
     }

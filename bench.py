@@ -178,10 +178,9 @@ def run_default(reps: int | None = None) -> None:
 
             # headline 4: oracle-suite queries at the bench SF
             for name in ["mention_detect", "cooccurrence", "minhash_pairs",
-                         "cosine_topk", "lineitem_pricing", "dedup_exact",
+                         "cosine_topk", "dedup_exact",
                          "graph_triangles", "ego_network", "asof_events",
-                         "closure", "bfs_dist", "n2v_walks", "lp_ranks",
-                         "local_clustering"]:
+                         "closure", "bfs_dist", "local_clustering"]:
                 timed(name, lambda n=name: qs[n](spark, SF_DIR).count())
 
             # headline 5: PageRank over the sf triple graph (iterative/

@@ -14,10 +14,10 @@ Scale shape: token document frequencies are one aggregation; rarest-k
 selection is a per-record window over the token explode; the candidate
 join is an equi-join on (token) between two id-sorted copies; exact
 Jaccard verification touches only candidate ids.  A hot-token cap
-(``max_block``, mirroring the MinHash hot-bucket cap of
-kgpipe.textops.minhash_lsh_pairs) bounds every block, so candidates are
-O(n · block_tokens · max_block) — never O(n²) — and the verify join
-carries token arrays only for surviving candidates.
+(``max_block``: a token held by more records than that forms no block)
+bounds every block, so candidates are O(n · block_tokens · max_block) —
+never O(n²) — and the verify join carries token arrays only for
+surviving candidates.
 """
 
 from __future__ import annotations
@@ -58,9 +58,9 @@ def label_match_pairs(
     Jaccard >= threshold must share >= ceil(t*k) tokens per side, so its
     order-smallest common token falls inside BOTH prefixes — zero false
     negatives from blocking itself.  The one deliberate recall trade is
-    ``max_block``: tokens hotter than it are excluded from prefixes
-    (mirroring the MinHash hot-bucket cap), bounding every block and
-    keeping candidates O(n · prefix · max_block) instead of O(n²).
+    ``max_block``: tokens hotter than it are excluded from prefixes,
+    bounding every block and keeping candidates O(n · prefix · max_block)
+    instead of O(n²).
     """
     toks = df.select(
         F.col(id_col).alias("id"),

@@ -18,7 +18,7 @@ power-iteration references.
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, Window, functions as F
 
@@ -51,6 +51,29 @@ def _edges(triples: DataFrame, checkpoint: bool = True) -> DataFrame:
     in kgpipe.canon.connected_components)."""
     e = triples.select("subj", "obj").distinct()
     return e.localCheckpoint(eager=True) if checkpoint else e
+
+
+def _fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    max_iters: int,
+) -> DataFrame:
+    """Iterate ``state = step(state)`` for at most ``max_iters`` rounds.
+    Every state is ``localCheckpoint``ed eagerly (plan depth stays O(1))
+    and counted; the loop stops as soon as a round leaves the row count
+    unchanged.  ``step`` must move the count one way only (a closure
+    that only adds pairs, a peel that only drops nodes), so an unchanged
+    count is the fixpoint and ``max_iters`` is a bound, not a cost floor.
+    """
+    state = state.localCheckpoint(eager=True)
+    n = state.count()
+    for _ in range(max_iters):
+        state = step(state).localCheckpoint(eager=True)
+        m = state.count()
+        if m == n:
+            break
+        n = m
+    return state
 
 
 def degree_topk(triples: DataFrame, k: int = 20) -> DataFrame:
@@ -96,8 +119,7 @@ def _mid_bounded_edges(e: DataFrame, max_mid_out: Optional[int]) -> DataFrame:
     tiny aggregation rather than a ``DataFrame.observe`` riding this
     plan, because a CollectMetrics node upstream of the final distinct
     aggregate does not surface its metrics row reliably (observed
-    empirically on Spark 4.1; the MinHash cap, whose downstream has no
-    distinct aggregate, does use the observe seam)."""
+    empirically on Spark 4.1)."""
     if max_mid_out is None:
         return e
     small_mids = (
@@ -357,64 +379,31 @@ def ego_network(
     neighborhood — duplicate (subj, pred, obj) triples collapse to one
     row with the minimum hop.
 
-    Frontier expansion by semi-join, one round per hop (hops is small
-    and fixed — 1–3 in practice); the triple set and each frontier are
-    localCheckpointed so plan depth stays constant.  Frontiers are
-    entity-id sets (tiny next to the edge set), so at cluster scale
-    every round is one broadcast-capable equi-join.  ``max_frontier``
-    (default 5M) is the hub guard: expanding through a celebrity entity
-    can make the next frontier graph-sized, at which point "the ego net"
-    is no longer a subgraph worth materializing — if a frontier exceeds
-    the bound the call fails fast with ``ValueError`` (the frontier is
-    already checkpointed, so the size check is one cheap count) instead
-    of silently joining a graph-scale frontier.  Pass ``None`` to opt
-    out explicitly.
+    The distances come from ``bfs_distances`` over ``hops - 1`` rounds
+    (hops is small and fixed — 1–3 in practice); the triple set is
+    localCheckpointed once and joined against the distance table from
+    both ends.  ``max_frontier`` (default 5M) is the hub guard:
+    expanding through a celebrity entity can make the next frontier
+    graph-sized, at which point "the ego net" is no longer a subgraph
+    worth materializing — if a frontier exceeds the bound the call fails
+    fast with ``ValueError`` instead of silently joining a graph-scale
+    frontier.  Pass ``None`` to opt out explicitly.
     """
     if hops < 1:
         raise ValueError(f"hops must be >= 1, got {hops}")
     e = triples.select("subj", "pred", "obj").localCheckpoint(eager=True)
-    dist = e.sparkSession.createDataFrame(
-        [(entity, 0)], "id string, d int"
-    ).localCheckpoint(eager=True)
-    frontier = dist
-    for h in range(1, hops):
-        fwd = e.join(
-            frontier.withColumnRenamed("id", "subj"), "subj", "left_semi"
-        ).select(F.col("obj").alias("id"))
-        step = fwd
-        if not directed:
-            bwd = e.join(
-                frontier.withColumnRenamed("id", "obj"), "obj", "left_semi"
-            ).select(F.col("subj").alias("id"))
-            step = fwd.unionAll(bwd)
-        frontier = (
-            step.distinct()
-            .join(dist.select("id"), "id", "left_anti")
-            .select("id", F.lit(h).alias("d"))
-            .localCheckpoint(eager=True)
-        )
-        if max_frontier is not None:
-            n_frontier = frontier.count()
-            if n_frontier > max_frontier:
-                raise ValueError(
-                    f"ego_network frontier at hop {h} has {n_frontier} "
-                    f"entities (> max_frontier={max_frontier}); the seed "
-                    "reaches a hub — raise max_frontier explicitly (or pass "
-                    "None) if materializing a graph-scale neighborhood is "
-                    "intended"
-                )
-        dist = dist.unionAll(frontier).localCheckpoint(eager=True)
+    dist = bfs_distances(e, [entity], hops - 1, directed, max_frontier)
     out = e.join(
-        dist.withColumnRenamed("id", "subj"), "subj"
-    ).select("subj", "pred", "obj", (F.col("d") + 1).alias("hop"))
+        dist.withColumnRenamed("entity", "subj"), "subj"
+    ).select("subj", "pred", "obj", (F.col("dist") + 1).alias("hop"))
     if directed:
         return (
             out.groupBy("subj", "pred", "obj")
             .agg(F.min("hop").cast("int").alias("hop"))
         )
     rev = e.join(
-        dist.select(F.col("id").alias("obj"), "d"), "obj"
-    ).select("subj", "pred", "obj", (F.col("d") + 1).alias("hop"))
+        dist.withColumnRenamed("entity", "obj"), "obj"
+    ).select("subj", "pred", "obj", (F.col("dist") + 1).alias("hop"))
     return (
         out.unionAll(rev)
         .groupBy("subj", "pred", "obj")
@@ -434,15 +423,15 @@ def bfs_distances(
     dist 0; unreachable entities are absent).  ``directed=True`` follows
     subj→obj edges only; the default measures over undirected edges.
 
-    Level-synchronous BFS by frontier semi-join — the same shape as
-    ``ego_network`` but multi-seed and returning the distance table
-    itself (the input to distance-bucketed features / locality joins).
+    Level-synchronous BFS by frontier semi-join, returning the distance
+    table itself (the input to distance-bucketed features / locality
+    joins, and to ``ego_network``).
     One round per hop over the distinct edge set; frontiers are entity-id
     sets joined as semi-joins (broadcast-capable at cluster scale), each
     round ``localCheckpoint``ed so plan depth stays O(1), with the empty-
     frontier early stop making ``max_hops`` a bound, not a cost floor.
-    ``max_frontier`` is the same fail-fast hub guard as ``ego_network``
-    (a frontier beyond it means the BFS has gone graph-scale).
+    ``max_frontier`` is a fail-fast hub guard (a frontier beyond it means
+    the BFS has gone graph-scale).
     """
     if max_hops < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
@@ -474,9 +463,10 @@ def bfs_distances(
             break
         if max_frontier is not None and n_frontier > max_frontier:
             raise ValueError(
-                f"bfs_distances frontier at hop {h} has {n_frontier} "
-                f"entities (> max_frontier={max_frontier}); raise it (or "
-                "pass None) if a graph-scale sweep is intended"
+                f"frontier at hop {h} has {n_frontier} entities "
+                f"(> max_frontier={max_frontier}); the seeds reach a hub — "
+                "raise max_frontier (or pass None) if a graph-scale "
+                "neighborhood is intended"
             )
         dist = dist.unionAll(frontier).localCheckpoint(eager=True)
     return dist
@@ -518,25 +508,21 @@ def k_core(triples: DataFrame, k: int = 2, iters: int = 8) -> DataFrame:
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     und = _und_edges(triples)
-    alive = und.select(F.col("a").alias("id")).distinct()
-    alive = alive.localCheckpoint(eager=True)
-    n_alive = alive.count()
-    for _ in range(iters):
+
+    def peel(alive: DataFrame) -> DataFrame:
         induced = und.join(
             alive.withColumnRenamed("id", "a"), "a", "left_semi"
         ).join(alive.withColumnRenamed("id", "b"), "b", "left_semi")
-        nxt = (
+        return (
             induced.groupBy(F.col("a").alias("id"))
             .agg(F.count(F.lit(1)).alias("d"))
             .filter(F.col("d") >= k)
             .select("id")
-            .localCheckpoint(eager=True)
         )
-        n_nxt = nxt.count()
-        alive = nxt
-        if n_nxt == n_alive:
-            break
-        n_alive = n_nxt
+
+    alive = _fixpoint(
+        und.select(F.col("a").alias("id")).distinct(), peel, iters
+    )
     final = und.join(
         alive.withColumnRenamed("id", "a"), "a", "left_semi"
     ).join(alive.withColumnRenamed("id", "b"), "b", "left_semi")

@@ -37,6 +37,7 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from .graph import _fixpoint
 from .triples import RDF_TYPE
 
 __all__ = ["transitive_closure", "rdfs_entail", "match_pattern"]
@@ -65,23 +66,19 @@ def transitive_closure(
         edges.select(F.col(src).alias("node"), F.col(dst).alias("anc"))
         .filter(F.col("node").isNotNull() & F.col("anc").isNotNull())
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    closure = e
-    n = closure.count()
-    for _ in range(max_iters):
-        stepped = (
-            closure.alias("l")
-            .join(closure.alias("r"), F.col("l.anc") == F.col("r.node"))
-            .select(F.col("l.node").alias("node"), F.col("r.anc").alias("anc"))
-        )
-        nxt = closure.unionAll(stepped).distinct().localCheckpoint(eager=True)
-        m = nxt.count()
-        closure = nxt
-        if m == n:
-            break
-        n = m
-    return closure
+    return _fixpoint(e, _double, max_iters)
+
+
+def _double(pairs: DataFrame) -> DataFrame:
+    """One doubling round: ``pairs`` plus every two-pair concatenation
+    ``(node, mid) · (mid, anc)``, distinct."""
+    stepped = (
+        pairs.alias("l")
+        .join(pairs.alias("r"), F.col("l.anc") == F.col("r.node"))
+        .select(F.col("l.node").alias("node"), F.col("r.anc").alias("anc"))
+    )
+    return pairs.unionAll(stepped).distinct()
 
 
 def closure_delta(
@@ -122,23 +119,11 @@ def closure_delta(
     delta = pre.unionAll(
         pre.alias("l").join(c.alias("r"), F.col("l.anc") == F.col("r.node"))
         .select(F.col("l.node").alias("node"), F.col("r.anc").alias("anc"))
-    ).distinct().localCheckpoint(eager=True)
+    ).distinct()
     # multi-Δ paths: doubling over the Δ-derived set only (each element
     # already absorbs old-closure runs at both ends, so concatenation at
     # the shared endpoint covers every interleaving)
-    n = delta.count()
-    for _ in range(max_iters):
-        stepped = (
-            delta.alias("l")
-            .join(delta.alias("r"), F.col("l.anc") == F.col("r.node"))
-            .select(F.col("l.node").alias("node"), F.col("r.anc").alias("anc"))
-        )
-        nxt = delta.unionAll(stepped).distinct().localCheckpoint(eager=True)
-        m = nxt.count()
-        delta = nxt
-        if m == n:
-            break
-        n = m
+    delta = _fixpoint(delta, _double, max_iters)
     return c.unionAll(delta).distinct()
 
 
@@ -440,12 +425,12 @@ def path_rule_stats(
     Surfaces rules like "denotes/cooccursWith => denotes" that KG
     completion can then apply.
 
-    Same mid-guarded 2-path join as ``kgtrain.pra_path_features``
-    (mids with entity fan-out > ``max_mid_out`` dropped before the
-    join, default on), then ONE distinct on (x, y, p1, p2) — so the
-    rule aggregates never see per-mid path multiplicity — one
-    (x, y)-keyed join against the direct edge set (fan-out bounded by
-    the predicate vocabulary), and two key-width aggregates.
+    A mid-guarded 2-path join (mids with entity fan-out >
+    ``max_mid_out`` dropped before the join, default on), then ONE
+    distinct on (x, y, p1, p2) — so the rule aggregates never see
+    per-mid path multiplicity — one (x, y)-keyed join against the
+    direct edge set (fan-out bounded by the predicate vocabulary), and
+    two key-width aggregates.
     """
     e, pairs = _path_pairs(triples, max_mid_out)
     tot = pairs.groupBy("pred1", "pred2").agg(
