@@ -1427,27 +1427,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return asof_join(clicks, purch, on="user_id", ts="ts",
                          value_cols=["pval"])
 
-    def q_stream_latest(spark, sf_dir):
-        # streaming/batch parity: an AvailableNow incremental upsert of
-        # the events table into the snapshot-committed state store must
-        # hash against the batch latest-per-key SQL (latest-wins is
-        # associative + commutative given the deterministic tie-break,
-        # so micro-batch boundaries cannot change the result)
-        import tempfile
-
-        from kgpipe.streaming import stream_latest_state
-
-        base = tempfile.mkdtemp(prefix="kgpipe_stream_latest_")
-        in_dir = f"{base}/in"
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-            "user_id", "event_type", "props", "ts")
-        ev.repartition(4).write.mode("overwrite").parquet(in_dir)
-        return stream_latest_state(
-            spark, in_dir, f"{base}/state", f"{base}/ckpt",
-            keys=("user_id", "event_type"), ts="ts",
-            max_files_per_trigger=2,
-        )
-
     def q_latest_state(spark, sf_dir):
         from kgpipe.temporal import latest_by_key
 
@@ -1846,71 +1825,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .alias("n_removed"),
         )
 
-    def q_stream_triples(spark, sf_dir):
-        # streaming/batch parity contract (the resume-equivalence the
-        # reference's run catalog guarantees): an AvailableNow
-        # stream_triples run over the same transcripts must hash against
-        # the batch kg_triples oracle for the stateless triple families
-        # (denotes + partOf + role + conv rdf:type; windowed co-occurrence
-        # is stateful and lives in stream_conv_pairs).
-        import tempfile
-
-        from kgpipe.streaming import stream_triples
-        from kgpipe.triples import RDF_TYPE
-
-        base = tempfile.mkdtemp(prefix="kgpipe_stream_triples_")
-        in_dir, out_dir, ckpt = (f"{base}/in", f"{base}/out", f"{base}/ckpt")
-        _transcripts(spark, sf_dir).write.mode("overwrite").parquet(in_dir)
-        stream_triples(spark, in_dir, _tech_dictionary(spark), out_dir,
-                       ckpt, configs={"TECH": TECH_CFG})
-        got = spark.read.parquet(out_dir).select(
-            "subj", "pred", "obj", "conv_id", "turn_idx"
-        )
-        # conv rdf:type recurs per turn/batch on the stateless stream (the
-        # documented at-least-once slice readers dedupe); dedupe it here
-        # the way a consumer would
-        return got.filter(F.col("pred") == RDF_TYPE).dropDuplicates().unionByName(
-            got.filter(F.col("pred") != RDF_TYPE)
-        )
-
-    def q_stream_cooc(spark, sf_dir):
-        # STATEFUL streaming/batch parity: the applyInPandasWithState
-        # windowed co-occurrence operator, run as two micro-batches split
-        # by turn range (maxFilesPerTrigger=1, mtime-ordered), must hash
-        # against the batch pair semantics — distinct per-turn concept
-        # sets, |Δturn| <= 3.  Pairs that straddle the batch boundary can
-        # only come from the rolled-forward per-conversation state, so the
-        # hash match covers the cross-batch buffer, not just the in-batch
-        # pairing.
-        import tempfile
-
-        from kgpipe.streaming import stream_conv_pairs
-
-        base = tempfile.mkdtemp(prefix="kgpipe_stream_cooc_")
-        t = _transcripts(spark, sf_dir)
-        # batch 1 = turns < 12, batch 2 = turns >= 12 (per-conversation
-        # in-order delivery — the operator's exactly-once boundary
-        # guarantee is for ordered arrival; see stream_conv_pairs)
-        t.filter(F.col("turn_idx") < 12).coalesce(1).write.parquet(
-            f"{base}/in/b1")
-        t.filter(F.col("turn_idx") >= 12).coalesce(1).write.parquet(
-            f"{base}/in/b2")
-        stream = (
-            spark.readStream.schema(t.schema)
-            .option("maxFilesPerTrigger", 1).parquet(f"{base}/in/*")
-        )
-        pairs = stream_conv_pairs(stream, _tech_dictionary(spark),
-                                  cooc_window=3, configs={"TECH": TECH_CFG})
-        (
-            pairs.writeStream.format("parquet")
-            .option("path", f"{base}/out")
-            .option("checkpointLocation", f"{base}/ckpt")
-            .trigger(availableNow=True).outputMode("append").start()
-            .awaitTermination()
-        )
-        return spark.read.parquet(f"{base}/out").select(
-            "conv_id", "ta", "tb", "ca", "cb")
-
     def q_path_rules(spark, sf_dir):
         from kgpipe.infer import path_rule_stats
 
@@ -2125,8 +2039,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # round-2 driver artifact (sweep stopped at 50 entries), so they
         # must not sit at the tail of the dict
         "markup_strip": q_markup_strip,
-        "stream_triples": q_stream_triples,
-        "stream_cooc": q_stream_cooc,
         "mention_count_per_turn": q_mention_count_per_turn,
         "cooccurrence": q_cooccurrence,
         "cooc_stats": q_cooc_stats,
@@ -2175,7 +2087,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "resolve_functional": q_resolve_functional,
         "asof_events": q_asof_events,
         "latest_state": q_latest_state,
-        "stream_latest": q_stream_latest,
         "validity_state": q_validity_state,
         "minhash_cross": q_minhash_cross,
         "label_match": q_label_match,
@@ -3646,14 +3557,6 @@ FROM ivf a JOIN ivf b
 WHERE a.props < b.props
   AND (b.valid_to IS NULL OR a.valid_from < b.valid_to)
   AND (a.valid_to IS NULL OR b.valid_from < a.valid_to)""",
-        # streaming upsert parity: final state == batch latest-per-key
-        "stream_latest": """
-SELECT user_id, event_type, props, ts FROM (
-  SELECT user_id, event_type, props, ts,
-         row_number() OVER (PARTITION BY user_id, event_type
-                            ORDER BY ts DESC, props DESC) AS rk
-  FROM events)
-WHERE rk = 1""",
         # SCD-2 validity ranges over the same key (lead window)
         "validity_state": """
 SELECT user_id, event_type, props, ts,
@@ -3956,64 +3859,6 @@ SELECT doc_id, shard, n_tokens,
        (floor(greatest(c - 1, c - n_tokens) / 64)
           - floor((c - n_tokens) / 64))::int AS n_splits
 FROM cum""",
-        # stream_triples = the stateless families of kg_triples (no t_cooc:
-        # windowed co-occurrence is the stateful stream_conv_pairs path)
-        "stream_triples": f"""
-WITH {_SQL_MENTIONS.lstrip()},
-conv AS (SELECT DISTINCT conv_id FROM transcripts),
-t_conv AS (
-  SELECT 'https://kg.example.org/conv/' || conv_id AS subj,
-         'http://www.w3.org/1999/02/22-rdf-syntax-ns#type' AS pred,
-         'http://purl.obolibrary.org/obo/IAO_0000310' AS obj,
-         conv_id, NULL::int AS turn_idx
-  FROM conv),
-t_part AS (
-  SELECT 'https://kg.example.org/conv/' || conv_id || '#t'
-           || turn_idx::varchar AS subj,
-         'http://purl.org/dc/terms/isPartOf' AS pred,
-         'https://kg.example.org/conv/' || conv_id AS obj,
-         conv_id, turn_idx
-  FROM transcripts),
-t_role AS (
-  SELECT 'https://kg.example.org/conv/' || conv_id || '#t'
-           || turn_idx::varchar AS subj,
-         'http://purl.org/kgpipe/hasRole' AS pred,
-         role AS obj, conv_id, turn_idx
-  FROM transcripts WHERE role IS NOT NULL),
-t_tool AS (
-  SELECT 'https://kg.example.org/conv/' || conv_id || '#t'
-           || turn_idx::varchar AS subj,
-         'http://purl.org/kgpipe/usedTool' AS pred,
-         tool AS obj, conv_id, turn_idx
-  FROM transcripts WHERE tool IS NOT NULL),
-t_denote AS (
-  SELECT 'https://kg.example.org/conv/' || conv_id || '#t'
-           || turn_idx::varchar AS subj,
-         'http://purl.org/kgpipe/denotes' AS pred,
-         'http://purl.obolibrary.org/obo/'
-           || replace(concept_id, ':', '_') AS obj,
-         conv_id, turn_idx
-  FROM mentions)
-SELECT * FROM t_conv UNION ALL SELECT * FROM t_part
-UNION ALL SELECT * FROM t_role UNION ALL SELECT * FROM t_tool
-UNION ALL SELECT * FROM t_denote""",
-        # stream_cooc = the stateful operator's pair semantics in SQL:
-        # distinct per-turn concept sets; cross-turn pairs once per
-        # (concept-in-earlier-turn, concept-in-later-turn) combination
-        # normalized to (least, greatest) — so a symmetric pair (both
-        # concepts in both turns) legitimately appears twice, exactly as
-        # the stream emits it; same-turn distinct pairs once
-        "stream_cooc": f"""
-WITH {_SQL_MENTIONS.lstrip()},
-tc AS (SELECT DISTINCT conv_id, turn_idx, concept_id FROM mentions)
-SELECT a.conv_id, a.turn_idx AS ta, b.turn_idx AS tb,
-       least(a.concept_id, b.concept_id) AS ca,
-       greatest(a.concept_id, b.concept_id) AS cb
-FROM tc a JOIN tc b
-  ON a.conv_id = b.conv_id
- AND ((b.turn_idx > a.turn_idx AND b.turn_idx - a.turn_idx <= 3
-       AND a.concept_id <> b.concept_id)
-      OR (b.turn_idx = a.turn_idx AND a.concept_id < b.concept_id))""",
         "lsh_topk": _lsh_topk_sql(),
         "ivf_topk": _IVF_TOPK_SQL,
         "ivf_centroids": _ivf_centroids_sql(),

@@ -4,7 +4,9 @@ Default: run the headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]; print ONE JSON line
 {"metric", "value", "unit": "sec", "queries": {...}, "sf", ...}.
 $SPARK_GRAFT_CPUS defaults to nproc; the line also carries "cpus" and
-"dictionary": {"source", "rows"}.
+"dictionary": {"source", "rows"}.  The KG rows run ``kgpipe.synth``
+transcripts against a dictionary that holds their planted terms; the run
+fails if detect finds no mention.
 
 --scaling: run the KG end-to-end job at two parallelism levels (local[8]
 vs local[32]) on identical synthetic input and report throughput at both
@@ -57,25 +59,40 @@ def _make_transcripts(spark, n_convs: int):
     return tdf, len(rows)
 
 
+def _planted_obo() -> str:
+    """OBO text of ``kgpipe.synth``'s planted terms: one term per concept,
+    its first surface the name and the others exact synonyms, so the
+    dictionary holds every term the synthetic transcripts plant."""
+    from kgpipe.synth import default_planted_terms
+
+    surfaces: dict[str, list[str]] = {}
+    for t in default_planted_terms():
+        surfaces.setdefault(t.concept_id, []).append(t.surface)
+    lines = ["format-version: 1.2", "ontology: kgpipe-synth-cl", ""]
+    for cid, (name, *synonyms) in surfaces.items():
+        lines += ["[Term]", f"id: {cid}", f"name: {name}", "namespace: cell"]
+        lines += [f'synonym: "{s}" EXACT []' for s in synonyms]
+        lines.append("")
+    return "\n".join(lines)
+
+
 def _dictionary(spark):
     """(dictionary frame, {"source", "rows"}): the reference's cl-basic.obo
-    when present, else the benchmark generator's seeded synthetic CL
-    ontology (``perfbench/gen.py``, 4 000 terms)."""
+    when present, else an OBO of ``kgpipe.synth``'s planted terms — the
+    terms ``_make_transcripts`` plants, so detect finds mentions."""
     from kgpipe.detect import build_dictionary_df
 
     if os.path.exists(CL_OBO):
         d = build_dictionary_df(spark, {"CL": CL_OBO})
         source = CL_OBO
     else:
-        from perfbench import gen
-
         # the build parses the file on the driver, so it can go right after
         with tempfile.TemporaryDirectory(prefix="kgpipe_bench_obo_") as tmp:
             path = os.path.join(tmp, "CL.obo")
             with open(path, "w", encoding="utf-8") as fh:
-                fh.write(gen.make_ontologies(seed=1)["CL"].obo)
+                fh.write(_planted_obo())
             d = build_dictionary_df(spark, {"CL": path})
-        source = "perfbench/gen.py synthetic CL ontology, seed 1"
+        source = "kgpipe.synth planted terms"
     return d, {"source": source, "rows": d.count()}
 
 
@@ -175,6 +192,11 @@ def run_default(reps: int | None = None) -> None:
                                        os.path.join(tmp, "triples_fused")))
             extras["n_mentions"] = timed(
                 "kg_detect", lambda: detect_mentions(tdf, d).count())
+            if not extras["n_mentions"]:
+                raise RuntimeError(
+                    "kg_detect found no mentions: the dictionary holds none"
+                    " of the input's terms, so the KG rows would time an"
+                    " empty detect")
 
             # headline 4: oracle-suite queries at the bench SF
             for name in ["mention_detect", "cooccurrence", "minhash_pairs",

@@ -15,6 +15,8 @@ ConceptMapper dictionary lookup (aggregate built at
   transcripts scan to the mentions output, no wide dependency, so it scales
   linearly with executors (the scaling-efficiency target);
 - Python cost is one call per Arrow batch (``mapInPandas``), never per row;
+  each turn is scanned by ``trie.scan_turn``, the one per-turn scan kernel
+  (NULL skip, one tokenisation across ontologies, turn-local dedup);
 - errors are quarantined per row into an ``error`` column instead of failing
   the task (the reference records per-document errors in its run catalog,
   ``RunCatalogAE.java:107-112``; we do the same per partition in
@@ -32,7 +34,7 @@ from . import schemas
 from .normalize import MatchConfig, config_for
 from .obo import dictionary_rows, parse_ontology
 from .session import local_frame
-from .trie import DictionaryTrie, pretokenize
+from .trie import DictionaryTrie, scan_turn
 
 
 def build_dictionary_df(
@@ -85,7 +87,7 @@ def collect_dictionary(dictionary: DataFrame) -> list[dict]:
     filtered/modified dictionary falls back to a real collect).
 
     Always returns fresh row dicts: the cached list feeds the trie build,
-    canonicalization, and streaming consumers, so handing out the shared
+    canonicalization and Mayla's label map, so handing out the shared
     objects would let one caller's mutation corrupt every other consumer."""
     rows = getattr(dictionary, "_kgpipe_local_rows", None)
     if rows is not None:
@@ -97,7 +99,6 @@ def detect_mentions(
     transcripts: DataFrame,
     dictionary: DataFrame,
     configs: Optional[dict[str, MatchConfig]] = None,
-    drop_duplicates: bool = True,
     local_rows: Optional[list[dict]] = None,
 ) -> DataFrame:
     """transcripts × dictionary → mentions.
@@ -105,11 +106,8 @@ def detect_mentions(
     Mentions carry turn-relative char offsets (per-row invariant: per-turn
     text equality under stable turn ordering — offsets never depend on
     neighbouring turns, so partitioning is free to split conversations).
-
-    ``drop_duplicates`` dedupes identical (concept, begin, end) annotations
-    turn-locally inside the scan (narrow; no shuffle).  It assumes the input
-    invariant that (conv_id, turn_idx) rows are unique — duplicated input
-    rows are the caller's bug, not annotation duplicates.
+    Each turn goes through ``trie.scan_turn``, which drops identical
+    (concept, begin, end) annotations turn-locally (narrow; no shuffle).
     """
     spark = transcripts.sparkSession
     if local_rows is None:
@@ -118,7 +116,7 @@ def detect_mentions(
     bc = spark.sparkContext.broadcast(tries)
 
     def scan_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tries_local = bc.value
+        tries_local = tuple(bc.value.values())
         for pdf in batches:
             out = {
                 "conv_id": [], "turn_idx": [], "ontology": [], "concept_id": [],
@@ -127,46 +125,22 @@ def detect_mentions(
             for conv_id, turn_idx, text in zip(
                 pdf["conv_id"].values, pdf["turn_idx"].values, pdf["text"].values
             ):
-                if text is None:
-                    continue
-                # DuplicateAnnotationRemovalFilter_AE analogue
-                # (EntityFinder.java:104): identical annotations can only
-                # arise within one turn's scan (the dedup key contains
-                # conv_id+turn_idx, and a turn is processed by exactly one
-                # input row), so dedup is turn-local — a per-turn seen-set
-                # here keeps the whole detect stage NARROW instead of
-                # paying a corpus-wide dropDuplicates shuffle, and is
-                # deterministic (first match in scan order wins).
-                seen: set = set()
                 try:
-                    # tokenize once per turn across ontologies (chunking/
-                    # raw tokens are config-independent)
-                    pretok = (pretokenize(text)
-                              if len(tries_local) > 1 else None)
-                    for trie in tries_local.values():
-                        for ont, cid, b, e, cov in trie.scan_text(text, pretok):
-                            if drop_duplicates:
-                                key = (cid, b, e)
-                                if key in seen:
-                                    continue
-                                seen.add(key)
-                            out["conv_id"].append(conv_id)
-                            out["turn_idx"].append(int(turn_idx))
-                            out["ontology"].append(ont)
-                            out["concept_id"].append(cid)
-                            out["begin"].append(b)
-                            out["end"].append(e)
-                            out["covered_text"].append(cov)
-                            out["error"].append(None)
+                    hits = scan_turn(text, tries_local)
                 except Exception as exc:  # quarantine, don't fail the task
+                    hits = [(None, "__ERROR__", -1, -1, None)]
+                    error = f"{type(exc).__name__}: {exc}"
+                else:
+                    error = None
+                for ont, cid, b, e, cov in hits:
                     out["conv_id"].append(conv_id)
                     out["turn_idx"].append(int(turn_idx))
-                    out["ontology"].append(None)
-                    out["concept_id"].append("__ERROR__")
-                    out["begin"].append(-1)
-                    out["end"].append(-1)
-                    out["covered_text"].append(None)
-                    out["error"].append(f"{type(exc).__name__}: {exc}")
+                    out["ontology"].append(ont)
+                    out["concept_id"].append(cid)
+                    out["begin"].append(b)
+                    out["end"].append(e)
+                    out["covered_text"].append(cov)
+                    out["error"].append(error)
             yield pd.DataFrame(out)
 
     return transcripts.select("conv_id", "turn_idx", "text").mapInPandas(

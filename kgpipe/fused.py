@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, functions as F
 from .canon import components_from_rows
 from .detect import build_tries, collect_dictionary
 from .disambig import mayla_keep_py
-from .trie import pretokenize
+from .trie import scan_turn
 from .normalize import MatchConfig
 from .triples import (
     CONV_NS,
@@ -251,7 +251,8 @@ def fused_conv_triples(
             canon_label.setdefault(r["concept_id"], r.get("canonical"))
         mayla_cfg = (mayla_concept_freq, mayla_default_freq, canon_label,
                      mayla_freq_scope == "conversation")
-    bc = spark.sparkContext.broadcast((tries, comp_map, mayla_cfg))
+    bc = spark.sparkContext.broadcast(
+        (tuple(tries.values()), comp_map, mayla_cfg))
 
     def _process_conv(conv_id, turns, emit, tries_l, comp, mcfg) -> None:
         """One conversation: *turns* is ``[(ti, text)]`` already in turn
@@ -266,36 +267,27 @@ def fused_conv_triples(
         triples and co-occurrence pairs (plus quarantined error rows).
         This also narrows the shuffle: role/tool never leave the scan side.
         """
-        turns = [(ti, text) for ti, text in turns
-                 if text is not None
-                 and not (isinstance(text, float) and pd.isna(text))]
         # detect per turn (turn-relative offsets — the per-turn text
-        # equality invariant), dedupe identical (turn, concept, span).
+        # equality invariant; scan_turn skips missing text and dedupes
+        # identical (concept, span) hits within the turn)
         mentions: list[tuple[int, str, int, int, str]] = []
-        seen: set = set()
         # conversation-scope Mayla frequency text: the turns joined in
         # (turn_idx, text) order — identical to the staged
         # mayla_filter(freq_scope='conversation') count
         conv_text = None
         if mcfg is not None and mcfg[3]:
-            conv_text = "\n".join(t for _, t in sorted(turns))
+            conv_text = "\n".join(t for _, t in sorted(
+                (ti, t) for ti, t in turns if isinstance(t, str)))
         for ti, text in turns:
-            pretok = pretokenize(text) if len(tries_l) > 1 else None
-            for trie in tries_l.values():
-                for ont, cid, b, e, cov in trie.scan_text(text, pretok):
-                    key = (ti, cid, b, e)
-                    if key not in seen:
-                        seen.add(key)
-                        # Mayla after turn-local dedup, before TF
-                        # disambiguation — the staged chain's order
-                        # (pipeline.build_mentions)
-                        if mcfg is not None and not mayla_keep_py(
-                            cov,
-                            conv_text if conv_text is not None else text,
-                            ont, mcfg[2].get(cid), mcfg[0], mcfg[1],
-                        ):
-                            continue
-                        mentions.append((ti, cid, b, e, cov))
+            for ont, cid, b, e, cov in scan_turn(text, tries_l):
+                # Mayla after turn-local dedup, before TF disambiguation —
+                # the staged chain's order (pipeline.build_mentions)
+                if mcfg is not None and not mayla_keep_py(
+                    cov, conv_text if conv_text is not None else text,
+                    ont, mcfg[2].get(cid), mcfg[0], mcfg[1],
+                ):
+                    continue
+                mentions.append((ti, cid, b, e, cov))
 
         # conversation-local TF disambiguation: for span-ambiguous mentions
         # keep the concept with the highest conv-level frequency, ties to

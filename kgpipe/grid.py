@@ -217,7 +217,7 @@ def run_grid_fused(
     from pyspark.sql import functions as F
 
     from .obo import dictionary_rows, parse_obo
-    from .trie import DictionaryTrie, pretokenize
+    from .trie import DictionaryTrie, pretokenize, scan_turn
 
     if span != "STRICT":
         raise ValueError("run_grid_fused evaluates STRICT span only")
@@ -239,20 +239,14 @@ def run_grid_fused(
             for conv_id, turn_idx, text in zip(
                 pdf["conv_id"], pdf["turn_idx"], pdf["text"]
             ):
-                if text is None:
-                    continue
                 ti = int(turn_idx)
                 # tokenize ONCE per turn for the whole permutation space
                 # (chunking/raw tokens are knob-independent) — at 576
-                # permutations this removes 575 re-tokenizations per turn
-                pretok = pretokenize(text)
+                # permutations this removes 575 re-tokenizations per turn;
+                # scan_turn returns [] for a missing (NULL/NaN) turn
+                pretok = pretokenize(text) if isinstance(text, str) else None
                 for idx, trie in tries_local.items():
-                    seen = set()
-                    for _, cid, b, e, _cov in trie.scan_text(text, pretok):
-                        key = (cid, b, e)
-                        if key in seen:
-                            continue
-                        seen.add(key)
+                    for _, cid, b, e, _cov in scan_turn(text, (trie,), pretok):
                         out["param_idx"].append(idx)
                         out["conv_id"].append(conv_id)
                         out["turn_idx"].append(ti)

@@ -33,7 +33,10 @@ DICTIONARY = T.StructType(
 
 MENTIONS = T.StructType(
     [
-        T.StructField("conv_id", T.StringType(), False),
+        # nullable: detect passes the input's conv_id through, and a turn
+        # with no conversation still gets its mentions (kgpipe.lineage
+        # buckets a NULL conv_id like any other)
+        T.StructField("conv_id", T.StringType(), True),
         T.StructField("turn_idx", T.IntegerType(), False),
         T.StructField("ontology", T.StringType(), True),
         T.StructField("concept_id", T.StringType(), False),

@@ -38,11 +38,6 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
-        # Spark 4.1's ChecksumCheckpointFileManager deadlocks on local-FS
-        # state-store commits under applyInPandasWithState (awaitResult in
-        # createWithChecksum never completes); checksums are for detecting
-        # checkpoint corruption on remote object stores, safe to disable here
-        .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
         .config("spark.driver.memory", os.environ.get("KGPIPE_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

@@ -1,4 +1,8 @@
-"""Temporal operators: distributed as-of joins over keyed event streams.
+"""Temporal operators over keyed event tables, all batch: distributed
+as-of joins, current-state and point-in-time views (``latest_by_key``,
+``state_at``, ``validity_intervals``), interval conflicts and concept
+trends.  An incremental run resumes through kgpipe.lineage; this module
+keeps no state of its own.
 
 Spark has no built-in as-of join (pandas ``merge_asof`` is single-node;
 Flink/kdb expose it natively).  The classic scalable formulation is a
@@ -177,54 +181,6 @@ def validity_intervals(
         F.col(ts).alias("valid_from"),
         F.lead(ts).over(w).alias("valid_to"),
     )
-
-
-def write_state_snapshot(df: DataFrame, path: str) -> str:
-    """Commit ``df`` as the next ``snap-N`` under ``path`` with the same
-    atomic local-FS pointer protocol as the triple-table sink
-    (kgpipe.triples.write_triples_snapshot): data lands in
-    ``snap-N.inprogress``, the rename + ``_latest`` ``os.replace`` are
-    the commit points, a crash at any step leaves readers on the
-    previous complete snapshot.  Generic (no bucket column required) —
-    the state store for streaming upserts.  Returns the snapshot name.
-    """
-    import os
-    import shutil
-
-    from .triples import _require_local, committed_snapshot
-
-    path = _require_local(path)
-    os.makedirs(path, exist_ok=True)
-    prev = committed_snapshot(path)
-    n = int(prev.rsplit("-", 1)[1]) + 1 if prev else 1
-    staging = os.path.join(path, f"snap-{n}.inprogress")
-    if os.path.exists(staging):  # orphan of a crashed attempt
-        shutil.rmtree(staging)
-    df.write.mode("overwrite").parquet(staging)
-    final = os.path.join(path, f"snap-{n}")
-    if os.path.exists(final):  # committed names are never reused
-        shutil.rmtree(final)
-    os.rename(staging, final)
-    tmp = os.path.join(path, "_latest.tmp")
-    with open(tmp, "w") as fh:
-        fh.write(f"snap-{n}")
-    os.replace(tmp, os.path.join(path, "_latest"))
-    return f"snap-{n}"
-
-
-def read_state_snapshot(spark, path: str) -> DataFrame:
-    """Read the last COMMITTED state snapshot (see
-    ``write_state_snapshot``); raises FileNotFoundError before the first
-    commit."""
-    import os
-
-    from .triples import _require_local, committed_snapshot
-
-    p = _require_local(path)
-    snap = committed_snapshot(p)
-    if snap is None:
-        raise FileNotFoundError(f"no committed state snapshot under {p}")
-    return spark.read.parquet(os.path.join(p, snap))
 
 
 def temporal_conflicts(

@@ -5,7 +5,8 @@ lookup (aggregate built at ``ConceptMapperPipelineFactory.java:94-96``) as a
 pure-Python token trie that is built once on the driver from the dictionary
 DataFrame, pickled into a Spark broadcast variable, and scanned over Arrow
 batches of turn text inside ``mapInPandas`` (no per-row Python round trips —
-one Python call per batch; see kgpipe.detect).
+one Python call per batch; see kgpipe.detect).  ``scan_turn`` is the one
+per-turn scan: detect, the fused scan and the grid sweep all call it.
 
 Search semantics reproduce the SearchStrategy knob
 (``ConceptMapperEvalOutputCompiler.java:83-85``):
@@ -52,12 +53,46 @@ _END = 0  # int key cannot collide with str token keys
 def pretokenize(text: str) -> list[tuple[int, int, list[tuple[str, int, int]]]]:
     """Config-independent chunking + raw tokenization of *text*:
     ``[(chunk_begin, chunk_end, [(token, begin, end)])]`` with token
-    offsets chunk-relative.  Compute once per turn and pass to every
-    trie's ``scan_text`` when scanning multiple ontologies."""
+    offsets chunk-relative.  ``scan_turn`` computes it once per turn and
+    passes it to every trie's ``scan_text``."""
     return [
         (cb, ce, tokenize_with_offsets(text[cb:ce]))
         for cb, ce in chunk_spans(text)
     ]
+
+
+def scan_turn(
+    text, tries: Iterable[DictionaryTrie], pretok=None,
+) -> list[tuple[str, str, int, int, str]]:
+    """The per-turn scan every plan runs: mentions
+    ``[(ontology, concept_id, begin, end, covered_text)]`` of one turn's
+    *text* over *tries*, run in iteration order.
+
+    - NULL or NaN *text* (a missing turn) gives ``[]``.
+    - The turn is tokenised once for all tries (``pretokenize``), unless
+      the caller passes ``pretok``.
+    - Identical ``(concept_id, begin, end)`` hits are dropped, the first in
+      scan order wins: the DuplicateAnnotationRemovalFilter_AE analogue
+      (``EntityFinder.java:104``).  Identical annotations can only arise
+      within one turn's scan, so turn-local dedup keeps detect narrow
+      instead of paying a corpus-wide ``dropDuplicates`` shuffle, given
+      unique (conv_id, turn_idx) input rows.
+
+    Nothing is caught here: each caller quarantines errors at its own
+    grain (detect per turn, the fused scan per conversation)."""
+    if text is None or (isinstance(text, float) and text != text):
+        return []
+    if pretok is None:
+        pretok = pretokenize(text)
+    out: list[tuple[str, str, int, int, str]] = []
+    seen: set = set()
+    for trie in tries:
+        for hit in trie.scan_text(text, pretok):
+            key = hit[1:4]
+            if key not in seen:
+                seen.add(key)
+                out.append(hit)
+    return out
 
 
 class DictionaryTrie:

@@ -2,7 +2,8 @@
 denotes-triple precision and recall >= 0.95 against the planted gold,
 through ``run_pipeline`` on the staged plan (committed through lineage and
 a snapshot), the fused scan, and the ``max_turns_per_group`` side-table
-plan.  The corpus mixes the ``long_turns`` shape (plants from CL, GO_MF and
+plan; and mention precision and recall >= 0.95 per ontology on the staged
+``build_mentions``.  The corpus mixes the ``long_turns`` shape (plants from CL, GO_MF and
 PR, so each of their ``normalize.ONTOLOGY_CONFIGS`` entries is exercised,
 with planted negatives) and the ``resume`` shape (shared synonyms, so
 disambiguation and canonicalization decide the answer).  Nothing outside
@@ -104,3 +105,33 @@ def test_exact_conv_plan_accuracy(spark, tmp_path, corpus, monkeypatch):
     run_pipeline(spark, spark.createDataFrame(turns, T_SCHEMA), cfg, out)
     assert calls, "the run did not take _exact_conv_plan"
     _check(spark.read.parquet(out), gold)
+
+
+def test_mention_accuracy_per_ontology(spark, corpus):
+    """(conv, turn, begin, end, canonical concept) mentions of
+    ``pipeline.build_mentions`` against the planted gold, split by the
+    ontology of the concept: P/R >= 0.95 for each of CL, GO_MF and PR."""
+    from kgpipe.detect import build_dictionary_df
+    from kgpipe.pipeline import PipelineConfig, build_mentions
+
+    turns, gold, obo = corpus
+    ontology_of = {prefix: name for name, prefix, _, _ in
+                   load_perfbench_gen().ONTOLOGIES}
+
+    def by_ontology(tuples) -> dict:
+        out: dict = {}
+        for t in tuples:
+            out.setdefault(ontology_of[t[4].split(":")[0]], set()).add(t)
+        return out
+
+    cfg = PipelineConfig(obo_paths=obo)
+    mentions = build_mentions(spark.createDataFrame(turns, T_SCHEMA),
+                              build_dictionary_df(spark, obo), cfg)
+    mine = by_ontology(
+        tuple(r) for r in mentions.filter(F.col("error").isNull()).select(
+            "conv_id", "turn_idx", "begin", "end", "canonical_id").collect())
+    want = by_ontology(gold)
+    assert set(want) == {"CL", "GO_MF", "PR"}
+    for ont, gold_ont in sorted(want.items()):
+        p, r, _ = prf(mine.get(ont, set()), gold_ont)
+        assert p >= PR_MIN and r >= PR_MIN, (ont, p, r)

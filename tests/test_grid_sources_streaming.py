@@ -1,7 +1,5 @@
 from __future__ import annotations
 
-import os
-
 from conftest import MINI_OBO
 from kgpipe.grid import compile_results, param_grid, param_string, run_grid
 from kgpipe.sources import (
@@ -186,179 +184,6 @@ def test_load_catalog_metadata_join(spark):
     assert len(out["PMC1.nxml.gz"].dir1) == 2
 
 
-def test_stream_detect_incremental(spark, tmp_path):
-    """Structured-Streaming resume: a second AvailableNow run processes only
-    new files (engine checkpoint ≡ lineage anti-join semantics)."""
-    from kgpipe.detect import build_dictionary_df
-    from kgpipe.streaming import stream_detect
-
-    in_dir = tmp_path / "in"
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    in_dir.mkdir()
-    schema = ("conv_id string, turn_idx int, role string, text string,"
-              " tool string, ts timestamp")
-    spark.createDataFrame(
-        [("c1", 0, "user", "a neuron appears", None, None)], schema
-    ).write.parquet(str(in_dir / "batch1"))
-    d = build_dictionary_df(spark, {"CL": MINI_OBO})
-
-    stream_detect(spark, str(in_dir / "*"), d, out_dir, ckpt)
-    first = spark.read.parquet(out_dir).count()
-    assert first >= 1
-
-    spark.createDataFrame(
-        [("c2", 0, "user", "the interneuron waits", None, None)], schema
-    ).write.parquet(str(in_dir / "batch2"))
-    stream_detect(spark, str(in_dir / "*"), d, out_dir, ckpt)
-    rows = spark.read.parquet(out_dir)
-    assert rows.count() > first
-    assert rows.filter("conv_id = 'c1'").count() == first  # no reprocessing
-
-
-def test_stream_conv_pairs_stateful(spark, tmp_path):
-    """applyInPandasWithState: the per-conversation buffer finds pairs that
-    straddle a micro-batch boundary exactly once."""
-    from kgpipe.detect import build_dictionary_df
-    from kgpipe.streaming import stream_conv_pairs, stream_transcripts
-
-    in_dir = tmp_path / "sin"
-    out_dir = str(tmp_path / "sout")
-    ckpt = str(tmp_path / "sckpt")
-    in_dir.mkdir()
-    schema = ("conv_id string, turn_idx int, role string, text string,"
-              " tool string, ts timestamp")
-    # batch 1: turn 0 mentions neuron; batch 2: turn 1 mentions fibroblast
-    spark.createDataFrame(
-        [("c1", 0, "user", "a neuron appears", None, None)], schema
-    ).coalesce(1).write.parquet(str(in_dir / "b1"))
-    spark.createDataFrame(
-        [("c1", 1, "user", "then a fibroblast arrives", None, None)], schema
-    ).coalesce(1).write.parquet(str(in_dir / "b2"))
-    d = build_dictionary_df(spark, {"CL": MINI_OBO})
-
-    stream = spark.readStream.schema(
-        stream_transcripts(spark, str(in_dir / "*")).schema
-    ).option("maxFilesPerTrigger", 1).parquet(str(in_dir / "*"))
-    pairs = stream_conv_pairs(stream, d, cooc_window=3)
-    q = (
-        pairs.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .outputMode("append")
-        .start()
-    )
-    q.awaitTermination()
-    got = [
-        (r.conv_id, r.ta, r.tb, r.ca, r.cb)
-        for r in spark.read.parquet(out_dir).collect()
-    ]
-    # the cross-batch pair (turn 0 neuron, turn 1 fibroblast), exactly once
-    assert got.count(("c1", 0, 1, "CL:0000057", "CL:0000540")) == 1
-
-
-def test_stream_conv_pairs_state_cap(spark, tmp_path):
-    """Per-key state is bounded: with max_state_concepts=1, a concept-dense
-    turn stores only its sorted-first concept across batches (in-batch
-    pairing still sees the full set)."""
-    from kgpipe.detect import build_dictionary_df
-    from kgpipe.streaming import stream_conv_pairs, stream_transcripts
-
-    in_dir = tmp_path / "cin"
-    out_dir = str(tmp_path / "cout")
-    ckpt = str(tmp_path / "cckpt")
-    in_dir.mkdir()
-    schema = ("conv_id string, turn_idx int, role string, text string,"
-              " tool string, ts timestamp")
-    # batch 1: turn 0 has TWO concepts (neuron CL:0000540, fibroblast
-    # CL:0000057); batch 2: turn 1 has interneuron CL:0000099
-    spark.createDataFrame(
-        [("c1", 0, "user", "a neuron and a fibroblast", None, None)], schema
-    ).coalesce(1).write.parquet(str(in_dir / "b1"))
-    spark.createDataFrame(
-        [("c1", 1, "user", "an interneuron waits", None, None)], schema
-    ).coalesce(1).write.parquet(str(in_dir / "b2"))
-    d = build_dictionary_df(spark, {"CL": MINI_OBO})
-
-    stream = spark.readStream.schema(
-        stream_transcripts(spark, str(in_dir / "*")).schema
-    ).option("maxFilesPerTrigger", 1).parquet(str(in_dir / "*"))
-    pairs = stream_conv_pairs(stream, d, cooc_window=3, max_state_concepts=1)
-    q = (
-        pairs.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .outputMode("append")
-        .start()
-    )
-    q.awaitTermination()
-    got = {(r.ta, r.tb, r.ca, r.cb)
-           for r in spark.read.parquet(out_dir).collect()}
-    # in-batch same-turn pair: full set, unaffected by the cap
-    assert (0, 0, "CL:0000057", "CL:0000540") in got
-    # cross-batch: only the stored (sorted-first) concept survives
-    assert (0, 1, "CL:0000057", "CL:0000099") in got
-    assert (0, 1, "CL:0000099", "CL:0000540") not in got
-
-
-def test_stream_conv_pairs_eviction_boundary(spark, tmp_path):
-    """Mid-stream cap crossing, naming the exact recall trade: a turn with
-    THREE concepts under max_state_concepts=2 stores only the sorted-first
-    two.  Lost: cross-batch pairs whose EARLIER turn's evicted concept
-    (the sorted-last, CL:0000540 neuron) meets a LATER batch's turn.
-    Kept: every in-batch pair (full sets) and cross-batch pairs through
-    the stored prefix {CL:0000057, CL:0000099}."""
-    from kgpipe.detect import build_dictionary_df
-    from kgpipe.streaming import stream_conv_pairs, stream_transcripts
-
-    in_dir = tmp_path / "ein"
-    out_dir = str(tmp_path / "eout")
-    ckpt = str(tmp_path / "eckpt")
-    in_dir.mkdir()
-    schema = ("conv_id string, turn_idx int, role string, text string,"
-              " tool string, ts timestamp")
-    # batch 1, turn 0: fibroblast CL:0000057 + interneuron CL:0000099 +
-    # neuron CL:0000540 (3 concepts > cap of 2)
-    spark.createDataFrame(
-        [("c1", 0, "user", "a neuron a fibroblast an interneuron",
-          None, None)], schema
-    ).coalesce(1).write.parquet(str(in_dir / "b1"))
-    # batch 2, turn 1: amacrine cell CL:0000561
-    spark.createDataFrame(
-        [("c1", 1, "user", "one amacrine cell appears", None, None)], schema
-    ).coalesce(1).write.parquet(str(in_dir / "b2"))
-    d = build_dictionary_df(spark, {"CL": MINI_OBO})
-
-    stream = spark.readStream.schema(
-        stream_transcripts(spark, str(in_dir / "*")).schema
-    ).option("maxFilesPerTrigger", 1).parquet(str(in_dir / "*"))
-    pairs = stream_conv_pairs(stream, d, cooc_window=3, max_state_concepts=2)
-    q = (
-        pairs.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .outputMode("append")
-        .start()
-    )
-    q.awaitTermination()
-    got = {(r.ta, r.tb, r.ca, r.cb)
-           for r in spark.read.parquet(out_dir).collect()}
-    # in-batch turn-0 pairs: the FULL 3-concept set, cap not applied
-    assert (0, 0, "CL:0000057", "CL:0000099") in got
-    assert (0, 0, "CL:0000057", "CL:0000540") in got
-    assert (0, 0, "CL:0000099", "CL:0000540") in got
-    # cross-batch through the stored prefix: kept
-    assert (0, 1, "CL:0000057", "CL:0000561") in got
-    assert (0, 1, "CL:0000099", "CL:0000561") in got
-    # cross-batch through the EVICTED concept: this is the documented loss
-    assert (0, 1, "CL:0000540", "CL:0000561") not in got
-    # note: 'amacrine cell' also hits no earlier concept beyond these
-    assert len([p for p in got if p[:2] == (0, 1)]) == 2
-
-
 def test_run_grid_fused_matches_serial(spark):
     """The one-job fused sweep must produce identical TP/FP/FN per
     permutation as the serial per-index loop."""
@@ -430,47 +255,6 @@ def test_run_grid_duplicate_gold_rows_agree(spark):
                                 indices=indices).collect()
     }
     assert fused == serial
-
-
-def test_stream_triples_incremental(spark, tmp_path):
-    """Streaming KG sink: two AvailableNow drains over a growing directory
-    produce exactly the stateless triple families for all turns seen, with
-    the second drain touching only the new file."""
-    import os
-
-    from kgpipe.detect import build_dictionary_df
-    from kgpipe.streaming import stream_triples
-
-    schema = ("conv_id string, turn_idx int, role string, text string,"
-              " tool string, ts timestamp")
-    in_dir = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(in_dir)
-    ddf = build_dictionary_df(spark, {"CL": MINI_OBO})
-
-    batch1 = spark.createDataFrame(
-        [("c1", 0, "user", "a neuron appears", None, None)], schema)
-    batch1.write.mode("append").parquet(in_dir)
-    stream_triples(spark, in_dir, ddf, out, ckpt)
-    first = spark.read.parquet(out)
-    n1 = first.count()
-    denotes1 = first.filter("pred = 'http://purl.org/kgpipe/denotes'")
-    assert denotes1.count() == 1
-    assert denotes1.first().evidence.text == "neuron"
-
-    batch2 = spark.createDataFrame(
-        [("c2", 0, "tool", "the fibroblast waits", "search", None)], schema)
-    batch2.write.mode("append").parquet(in_dir)
-    stream_triples(spark, in_dir, ddf, out, ckpt)
-    allrows = spark.read.parquet(out)
-    c2 = allrows.filter("conv_id = 'c2'")
-    preds = {r.pred for r in c2.collect()}
-    assert "http://purl.org/kgpipe/denotes" in preds
-    assert "http://purl.org/kgpipe/usedTool" in preds
-    assert "http://purl.org/kgpipe/hasRole" in preds
-    # c1 rows were not re-emitted
-    assert allrows.filter("conv_id = 'c1'").count() == n1
 
 
 def test_iso_f_math():

@@ -658,6 +658,29 @@ def test_null_conv_lands_in_its_lineage_bucket(spark, tmp_path):
     assert rows[null_bucket].n_triples == _table_counts(got)[null_bucket]
 
 
+def test_staged_lineage_run_with_null_conv(spark, tmp_path):
+    """A turn with a NULL conv_id does not crash the staged plan: its run
+    with lineage completes, and its triples for every other conversation
+    equal the fused run's."""
+    from conftest import MINI_OBO
+    from kgpipe.pipeline import PipelineConfig, run_pipeline
+
+    tdf = _with_null_conv(_gen_tdf(spark, n_convs=12, seed=3))
+    base = dict(obo_paths={"CL": MINI_OBO}, disambiguate=False, n_buckets=4)
+    staged, fused, lin = (str(tmp_path / d) for d in ("staged", "fused", "lin"))
+    run_pipeline(spark, tdf, PipelineConfig(**base), staged, lineage_path=lin)
+    assert {r.status for r in _last_run_rows(spark, lin).values()} == {COMPLETE}
+    run_pipeline(spark, tdf, PipelineConfig(**base, fused=True), fused)
+
+    def _conv_triples(path):
+        return (spark.read.parquet(path).select(*TRIPLE_COLS)
+                .filter(F.col("conv_id").isNotNull()))
+
+    a, b = _conv_triples(staged), _conv_triples(fused)
+    assert a.count() > 0
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
 @pytest.mark.parametrize("fused", [False, True], ids=["staged", "fused"])
 def test_commit_counts_equal_the_written_table(spark, tmp_path, fused):
     """Lineage n_triples (an ERROR run, then its resume) and the snapshot

@@ -147,67 +147,6 @@ def test_validity_intervals(spark):
         sorted(map(tuple, latest.collect()))
 
 
-def test_stream_latest_state(spark, tmp_path):
-    from kgpipe.streaming import stream_latest_state
-    from kgpipe.temporal import latest_by_key
-
-    in_dir = str(tmp_path / "in")
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-    cols = "subj string, pred string, obj string, ts timestamp"
-    b1 = spark.createDataFrame(
-        [("u1", "status", "new", _ts(1)), ("u2", "status", "new", _ts(2))],
-        cols)
-    b2 = spark.createDataFrame(
-        [("u1", "status", "active", _ts(5)), ("u3", "plan", "pro", _ts(3))],
-        cols)
-    b1.coalesce(1).write.mode("append").parquet(in_dir)
-    b2.coalesce(1).write.mode("append").parquet(in_dir)
-
-    got = stream_latest_state(spark, in_dir, state, ckpt,
-                              keys=("subj", "pred"),
-                              max_files_per_trigger=1)
-    want = latest_by_key(b1.unionByName(b2), keys=("subj", "pred"))
-    assert sorted(map(tuple, got.collect())) == \
-        sorted(map(tuple, want.collect()))
-
-    # a later event arrives -> rerun picks up ONLY the new file and
-    # upserts it into the committed state
-    b3 = spark.createDataFrame([("u2", "status", "banned", _ts(9))], cols)
-    b3.coalesce(1).write.mode("append").parquet(in_dir)
-    got2 = stream_latest_state(spark, in_dir, state, ckpt,
-                               keys=("subj", "pred"))
-    vals = {(r["subj"], r["pred"]): r["obj"] for r in got2.collect()}
-    assert vals[("u2", "status")] == "banned"
-    assert vals[("u1", "status")] == "active"
-    assert len(vals) == 3
-
-
-def test_state_snapshot_crash_consistency(spark, tmp_path):
-    import os
-
-    from kgpipe.temporal import read_state_snapshot, write_state_snapshot
-
-    path = str(tmp_path / "state")
-    df1 = spark.createDataFrame([("a", 1)], "k string, v int")
-    assert write_state_snapshot(df1, path) == "snap-1"
-
-    # simulate a crash mid-write of snap-2: orphaned .inprogress dir,
-    # pointer still on snap-1 -> readers see the old complete state
-    os.makedirs(os.path.join(path, "snap-2.inprogress"))
-    with open(os.path.join(path, "snap-2.inprogress", "junk"), "w") as fh:
-        fh.write("partial")
-    got = read_state_snapshot(spark, path)
-    assert [tuple(r) for r in got.collect()] == [("a", 1)]
-
-    # the retried commit overwrites the orphan and flips atomically
-    df2 = spark.createDataFrame([("a", 2), ("b", 1)], "k string, v int")
-    assert write_state_snapshot(df2, path) == "snap-2"
-    assert read_state_snapshot(spark, path).count() == 2
-    # previous snapshot remains readable (time travel)
-    assert spark.read.parquet(os.path.join(path, "snap-1")).count() == 1
-
-
 def test_state_at_cutoff_and_strict(spark):
     from kgpipe.temporal import state_at
 
