@@ -3,13 +3,13 @@
 ``entry(spark)`` smoke-runs the flagship KG-construction pipeline on
 sf0.001.  ``queries()`` exposes one entry per implemented operator family
 from SURVEY.md §2 (+ the graph, inference and conversation analytics over
-its output, and the training-data text operators); ``oracle_sql()`` gives
-the DuckDB-equivalent ANSI SQL for everything SQL-expressible.
+its output); ``oracle_sql()`` gives the DuckDB-equivalent ANSI SQL for
+everything SQL-expressible.
 
 The KG queries derive a transcripts view from the ``documents`` table
 (conv_id = source, turn_idx = doc_id // 20 — deterministic, identical in
 both engines) and run the REAL operators (trie detector via mapInPandas,
-evaluation joins, lineage anti-join, dedup/similarity column ops); the
+evaluation joins, lineage anti-join, similarity column ops); the
 oracle re-derives the same results in pure SQL.
 """
 
@@ -25,10 +25,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from kgpipe.normalize import MatchConfig  # noqa: E402
 from kgpipe import schemas  # noqa: E402
-from kgpipe.corpus import (  # noqa: E402
-    EMAIL_RE as _PII_EMAIL, HOST_RE as _PII_HOST, IPV4_RE as _PII_IPV4,
-    PHONE_RE as _PII_PHONE, URL_RE as _PII_URL,
-)
 
 # ---------------------------------------------------------------------------
 # shared inputs
@@ -341,80 +337,6 @@ lbl{i} AS MATERIALIZED (
 SELECT id AS entity, lbl AS label FROM lbl{iters}"""
 
 
-_SQL_DOUBLED = """
-doubled AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 100000 AS doc_id, text FROM documents
-)"""
-
-_STOPW = "'the','a','an','and','or','of','to','in','is','are','was','for','with','that','this','on','as','at','by'"
-_LANG_SQL_MARKERS = {
-    "en": "'the','and','of','to','is','that','with'",
-    "es": "'el','la','los','las','que','de','y'",
-    "fr": "'le','la','les','des','et','que','une'",
-    "de": "'der','die','das','und','nicht','ein','mit'",
-    "zh": "'的','是','了','在','我','有','和'",
-}
-
-
-def _simhash_total(bits: int = 32) -> str:
-    """Naive per-bit form of kgpipe.textops.simhash_col's scheme (sign for
-    bit j = bit j%4 of hex digit j//4 of md5(token)); <= 32 bits so every
-    weight fits without two's-complement handling."""
-    bit_terms = []
-    for j in range(bits):
-        d, m = divmod(j, 4)
-        sign = (
-            "CASE WHEN ((strpos('0123456789abcdef', substr(h, "
-            f"{d + 1}, 1)) - 1) // {1 << m}) % 2 = 1 THEN 1 ELSE -1 END"
-        )
-        contrib = f"coalesce(list_sum(list_transform(hs, h -> {sign})), 0)"
-        bit_terms.append(
-            f"(CASE WHEN {contrib} > 0 THEN {1 << j}::bigint ELSE 0 END)"
-        )
-    return " + ".join(bit_terms)
-
-
-_SQL_HS = (
-    "list_transform(list_distinct(string_split(text, ' ')), x -> md5(x))"
-)
-
-
-def _simhash_sql(bits: int = 32) -> str:
-    return f"""
-WITH t AS (
-  SELECT doc_id, {_SQL_HS} AS hs FROM documents
-)
-SELECT doc_id, ({_simhash_total(bits)})::bigint AS simhash FROM t
-"""
-
-
-def _simhash_near_dup_sql(bits: int = 32, max_hamming: int = 2,
-                          n_segments: int = 4) -> str:
-    from kgpipe.textops import simhash_block_combos
-
-    combo_conds = " OR ".join(
-        "(" + " AND ".join(
-            f"(a.sh // {1 << off}) % {1 << w} = (b.sh // {1 << off}) % {1 << w}"
-            for off, w in combo
-        ) + ")"
-        for combo in simhash_block_combos(bits, max_hamming, n_segments)
-    )
-    return f"""
-WITH {_SQL_DOUBLED.lstrip()},
-sub AS (SELECT doc_id, text FROM doubled WHERE (doc_id % 100000) < 200),
-t AS (SELECT doc_id, {_SQL_HS} AS hs FROM sub),
-s AS (SELECT doc_id, ({_simhash_total(bits)})::bigint AS sh FROM t)
-SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       bit_count(xor(a.sh, b.sh))::int AS hamming
-FROM s a JOIN s b
-  ON a.doc_id < b.doc_id
- AND ({combo_conds})
-WHERE bit_count(xor(a.sh, b.sh)) <= {max_hamming}
-"""
-
-
 def _embedding_near_dup_sql(threshold: float = 0.95, n_planes: int = 10) -> str:
     from kgpipe.similarity import _hyperplane
 
@@ -443,80 +365,6 @@ FROM keyed a JOIN keyed b ON a.bkt = b.bkt AND a.vec_id < b.vec_id
 WHERE list_dot_product(a.e, b.e)
         / (sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(b.e, b.e)))
       >= {threshold}
-"""
-
-
-def _minhash_cte(k: int = 8, bands: int = 4, threshold: float = 0.5,
-                 max_bucket: int = 500) -> str:
-    """Shared WITH-body deriving near-dup ``pairs`` from the doubled corpus
-    (minhash signature → bands → hot-bucket cap → id-only candidate join →
-    exact-Jaccard verify on re-joined token sets — mirrors
-    kgpipe.textops.minhash_lsh_pairs including its max_bucket_size
-    default)."""
-    sig_elems = ", ".join(
-        f"list_min(list_transform(td, t -> md5('{i}|' || t)))" for i in range(k)
-    )
-    rpb = k // bands
-    band_selects = []
-    for b in range(bands):
-        val = " || ".join(f"sig[{b * rpb + r + 1}]" for r in range(rpb))
-        band_selects.append(
-            f"SELECT doc_id, {b} AS band_idx, {val} AS band_val FROM sig"
-        )
-    banded = " UNION ALL ".join(band_selects)
-    return f"""{_SQL_DOUBLED.lstrip()},
-sub AS (SELECT doc_id, text FROM doubled WHERE (doc_id % 100000) < 100),
-t AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS td FROM sub),
-sig AS (SELECT doc_id, td, [{sig_elems}] AS sig FROM t),
-banded AS ({banded}),
-capped AS (
-  SELECT doc_id, band_idx, band_val FROM (
-    SELECT doc_id, band_idx, band_val,
-           count(*) OVER (PARTITION BY band_idx, band_val) AS bsz
-    FROM banded)
-  WHERE bsz <= {max_bucket}
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM capped a JOIN capped b
-    ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-       AND a.doc_id < b.doc_id
-),
-pairs AS (
-  SELECT doc_a, doc_b,
-         len(list_intersect(ta.td, tb.td))::double
-           / len(list_distinct(list_concat(ta.td, tb.td)))::double AS jaccard
-  FROM cand
-  JOIN t ta ON cand.doc_a = ta.doc_id
-  JOIN t tb ON cand.doc_b = tb.doc_id
-  WHERE len(list_intersect(ta.td, tb.td))::double
-          / len(list_distinct(list_concat(ta.td, tb.td)))::double >= {threshold}
-)"""
-
-
-def _minhash_sql(k: int = 8, bands: int = 4, threshold: float = 0.5) -> str:
-    return f"""
-WITH {_minhash_cte(k, bands, threshold)}
-SELECT doc_a, doc_b, jaccard FROM pairs
-"""
-
-
-def _near_dup_clusters_sql(k: int = 8, bands: int = 4,
-                           threshold: float = 0.5) -> str:
-    """pairs → symmetric closure → transitive reach → min-id component;
-    docs without a near-dup keep themselves."""
-    return f"""
-WITH RECURSIVE {_minhash_cte(k, bands, threshold)},
-e AS (SELECT doc_a AS src, doc_b AS dst FROM pairs),
-sym AS (SELECT src, dst FROM e UNION SELECT dst, src FROM e),
-reach(n, m) AS (
-  SELECT src, src FROM sym
-  UNION
-  SELECT r.n, s.dst FROM reach r JOIN sym s ON r.m = s.src
-),
-comp AS (SELECT n AS doc_id, min(m) AS keep FROM reach GROUP BY n)
-SELECT d.doc_id, coalesce(c.keep, d.doc_id) AS keep_doc_id
-FROM sub d LEFT JOIN comp c ON d.doc_id = c.doc_id
 """
 
 
@@ -760,11 +608,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from kgpipe.lineage import COMPLETE, outstanding, runs_map
     from kgpipe.canon import connected_components
     from kgpipe.similarity import cosine_topk
-    from kgpipe.textops import (
-        boilerplate_ngrams, exact_duplicates, fingerprint, langid_scores,
-        minhash_lsh_pairs, ngram_jaccard_pairs, repetition_scores,
-        simhash_col, token_count, tokens_col,
-    )
     from kgpipe.triples import all_triples
 
     # ---- KG pipeline family -------------------------------------------
@@ -911,137 +754,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.concat(F.lit("N"), (F.col("p_partkey") % 37).cast("string")).alias("dst"),
         )
         return connected_components(edges)
-
-    # ---- training-data operators ---------------------------------------
-    def _doubled(spark, sf_dir):
-        d = _docs(spark, sf_dir).select("doc_id", "text")
-        return d.unionByName(
-            d.select((F.col("doc_id") + 100000).alias("doc_id"), "text")
-        )
-
-    def q_dedup_exact(spark, sf_dir):
-        return exact_duplicates(_doubled(spark, sf_dir))
-
-    def q_dedup_keep(spark, sf_dir):
-        from kgpipe.textops import dedup_exact
-
-        return dedup_exact(_doubled(spark, sf_dir)).select("doc_id")
-
-    def q_minhash_pairs(spark, sf_dir):
-        sub = _doubled(spark, sf_dir).filter((F.col("doc_id") % 100000) < 100)
-        return minhash_lsh_pairs(sub, k=8, bands=4, jaccard_threshold=0.5)
-
-    def q_near_dup_clusters(spark, sf_dir):
-        from kgpipe.textops import near_dup_clusters
-
-        sub = _doubled(spark, sf_dir).filter((F.col("doc_id") % 100000) < 100)
-        return near_dup_clusters(sub, k=8, bands=4, jaccard_threshold=0.5)
-
-    def q_ngram_jaccard(spark, sf_dir):
-        sub = _doubled(spark, sf_dir).filter((F.col("doc_id") % 100000) < 100)
-        return ngram_jaccard_pairs(sub, n=3, threshold=0.5, n_blocks=4)
-
-    def q_simhash(spark, sf_dir):
-        # 32-bit so the DuckDB oracle's naive per-bit form stays enumerable;
-        # the 64-bit production default is pytest-covered (test_textops)
-        return _docs(spark, sf_dir).select(
-            "doc_id", simhash_col(bits=32).alias("simhash")
-        )
-
-    def q_token_count(spark, sf_dir):
-        return token_count(_docs(spark, sf_dir))
-
-    def q_quality(spark, sf_dir):
-        d = _docs(spark, sf_dir)
-        toks = tokens_col("text")
-        n_tok = F.size(toks)
-        total_wl = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-        n_stop = F.size(F.filter(
-            toks,
-            lambda t: F.lower(t).isin(
-                "the", "a", "an", "and", "or", "of", "to", "in", "is", "are",
-                "was", "for", "with", "that", "this", "on", "as", "at", "by",
-            ),
-        ))
-        n_alpha = F.length(F.regexp_replace(F.col("text"), r"[^A-Za-z]", ""))
-        out = d.select(
-            "doc_id",
-            n_tok.alias("n_tokens"),
-            total_wl.alias("total_word_len"),
-            n_stop.alias("n_stop"),
-            n_alpha.alias("n_alpha"),
-            F.length("text").alias("n_chars_m"),
-        )
-        keep = (
-            (F.col("n_tokens") >= 5)
-            & (F.col("total_word_len") >= 2 * F.col("n_tokens"))
-            & (F.col("total_word_len") <= 12 * F.col("n_tokens"))
-            & (2 * F.col("n_alpha") >= F.col("n_chars_m"))
-        )
-        return out.withColumn("keep", keep)
-
-    def q_repetition(spark, sf_dir):
-        # integer numerators only (cross-engine float hashing is the trap
-        # the quality query already dodges); the frac columns are for users
-        return repetition_scores(_docs(spark, sf_dir)).select(
-            "doc_id", "n_2gram_inst", "n_2gram_dup", "top_2gram_count",
-            "n_3gram_inst", "n_3gram_dup",
-        )
-
-    def q_boilerplate(spark, sf_dir):
-        return boilerplate_ngrams(_docs(spark, sf_dir), n=3, min_docs=2).select(
-            "doc_id", "n_inst", "n_boiler",
-        )
-
-    def _docs_with_pii(spark, sf_dir):
-        # the synthetic corpus carries no PII/URLs; append deterministic
-        # doc_id-derived PII so the regex operators have real work — the
-        # oracle SQL builds the identical string with `||`
-        return _docs(spark, sf_dir).withColumn(
-            "text",
-            F.concat(
-                F.col("text"),
-                F.lit(" contact user"), F.col("doc_id").cast("string"),
-                F.lit("@example.com via 10.0."),
-                (F.col("doc_id") % 256).cast("string"),
-                F.lit(".1 or 303-555-"),
-                F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
-                F.lit(" see https://site"),
-                (F.col("doc_id") % 7).cast("string"),
-                F.lit(".example.org/page and https://www.keep.io/x"),
-            ),
-        )
-
-    def q_pii_redact(spark, sf_dir):
-        from kgpipe.corpus import redact_pii
-
-        return redact_pii(_docs_with_pii(spark, sf_dir)).select(
-            "doc_id", "n_emails", "n_ips", "n_phones", "redacted",
-        )
-
-    def q_url_block(spark, sf_dir):
-        from kgpipe.corpus import url_stats
-
-        return url_stats(
-            _docs_with_pii(spark, sf_dir),
-            blocked_domains=["site1.example.org", "site3.example.org"],
-        ).select("doc_id", "n_urls", "n_blocked", "blocked")
-
-    def q_decontam(spark, sf_dir):
-        from kgpipe.corpus import decontaminate
-
-        d = _docs(spark, sf_dir)
-        corpus = d.filter(F.col("doc_id") % 23 != 0)
-        bench = d.filter(F.col("doc_id") % 23 == 0)
-        return decontaminate(corpus, bench, n=5).select(
-            "doc_id", "n_contam", "contaminated",
-        )
-
-    def q_langid(spark, sf_dir):
-        return langid_scores(_docs(spark, sf_dir))
-
-    def q_fingerprint(spark, sf_dir):
-        return fingerprint(_docs(spark, sf_dir), w=4)
 
     def q_cosine_topk(spark, sf_dir):
         e = _emb(spark, sf_dir).withColumn(
@@ -1234,16 +946,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return to_ntriples_lines(mention_triples(_mentions(spark, sf_dir)))
 
     # ---- near-dup extensions -------------------------------------------
-    def q_simhash_near_dup(spark, sf_dir):
-        from kgpipe.textops import simhash_near_dups
-
-        sub = _doubled(spark, sf_dir).filter((F.col("doc_id") % 100000) < 200)
-        # combination blocking (C(4,2)=6 tables of 16-bit keys) exercised in
-        # both engines; 64-bit/8-segment production default is pytest-covered
-        return simhash_near_dups(
-            sub, bits=32, max_hamming=2, n_segments=4
-        ).withColumn("hamming", F.col("hamming").cast("int"))
-
     def q_embedding_near_dup(spark, sf_dir):
         from kgpipe.similarity import pairwise_cosine_dedup
 
@@ -1442,16 +1144,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return validity_intervals(ev, keys=("user_id", "event_type"),
                                   ts="ts")
 
-    def q_minhash_cross(spark, sf_dir):
-        from kgpipe.textops import minhash_cross_pairs
-
-        d = _docs(spark, sf_dir).select("doc_id", "text")
-        # new batch = re-keyed copies of the first 60 docs (guaranteed
-        # cross-corpus exact dups), ref corpus = everything
-        new = d.filter(F.col("doc_id") < 60).select(
-            (F.col("doc_id") + 100000).alias("doc_id"), "text")
-        return minhash_cross_pairs(new, d, jaccard_threshold=0.5)
-
     def q_label_match(spark, sf_dir):
         from kgpipe.entitymatch import label_match_pairs
 
@@ -1605,35 +1297,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             verbs=["join", "merge", "filter", "scan"],
         )
 
-    def q_curate(spark, sf_dir):
-        """Composite curation pipeline: langid -> quality gate -> PII
-        redaction -> exact dedup keep-one.  Chains the individually
-        oracle-verified hygiene operators end-to-end — the shape of a
-        production pre-training ingest job."""
-        from kgpipe.corpus import redact_pii
-        from kgpipe.textops import dedup_exact, langid_scores, tokens_col
-
-        d = _docs(spark, sf_dir).select("doc_id", "text")
-        lang = langid_scores(d).select("doc_id", "lang_pred")
-        toks = tokens_col("text")
-        n_tok = F.size(toks)
-        sum_len = F.aggregate(toks, F.lit(0), lambda a, t: a + F.length(t))
-        n_alpha = F.length(F.regexp_replace(F.col("text"), r"[^A-Za-z]", ""))
-        keep = (
-            (n_tok >= 5)
-            & (sum_len >= 2 * n_tok) & (sum_len <= 12 * n_tok)
-            & (2 * n_alpha >= F.length(F.col("text")))
-        )
-        kept = (
-            d.join(lang, "doc_id")
-            .filter(F.col("lang_pred") == "en")
-            .filter(keep)
-        )
-        red = redact_pii(kept).select(
-            "doc_id", F.col("redacted").alias("text"))
-        return dedup_exact(red).select(
-            "doc_id", F.md5("text").alias("text_md5"))
-
     def q_functional_violations(spark, sf_dir):
         from kgpipe.quality import functional_violations
 
@@ -1672,21 +1335,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ["http://purl.org/kgpipe/hasRole",
              "http://purl.org/kgpipe/usedTool"],
         )
-
-    def q_sample_strata(spark, sf_dir):
-        from kgpipe.corpus import stratified_sample
-
-        return stratified_sample(
-            _docs(spark, sf_dir),
-            "lang",
-            {"en": 0.25, "de": 0.75, "fr": 0.5},
-            default_rate=0.125,
-        ).select("doc_id", "lang")
-
-    def q_pack_plan(spark, sf_dir):
-        from kgpipe.corpus import pack_sequences
-
-        return pack_sequences(_docs(spark, sf_dir), budget=64)
 
     def q_sessionize(spark, sf_dir):
         from kgpipe.convops import sessionize
@@ -1870,40 +1518,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("cb").alias("obj"))
         return rule_mining_stats(c1.unionByName(c3))
 
-    def q_blocking_quality(spark, sf_dir):
-        from kgpipe.entitymatch import blocking_quality
-        from kgpipe.textops import minhash_lsh_pairs
-
-        # candidates = the minhash_pairs harness; gold = the planted
-        # exact replicas (doc_id, doc_id + 100000) — measures the LSH
-        # scheme's pair completeness on known duplicates
-        sub = _doubled(spark, sf_dir).filter(
-            (F.col("doc_id") % 100000) < 100)
-        cand = minhash_lsh_pairs(
-            sub, k=8, bands=4, jaccard_threshold=0.5)
-        gold = _docs(spark, sf_dir).filter(F.col("doc_id") < 100).select(
-            F.col("doc_id").alias("doc_a"),
-            (F.col("doc_id") + 100000).alias("doc_b"))
-        return blocking_quality(cand, gold)
-
-    def q_abbreviations(spark, sf_dir):
-        from kgpipe.textops import abbreviations
-
-        # no parenthesized definitions in the word-salad corpus: inject
-        # a valid k=2, a valid k=3, and an initials-MISMATCHED negative
-        # deterministically by turn residue
-        t = _conv_transcripts(spark, sf_dir)
-        inj = (
-            F.when(F.col("turn_idx") % 6 == 2,
-                   F.concat(F.col("text"), F.lit(" fast table (ft)")))
-            .when(F.col("turn_idx") % 6 == 4,
-                  F.concat(F.col("text"), F.lit(" big scan (xq)")))
-            .when(F.col("turn_idx") % 6 == 0,
-                  F.concat(F.col("text"),
-                           F.lit(" sort window group (swg)")))
-            .otherwise(F.col("text")))
-        return abbreviations(t.withColumn("text", inj))
-
     def q_sameas_rewrite(spark, sf_dir):
         from kgpipe.canon import rewrite_triples
 
@@ -2024,12 +1638,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "path_query": q_path_query,
         "sameas_rewrite": q_sameas_rewrite,
         "concept_trends": q_concept_trends,
-        "abbreviations": q_abbreviations,
         "rule_stats": q_rule_stats,
         "path_rules": q_path_rules,
         "rule_predictions": q_rule_predictions,
         "incremental_cooc": q_incremental_cooc,
-        "blocking_quality": q_blocking_quality,
         "reciprocity": q_reciprocity,
         "entity_profile": q_entity_profile,
         "conv_dedup": q_conv_dedup,
@@ -2052,21 +1664,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "mayla_conv_freq": q_mayla_conv_freq,
         "tfidf_support": q_tfidf_support,
         "connected_components": q_connected_components,
-        "dedup_exact": q_dedup_exact,
-        "dedup_keep": q_dedup_keep,
-        "minhash_pairs": q_minhash_pairs,
-        "near_dup_clusters": q_near_dup_clusters,
-        "ngram_jaccard": q_ngram_jaccard,
-        "simhash": q_simhash,
-        "token_count": q_token_count,
-        "quality": q_quality,
-        "repetition": q_repetition,
-        "boilerplate": q_boilerplate,
-        "pii_redact": q_pii_redact,
-        "url_block": q_url_block,
-        "decontam": q_decontam,
-        "langid": q_langid,
-        "fingerprint": q_fingerprint,
         "cosine_topk": q_cosine_topk,
         # flagship triple table + graph analytics and ANN — keep
         # these well inside the driver sweep's first 50 entries
@@ -2088,7 +1685,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "asof_events": q_asof_events,
         "latest_state": q_latest_state,
         "validity_state": q_validity_state,
-        "minhash_cross": q_minhash_cross,
         "label_match": q_label_match,
         "snapshot_diff": q_snapshot_diff,
         "diff_summary": q_diff_summary,
@@ -2107,13 +1703,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "coherence_disambig": q_coherence_disambig,
         "verb_relations": q_verb_relations,
         "conv_features": q_conv_features,
-        "curate": q_curate,
         "functional_violations": q_functional_violations,
         "domain_range": q_domain_range,
         "dr_violations": q_dr_violations,
         "kg_completeness": q_kg_completeness,
-        "sample_strata": q_sample_strata,
-        "pack_plan": q_pack_plan,
         "sessionize": q_sessionize,
         "session_triples": q_session_triples,
         "role_transitions": q_role_transitions,
@@ -2130,7 +1723,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "a1_lines": q_a1_lines,
         "annot_json": q_annot_json,
         "ntriples_mentions": q_ntriples_mentions,
-        "simhash_near_dup": q_simhash_near_dup,
         "embedding_near_dup": q_embedding_near_dup,
         # tail: span-comparator variants of the already-listed eval_strict
         # and generic TPC-H-style queries — the lowest-information rows if
@@ -2149,18 +1741,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    lang_scores = ", ".join(
-        f"len(list_filter(w, t -> lower(t) IN ({m}))) AS score_{lang}"
-        for lang, m in _LANG_SQL_MARKERS.items()
-    )
-    lang_best = "greatest(" + ", ".join(
-        f"score_{l}" for l in _LANG_SQL_MARKERS
-    ) + ")"
-    lang_pred = "CASE " + " ".join(
-        f"WHEN score_{l} = best AND best > 0 THEN '{l}'"
-        for l in _LANG_SQL_MARKERS
-    ) + " ELSE 'und' END"
-
     return {
         "mention_detect": f"WITH {_SQL_MENTIONS.lstrip()} SELECT * FROM mentions",
         "mention_count_per_turn": f"""
@@ -2327,221 +1907,6 @@ reach(n, m) AS (
   SELECT r.n, s.dst FROM reach r JOIN sym s ON r.m = s.src
 )
 SELECT n AS node, min(m) AS component FROM reach GROUP BY n""",
-        "dedup_exact": f"""
-WITH {_SQL_DOUBLED.lstrip()}
-SELECT md5(text) AS h, count(*) AS n_dups, min(doc_id) AS keep_doc_id
-FROM doubled GROUP BY md5(text) HAVING count(*) > 1""",
-        "dedup_keep": f"""
-WITH {_SQL_DOUBLED.lstrip()},
-r AS (SELECT doc_id,
-             row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-      FROM doubled)
-SELECT doc_id FROM r WHERE rn = 1""",
-        "minhash_pairs": _minhash_sql(),
-        "near_dup_clusters": _near_dup_clusters_sql(),
-        "ngram_jaccard": f"""
-WITH {_SQL_DOUBLED.lstrip()},
-sub AS (SELECT doc_id, text FROM doubled WHERE (doc_id % 100000) < 100),
-t AS (SELECT doc_id, string_split(text, ' ') AS w FROM sub),
-gs AS (SELECT doc_id,
-              list_distinct(list_transform(generate_series(1, len(w) - 2),
-                i -> array_to_string(w[i:i+2], ' '))) AS grams
-       FROM t),
-keys AS ({" UNION ALL ".join(
-    f"SELECT doc_id, grams, {i} AS blk_idx, "
-    f"list_min(list_transform(grams, g -> md5('{i}|' || g))) AS blk FROM gs"
-    for i in range(4)
-)}),
-cand AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         any_value(a.grams) AS ga, any_value(b.grams) AS gb
-  FROM keys a JOIN keys b
-    ON a.blk_idx = b.blk_idx AND a.blk = b.blk AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-)
-SELECT doc_a, doc_b,
-       len(list_intersect(ga, gb))::double
-         / len(list_distinct(list_concat(ga, gb)))::double AS jaccard
-FROM cand
-WHERE len(list_intersect(ga, gb))::double
-        / len(list_distinct(list_concat(ga, gb)))::double >= 0.5""",
-        "simhash": _simhash_sql(),
-        "token_count": r"""
-SELECT doc_id,
-       len(list_filter(string_split(text, ' '), t -> t <> ''))::int AS n_tokens,
-       len(regexp_extract_all(text, '([A-Za-z0-9]+|[^A-Za-z0-9\s])', 1))::int
-         AS n_subwords,
-       length(text)::int AS n_chars
-FROM documents""",
-        "quality": f"""
-WITH t AS (
-  SELECT doc_id, text,
-         list_filter(string_split(text, ' '), x -> x <> '') AS w
-  FROM documents
-)
-SELECT doc_id,
-  len(w)::int AS n_tokens,
-  coalesce(list_sum(list_transform(w, x -> length(x))), 0)::int AS total_word_len,
-  len(list_filter(w, x -> lower(x) IN ({_STOPW})))::int AS n_stop,
-  length(regexp_replace(text, '[^A-Za-z]', '', 'g'))::int AS n_alpha,
-  length(text)::int AS n_chars_m,
-  (len(w) >= 5
-   AND coalesce(list_sum(list_transform(w, x -> length(x))), 0) >= 2 * len(w)
-   AND coalesce(list_sum(list_transform(w, x -> length(x))), 0) <= 12 * len(w)
-   AND 2 * length(regexp_replace(text, '[^A-Za-z]', '', 'g')) >= length(text))
-   AS keep
-FROM t""",
-        # Gopher within-doc repetition: same list algebra as the Spark
-        # column expressions (per-distinct-gram occurrence counts)
-        "repetition": """
-WITH t AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w
-  FROM documents
-),
-g AS (
-  SELECT doc_id,
-    CASE WHEN len(w) >= 2 THEN list_transform(generate_series(1, len(w) - 1),
-         i -> array_to_string(w[i:i+1], ' ')) ELSE []::varchar[] END AS g2,
-    CASE WHEN len(w) >= 3 THEN list_transform(generate_series(1, len(w) - 2),
-         i -> array_to_string(w[i:i+2], ' ')) ELSE []::varchar[] END AS g3
-  FROM t
-),
-c AS (
-  SELECT doc_id, g2, g3,
-    list_transform(list_distinct(g2),
-                   d -> len(list_filter(g2, x -> x = d))) AS pc2,
-    list_transform(list_distinct(g3),
-                   d -> len(list_filter(g3, x -> x = d))) AS pc3
-  FROM g
-)
-SELECT doc_id,
-  len(g2)::int AS n_2gram_inst,
-  (len(g2) - len(list_filter(pc2, y -> y = 1)))::int AS n_2gram_dup,
-  coalesce(list_max(pc2), 0)::int AS top_2gram_count,
-  len(g3)::int AS n_3gram_inst,
-  (len(g3) - len(list_filter(pc3, y -> y = 1)))::int AS n_3gram_dup
-FROM c""",
-        # C4/CCNet cross-corpus boilerplate: doc-frequency of 3-gram
-        # shingles, per-doc repeated-material instance counts
-        "boilerplate": """
-WITH t AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w
-  FROM documents
-),
-g AS (
-  SELECT doc_id,
-    CASE WHEN len(w) >= 3 THEN list_transform(generate_series(1, len(w) - 2),
-         i -> array_to_string(w[i:i+2], ' ')) ELSE []::varchar[] END AS g3
-  FROM t
-),
-inst AS (SELECT doc_id, unnest(g3) AS gram FROM g),
-gcount AS (SELECT doc_id, gram, count(*) AS k FROM inst GROUP BY doc_id, gram),
-docfreq AS (SELECT gram, count(*) AS n_docs FROM gcount GROUP BY gram)
-SELECT gc.doc_id,
-       sum(gc.k)::bigint AS n_inst,
-       sum(CASE WHEN d.n_docs >= 2 THEN gc.k ELSE 0 END)::bigint AS n_boiler
-FROM gcount gc JOIN docfreq d ON gc.gram = d.gram
-GROUP BY gc.doc_id""",
-        # PII redaction over doc_id-derived synthetic PII (kgpipe.corpus
-        # patterns are the Java-regex ∩ RE2 subset, so the literal
-        # patterns run unchanged here)
-        "pii_redact": f"""
-WITH aug AS (
-  SELECT doc_id,
-    text || ' contact user' || doc_id || '@example.com via 10.0.'
-         || (doc_id % 256) || '.1 or 303-555-'
-         || lpad((doc_id % 10000)::varchar, 4, '0')
-         || ' see https://site' || (doc_id % 7)
-         || '.example.org/page and https://www.keep.io/x' AS text
-  FROM documents
-)
-SELECT doc_id,
-  len(regexp_extract_all(text, '{_PII_EMAIL}')) AS n_emails,
-  len(regexp_extract_all(
-     regexp_replace(text, '{_PII_EMAIL}', '<EMAIL>', 'g'),
-     '{_PII_IPV4}')) AS n_ips,
-  len(regexp_extract_all(
-     regexp_replace(regexp_replace(text, '{_PII_EMAIL}', '<EMAIL>', 'g'),
-                    '{_PII_IPV4}', '<IP>', 'g'),
-     '{_PII_PHONE}')) AS n_phones,
-  regexp_replace(regexp_replace(regexp_replace(
-    text, '{_PII_EMAIL}', '<EMAIL>', 'g'),
-    '{_PII_IPV4}', '<IP>', 'g'),
-    '{_PII_PHONE}', '<PHONE>', 'g') AS redacted
-FROM aug""",
-        "url_block": f"""
-WITH aug AS (
-  SELECT doc_id,
-    text || ' contact user' || doc_id || '@example.com via 10.0.'
-         || (doc_id % 256) || '.1 or 303-555-'
-         || lpad((doc_id % 10000)::varchar, 4, '0')
-         || ' see https://site' || (doc_id % 7)
-         || '.example.org/page and https://www.keep.io/x' AS text
-  FROM documents
-),
-h AS (
-  SELECT doc_id,
-    list_transform(
-      regexp_extract_all(text, '{_PII_URL}'),
-      u -> regexp_replace(lower(regexp_extract(u, '{_PII_HOST}', 1)),
-                          '^www\\.', '')
-    ) AS hosts
-  FROM aug
-),
-b AS (
-  SELECT doc_id, hosts,
-    len(list_filter(hosts,
-        x -> len(list_filter(['site1.example.org', 'site3.example.org'],
-                 d -> x = d OR x LIKE '%.' || d)) > 0)) AS n_blocked
-  FROM h
-)
-SELECT doc_id, len(hosts) AS n_urls, n_blocked, n_blocked > 0 AS blocked
-FROM b""",
-        # benchmark decontamination: docs with doc_id%23=0 act as the
-        # held-out eval set; count distinct shared 5-grams per corpus doc
-        "decontam": """
-WITH t AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w
-  FROM documents
-),
-g AS (
-  SELECT doc_id,
-    CASE WHEN len(w) >= 5 THEN list_distinct(
-      list_transform(generate_series(1, len(w) - 4),
-                     i -> array_to_string(w[i:i+4], ' ')))
-    ELSE []::varchar[] END AS g5
-  FROM t
-),
-bench AS (
-  SELECT DISTINCT unnest(g5) AS gram FROM g WHERE doc_id % 23 = 0
-),
-corp AS (
-  SELECT doc_id, unnest(g5) AS gram FROM g WHERE doc_id % 23 <> 0
-),
-hits AS (
-  SELECT doc_id, count(*) AS n_contam
-  FROM corp JOIN bench USING (gram) GROUP BY doc_id
-)
-SELECT d.doc_id, coalesce(h.n_contam, 0)::int AS n_contam,
-       coalesce(h.n_contam, 0) > 0 AS contaminated
-FROM (SELECT doc_id FROM documents WHERE doc_id % 23 <> 0) d
-LEFT JOIN hits h USING (doc_id)""",
-        "langid": f"""
-WITH t AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w
-  FROM documents
-),
-s AS (SELECT doc_id, {lang_scores} FROM t),
-b AS (SELECT *, {lang_best} AS best FROM s)
-SELECT doc_id, score_en, score_es, score_fr, score_de, score_zh,
-       {lang_pred} AS lang_pred
-FROM b""",
-        "fingerprint": """
-WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS w FROM documents)
-SELECT doc_id, md5(text) AS doc_md5,
-       list_min(list_transform(generate_series(1, len(w) - 3),
-         i -> md5(array_to_string(w[i:i+3], ' ')))) AS min_shingle
-FROM t""",
         "cosine_topk": """
 WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
 q AS (SELECT vec_id AS q_id, e AS qv FROM v WHERE vec_id < 5),
@@ -2748,7 +2113,6 @@ SELECT '<https://kg.example.org/conv/' || conv_id || '#t'
     || '> <http://purl.org/kgpipe/denotes> <http://purl.obolibrary.org/obo/'
     || replace(concept_id, ':', '_') || '> .' AS value
 FROM mentions""",
-        "simhash_near_dup": _simhash_near_dup_sql(),
         "embedding_near_dup": _embedding_near_dup_sql(),
         "revenue_by_segment": """
 SELECT c.c_mktsegment,
@@ -2934,37 +2298,6 @@ JOIN mentions b
 JOIN vt
   ON vt.conv_id = a.conv_id AND vt.turn_idx = a.turn_idx
  AND vt.vbegin > a."end" AND vt.vbegin < b.begin""",
-        # composite curation pipeline: langid -> quality gate -> PII
-        # redaction -> exact dedup keep-one (each stage individually
-        # oracle-verified; this row pins the COMPOSITION)
-        "curate": f"""
-WITH t AS (
-  SELECT doc_id, text,
-         list_filter(string_split(text, ' '), x -> x <> '') AS w
-  FROM documents),
-s AS (SELECT doc_id, {lang_scores} FROM t),
-b AS (SELECT *, {lang_best} AS best FROM s),
-l AS (SELECT doc_id, {lang_pred} AS lang_pred FROM b),
-kept AS (
-  SELECT t.doc_id, t.text FROM t JOIN l USING (doc_id)
-  WHERE l.lang_pred = 'en'
-    AND len(w) >= 5
-    AND coalesce(list_sum(list_transform(w, x -> length(x))), 0)
-        >= 2 * len(w)
-    AND coalesce(list_sum(list_transform(w, x -> length(x))), 0)
-        <= 12 * len(w)
-    AND 2 * length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-        >= length(text)),
-r AS (SELECT doc_id,
-        regexp_replace(regexp_replace(regexp_replace(text,
-          '{_PII_EMAIL}', '<EMAIL>', 'g'),
-          '{_PII_IPV4}', '<IP>', 'g'),
-          '{_PII_PHONE}', '<PHONE>', 'g') AS text
-      FROM kept),
-dd AS (SELECT doc_id, text,
-         row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-       FROM r)
-SELECT doc_id, md5(text) AS text_md5 FROM dd WHERE rn = 1""",
         # KG quality checks (kgpipe.quality): functional-predicate
         # violations, host-level domain/range namespace signatures, minority
         # signature flagging (two planted anomalies mirror q_dr_violations),
@@ -3334,57 +2667,6 @@ rst AS (SELECT pred AS pred1, count(*)::bigint AS n_p1
         FROM rse GROUP BY pred)
 SELECT b.pred1, b.pred2, b.n_both, t.n_p1
 FROM rsb b JOIN rst t ON b.pred1 = t.pred1""",
-        # pair completeness of the MinHash-LSH scheme on the planted
-        # exact replicas (kgpipe.entitymatch.blocking_quality over the
-        # minhash_pairs harness)
-        "blocking_quality": f"""
-WITH {_minhash_cte(k=8, bands=4, threshold=0.5)},
-bq_c AS (SELECT DISTINCT least(doc_a, doc_b) AS a,
-                greatest(doc_a, doc_b) AS b FROM pairs),
-bq_g AS (SELECT DISTINCT doc_id AS a, doc_id + 100000 AS b
-         FROM documents WHERE doc_id < 100)
-SELECT (SELECT count(*) FROM bq_c)::bigint AS n_cand,
-       (SELECT count(*) FROM bq_g)::bigint AS n_gold,
-       (SELECT count(*) FROM bq_g g JOIN bq_c c
-         ON g.a = c.a AND g.b = c.b)::bigint AS n_matched""",
-        # initialism abbreviation mining (kgpipe.textops.abbreviations,
-        # the deterministic Schwartz–Hearst initials subset) with one
-        # valid k=2, one valid k=3, and one mismatched negative injected
-        "abbreviations": """
-WITH abt AS (
-  SELECT source || '-' || (doc_id % 10)::varchar AS conv_id,
-         (doc_id // 10)::int AS turn_idx,
-         text || CASE WHEN (doc_id // 10) % 6 = 2 THEN ' fast table (ft)'
-                      WHEN (doc_id // 10) % 6 = 4 THEN ' big scan (xq)'
-                      WHEN (doc_id // 10) % 6 = 0
-                        THEN ' sort window group (swg)'
-                      ELSE '' END AS text
-  FROM documents),
-abtk AS (
-  SELECT conv_id, turn_idx,
-         generate_subscripts(string_split(lower(text), ' '), 1) - 1
-           AS pos,
-         unnest(string_split(lower(text), ' ')) AS tok
-  FROM abt),
-absf AS (
-  SELECT conv_id, turn_idx, pos AS sf_pos,
-         regexp_extract(tok, '^\\(([a-z]{2,4})\\)$', 1) AS sf
-  FROM abtk WHERE regexp_matches(tok, '^\\(([a-z]{2,4})\\)$')),
-abcand AS (
-  SELECT s.conv_id, s.turn_idx, s.sf_pos, s.sf, length(s.sf) AS k,
-         t.pos, t.tok
-  FROM absf s JOIN abtk t
-    ON s.conv_id = t.conv_id AND s.turn_idx = t.turn_idx
-   AND t.pos >= s.sf_pos - length(s.sf) AND t.pos < s.sf_pos),
-abgrp AS (
-  SELECT conv_id, turn_idx, sf_pos, sf, k, count(*) AS n,
-         string_agg(substr(tok, 1, 1), '' ORDER BY pos, tok)
-           AS initials,
-         string_agg(tok, ' ' ORDER BY pos, tok) AS long_form
-  FROM abcand GROUP BY 1, 2, 3, 4, 5)
-SELECT conv_id, turn_idx, sf_pos::int AS pos, sf AS short_form,
-       long_form
-FROM abgrp WHERE n = k AND initials = sf""",
         # owl:sameAs-style triple rewrite through a planted merge map
         # (kgpipe.canon.rewrite_triples; multiset preserved)
         "sameas_rewrite": f"""
@@ -3564,57 +2846,6 @@ SELECT user_id, event_type, props, ts,
        lead(ts) OVER (PARTITION BY user_id, event_type
                       ORDER BY ts ASC, props ASC) AS valid_to
 FROM events""",
-        # cross-corpus MinHash near-dup (new batch vs reference corpus);
-        # banding identical to minhash_pairs, cap on the reference side
-        "minhash_cross": """
-WITH newb AS (SELECT doc_id + 100000 AS doc_id, text FROM documents
-              WHERE doc_id < 60),
-tn AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS td
-       FROM newb),
-tr AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS td
-       FROM documents),
-sign AS (SELECT doc_id, td,
-  [list_min(list_transform(td, t -> md5('0|' || t))),
-   list_min(list_transform(td, t -> md5('1|' || t))),
-   list_min(list_transform(td, t -> md5('2|' || t))),
-   list_min(list_transform(td, t -> md5('3|' || t))),
-   list_min(list_transform(td, t -> md5('4|' || t))),
-   list_min(list_transform(td, t -> md5('5|' || t))),
-   list_min(list_transform(td, t -> md5('6|' || t))),
-   list_min(list_transform(td, t -> md5('7|' || t)))] AS sig FROM tn),
-sigr AS (SELECT doc_id, td,
-  [list_min(list_transform(td, t -> md5('0|' || t))),
-   list_min(list_transform(td, t -> md5('1|' || t))),
-   list_min(list_transform(td, t -> md5('2|' || t))),
-   list_min(list_transform(td, t -> md5('3|' || t))),
-   list_min(list_transform(td, t -> md5('4|' || t))),
-   list_min(list_transform(td, t -> md5('5|' || t))),
-   list_min(list_transform(td, t -> md5('6|' || t))),
-   list_min(list_transform(td, t -> md5('7|' || t)))] AS sig FROM tr),
-bn AS (SELECT doc_id, 0 AS band_idx, sig[1] || sig[2] AS band_val FROM sign
-  UNION ALL SELECT doc_id, 1, sig[3] || sig[4] FROM sign
-  UNION ALL SELECT doc_id, 2, sig[5] || sig[6] FROM sign
-  UNION ALL SELECT doc_id, 3, sig[7] || sig[8] FROM sign),
-br AS (SELECT doc_id, band_idx, band_val FROM (
-    SELECT doc_id, band_idx, band_val,
-           count(*) OVER (PARTITION BY band_idx, band_val) AS bsz
-    FROM (SELECT doc_id, 0 AS band_idx, sig[1] || sig[2] AS band_val
-            FROM sigr
-          UNION ALL SELECT doc_id, 1, sig[3] || sig[4] FROM sigr
-          UNION ALL SELECT doc_id, 2, sig[5] || sig[6] FROM sigr
-          UNION ALL SELECT doc_id, 3, sig[7] || sig[8] FROM sigr))
-  WHERE bsz <= 500),
-cand AS (
-  SELECT DISTINCT n.doc_id AS new_id, r.doc_id AS ref_id
-  FROM bn n JOIN br r
-    ON n.band_idx = r.band_idx AND n.band_val = r.band_val)
-SELECT new_id, ref_id,
-       len(list_intersect(a.td, b.td))::double
-         / len(list_distinct(list_concat(a.td, b.td)))::double AS jaccard
-FROM cand JOIN tn a ON cand.new_id = a.doc_id
-          JOIN tr b ON cand.ref_id = b.doc_id
-WHERE len(list_intersect(a.td, b.td))::double
-        / len(list_distinct(list_concat(a.td, b.td)))::double >= 0.5""",
         # exact prefix-filter token-Jaccard entity matching
         # (kgpipe.entitymatch.label_match_pairs on part names)
         "label_match": """
@@ -3764,13 +2995,6 @@ SELECT req.pred, count(*) AS n_subjects,
 FROM req LEFT JOIN present
   ON req.pred = present.pred AND req.subj = present.subj
 GROUP BY req.pred""",
-        "sample_strata": """
-SELECT doc_id, lang FROM documents
-WHERE substring(md5(doc_id::varchar), 1, 8) <
-      CASE lang WHEN 'en' THEN '40000000'
-                WHEN 'de' THEN 'c0000000'
-                WHEN 'fr' THEN '80000000'
-                ELSE '20000000' END""",
         # unique-keyed conv transcripts (doc_id split bijectively) with the
         # deterministic ts ramp of _conv_transcripts; session boundaries
         # computed on epoch seconds, identical to ts.cast(long) deltas
@@ -3838,27 +3062,6 @@ SELECT from_role, to_role, count(*) AS n_transitions,
        count(DISTINCT conv_id) AS n_convs
 FROM lagr WHERE from_role IS NOT NULL
 GROUP BY from_role, to_role""",
-        # concat-and-cut packing layout at budget=64, sharded by the first
-        # 2 hex chars of md5(doc_id) exactly like corpus.pack_sequences
-        "pack_plan": """
-WITH staged AS (
-  SELECT doc_id,
-         substring(md5(doc_id::varchar), 1, 2) AS shard,
-         len(list_filter(string_split(text, ' '), t -> t <> ''))::int
-           AS n_tokens
-  FROM documents),
-cum AS (
-  SELECT doc_id, shard, n_tokens,
-         sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c
-  FROM staged)
-SELECT doc_id, shard, n_tokens,
-       (c - n_tokens)::bigint AS tok_offset,
-       floor((c - n_tokens) / 64)::int AS seq_first,
-       floor(greatest(c - 1, c - n_tokens) / 64)::int AS seq_last,
-       (floor(greatest(c - 1, c - n_tokens) / 64)
-          - floor((c - n_tokens) / 64))::int AS n_splits
-FROM cum""",
         "lsh_topk": _lsh_topk_sql(),
         "ivf_topk": _IVF_TOPK_SQL,
         "ivf_centroids": _ivf_centroids_sql(),

@@ -199,8 +199,7 @@ def run_default(reps: int | None = None) -> None:
                     " empty detect")
 
             # headline 4: oracle-suite queries at the bench SF
-            for name in ["mention_detect", "cooccurrence", "minhash_pairs",
-                         "cosine_topk", "dedup_exact",
+            for name in ["mention_detect", "cooccurrence", "cosine_topk",
                          "graph_triangles", "ego_network", "asof_events",
                          "closure", "bfs_dist", "local_clustering"]:
                 timed(name, lambda n=name: qs[n](spark, SF_DIR).count())

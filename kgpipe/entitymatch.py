@@ -132,8 +132,8 @@ def blocking_quality(
     scheme retained.  Pair completeness (blocking recall) is
     ``n_matched / n_gold``; the reduction ratio needs the caller's raw
     comparison-space size (integer-output policy).  The measurement
-    every hot-bucket cap / band count / threshold choice in the dedup
-    family should be tuned against.
+    every hot-token cap / band count / threshold choice in a blocking
+    scheme should be tuned against.
 
     Two canonicalize+distinct passes + one left-semi equi-join + three
     1-row aggregates — everything keys on the id pair, no payloads.

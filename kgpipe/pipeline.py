@@ -62,6 +62,15 @@ class PipelineConfig:
     # per-ontology optimized defaults (EntityFinder.java:133-170)
     detect_configs: Optional[dict] = None
 
+    def __post_init__(self) -> None:
+        # else n_buckets=0 fails deep in Spark, and a negative window crashes
+        # the staged write but silently empties the fused plan's cooc triples
+        if self.n_buckets < 1:
+            raise ValueError(f"n_buckets must be >= 1, got {self.n_buckets}")
+        if self.cooc_window < 0:
+            raise ValueError(
+                f"cooc_window must be >= 0, got {self.cooc_window}")
+
 
 def build_mentions(
     transcripts: DataFrame,
@@ -291,12 +300,6 @@ def main(argv: Optional[list[str]] = None) -> None:
     ap.add_argument("--master", default=None)
     args = ap.parse_args(argv)
 
-    spark = get_spark("kgpipe", master=args.master)
-    transcripts = (
-        spark.read.parquet(args.transcripts)
-        if "/" in args.transcripts
-        else spark.read.table(args.transcripts)
-    )
     if args.mayla_ns_freq:
         from .disambig import MAYLA_CONCEPT_FREQ
         mayla_freq = MAYLA_CONCEPT_FREQ
@@ -319,6 +322,13 @@ def main(argv: Optional[list[str]] = None) -> None:
         mayla_freq_scope=("conversation" if args.mayla_conv_scope
                           else "turn"),
         snapshot=args.snapshot,
+    )
+    # cfg is built (and checked) first: a bad flag fails before Spark starts
+    spark = get_spark("kgpipe", master=args.master)
+    transcripts = (
+        spark.read.parquet(args.transcripts)
+        if "/" in args.transcripts
+        else spark.read.table(args.transcripts)
     )
     run_pipeline(spark, transcripts, cfg, args.out, args.lineage)
     spark.stop()

@@ -1,8 +1,9 @@
 """Static checks of the driver contract file ``__spark_entry__.py`` (no
 Spark session): oracle rows match query rows, every ``kgpipe`` import in
 the file resolves (including the lazy ones inside query closures, which
-otherwise fail only when that row runs), and no module-level helper is
-left behind unreferenced."""
+otherwise fail only when that row runs), no module-level helper, query
+closure or ``queries()`` import is left behind unreferenced, and every row
+``bench.py`` times is a query row."""
 
 from __future__ import annotations
 
@@ -12,16 +13,15 @@ import os
 
 import __spark_entry__ as contract
 
-CONTRACT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "__spark_entry__.py",
-)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+CONTRACT = os.path.join(ROOT, "__spark_entry__.py")
+BENCH = os.path.join(ROOT, "bench.py")
 ROOTS = ("entry", "queries", "oracle_sql")
 
 
-def _tree() -> ast.Module:
-    with open(CONTRACT, encoding="utf-8") as f:
-        return ast.parse(f.read(), CONTRACT)
+def _tree(path: str = CONTRACT) -> ast.Module:
+    with open(path, encoding="utf-8") as f:
+        return ast.parse(f.read(), path)
 
 
 def _loads(node: ast.AST) -> set[str]:
@@ -72,3 +72,25 @@ def test_every_helper_is_reachable_from_the_contract():
     helpers = {name for name, node in defs.items()
                if isinstance(node, ast.FunctionDef) or name.startswith("_SQL_")}
     assert helpers - seen == set()
+
+
+def test_every_query_closure_and_import_is_used():
+    fn = next(n for n in _tree().body
+              if isinstance(n, ast.FunctionDef) and n.name == "queries")
+    local = {n.name for n in fn.body if isinstance(n, ast.FunctionDef)}
+    for node in fn.body:
+        if isinstance(node, ast.ImportFrom):
+            local |= {a.asname or a.name for a in node.names}
+    assert local - _loads(fn) == set()
+
+
+def test_every_bench_row_is_a_query_row():
+    rows = []
+    for node in ast.walk(_tree(BENCH)):
+        if (isinstance(node, ast.For) and isinstance(node.iter, ast.List)
+                and any(isinstance(n, ast.Subscript)
+                        and isinstance(n.value, ast.Name) and n.value.id == "qs"
+                        for n in ast.walk(node))):
+            rows += [e.value for e in node.iter.elts]
+    assert rows
+    assert set(rows) - set(contract.queries()) == set()

@@ -4,11 +4,12 @@ triple output must contain every family."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from conftest import MINI_OBO
 from kgpipe.detect import build_dictionary_df, detect_mentions
-from kgpipe.pipeline import PipelineConfig, run_pipeline
+from kgpipe.pipeline import PipelineConfig, main, run_pipeline
 from kgpipe.synth import generate_transcripts
 from kgpipe.triples import PRED_COOCCURS, PRED_DENOTES, PRED_ROLE
 
@@ -158,3 +159,24 @@ def test_snapshot_rejects_remote_scheme(spark, tmp_path):
     # file: URIs normalize instead of raising
     assert snapshot_staging_path("file://" + str(tmp_path), "RUN").startswith(
         str(tmp_path))
+
+
+@pytest.mark.parametrize("fused", [False, True])
+@pytest.mark.parametrize("field,flag,value", [
+    ("n_buckets", "--buckets", 0),
+    ("cooc_window", "--cooc-window", -1),
+])
+def test_bad_bucket_and_window_settings_rejected_up_front(
+        monkeypatch, field, flag, value, fused):
+    with pytest.raises(ValueError, match=field):
+        PipelineConfig(obo_paths={"CL": MINI_OBO}, fused=fused,
+                       **{field: value})
+
+    def no_spark(*args, **kwargs):
+        raise AssertionError("Spark started before the config was checked")
+
+    monkeypatch.setattr("kgpipe.pipeline.get_spark", no_spark)
+    argv = ["--transcripts", "t/x.parquet", "--out", "o", "--obo",
+            f"CL={MINI_OBO}", flag, str(value)] + (["--fused"] if fused else [])
+    with pytest.raises(ValueError, match=field):
+        main(argv)

@@ -102,27 +102,6 @@ def test_latest_by_key(spark):
                    ("u2", "status"): "banned", ("u2", "plan"): "b"}
 
 
-def test_minhash_cross_and_dedup_against(spark):
-    from kgpipe.textops import dedup_against, minhash_cross_pairs
-
-    ref = spark.createDataFrame(
-        [(i, f"reference document number {i} with shared words alpha "
-             f"beta gamma delta epsilon zeta") for i in range(20)],
-        ["doc_id", "text"],
-    )
-    new = spark.createDataFrame(
-        [(100, "reference document number 3 with shared words alpha "
-               "beta gamma delta epsilon zeta"),   # exact dup of ref 3
-         (101, "completely different content about quantum chromodynamics "
-               "lattice simulations")],
-        ["doc_id", "text"],
-    )
-    pairs = minhash_cross_pairs(new, ref, jaccard_threshold=0.9).collect()
-    assert {(r["new_id"], r["ref_id"]) for r in pairs} == {(100, 3)}
-    kept = dedup_against(new, ref, jaccard_threshold=0.9)
-    assert [r["doc_id"] for r in kept.collect()] == [101]
-
-
 def test_validity_intervals(spark):
     from kgpipe.temporal import latest_by_key, validity_intervals
 
