@@ -1,37 +1,23 @@
-"""Corpus-hygiene operators for LLM training-data pipelines: PII
-redaction, URL/domain blocklist filtering, and benchmark decontamination
-(n-gram overlap against a held-out evaluation set).
+"""PII redaction and deterministic stratified sampling over a text
+column.
 
-Like kgpipe.textops, everything here is column expressions (JVM-side,
-whole-stage codegen) except where a join is the semantics; the regex
-subset used is the intersection of Java regex (Spark) and RE2 (DuckDB)
-so the DuckDB oracle can run the identical patterns: ASCII ``\\d``/
-``\\s`` classes, ``\\b`` anchors, bounded repetition — no backreferences
-or lookaround.
-
-Reference context: the reference pipeline (UCDenver-ccp/ccp-nlp-pipelines)
-normalizes document text before dictionary lookup
-(nlp-pipelines-runner/.../DocumentTextProcessingPipeline) but has no
-corpus-hygiene stage; these operators are the training-data extensions the
-task brief asks for beyond reference parity (C4: Raffel et al. 2020 §2.2
-blocklist filtering; decontamination: GPT-3 appendix C / Brown et al. 2020
-n-gram overlap).
+Everything here is column expressions (JVM-side, whole-stage codegen);
+the regex subset used is the intersection of Java regex (Spark) and RE2
+(DuckDB) so a DuckDB oracle can run the identical patterns: ASCII
+``\\d``/``\\s`` classes, ``\\b`` anchors, bounded repetition — no
+backreferences or lookaround.
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Mapping, Sequence
+from typing import Mapping
 
 from pyspark.sql import Column, DataFrame, functions as F
-
-from .textops import ngram_set_col
 
 # Patterns valid (and identical in meaning) under both Java regex and RE2.
 EMAIL_RE = r"[A-Za-z0-9._%+\-]+@[A-Za-z0-9.\-]+\.[A-Za-z]{2,}"
 IPV4_RE = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
 PHONE_RE = r"\b\d{3}[-.]\d{3}[-.]\d{4}\b"
-URL_RE = r"https?://[^\s]+"
-HOST_RE = r"https?://([^/\s:]+)"
 
 
 def redact_pii(df: DataFrame, text: str = "text") -> DataFrame:
@@ -62,105 +48,6 @@ def redact_pii(df: DataFrame, text: str = "text") -> DataFrame:
         F.regexp_count(after_email, F.lit(IPV4_RE)).alias("n_ips"),
         F.regexp_count(after_ip, F.lit(PHONE_RE)).alias("n_phones"),
         F.regexp_replace(after_ip, PHONE_RE, "<PHONE>").alias("redacted"),
-    )
-
-
-def url_stats(
-    df: DataFrame,
-    blocked_domains: Sequence[str] = (),
-    text: str = "text",
-) -> DataFrame:
-    """C4-style URL accounting + domain blocklist: per document, the
-    number of URLs, the number whose host (lowercased, ``www.``-stripped)
-    matches ``blocked_domains``, and a ``blocked`` flag (any hit).
-
-    Matching is registrable-domain style (the C4 / Raffel et al. 2020
-    blocklist convention): a host is blocked when it EQUALS a blocked
-    domain or is a subdomain of one (``sub.blocked.org`` matches
-    ``blocked.org``).
-
-    The blocklist rides into the expression as a literal array —
-    appropriate for curated blocklists (10²–10⁵ domains ship fine inside
-    the task binary; a million-domain list should instead join: explode
-    hosts → broadcast-join the blocklist table).  Narrow, zero-shuffle.
-    """
-    hosts = F.transform(
-        F.regexp_extract_all(F.col(text), F.lit(URL_RE), 0),
-        lambda u: F.regexp_replace(
-            F.lower(F.regexp_extract(u, HOST_RE, 1)), r"^www\.", ""
-        ),
-    )
-    blocked_arr = F.array(*[F.lit(d.lower()) for d in blocked_domains]) \
-        if blocked_domains else F.array().cast("array<string>")
-    staged = df.select("doc_id", hosts.alias("_hosts"))
-    n_blocked = F.size(
-        F.filter(
-            F.col("_hosts"),
-            lambda h: F.exists(
-                blocked_arr,
-                lambda d: (h == d) | h.endswith(F.concat(F.lit("."), d)),
-            ),
-        )
-    )
-    return staged.select(
-        "doc_id",
-        F.size("_hosts").alias("n_urls"),
-        n_blocked.alias("n_blocked"),
-        (n_blocked > 0).alias("blocked"),
-    )
-
-
-def benchmark_ngrams(
-    benchmark: DataFrame, n: int = 5, text: str = "text"
-) -> DataFrame:
-    """Distinct n-gram keys of a held-out benchmark/eval set, as
-    ``(gram_h)`` md5 rows.  Distinct-aggregated so the consumer can
-    broadcast it (benchmark suites are MBs; their n-gram sets are small)."""
-    return (
-        benchmark.select(
-            F.explode(ngram_set_col(text, n)).alias("gram")
-        )
-        .select(F.md5("gram").alias("gram_h"))
-        .distinct()
-    )
-
-
-def decontaminate(
-    df: DataFrame,
-    benchmark: DataFrame,
-    n: int = 5,
-    text: str = "text",
-) -> DataFrame:
-    """GPT-3-style training-set decontamination (Brown et al. 2020,
-    appendix C): flag training documents sharing any word n-gram with a
-    held-out benchmark set.  Returns every input document with the number
-    of distinct overlapping n-grams and a ``contaminated`` flag.
-
-    Scale shape: the corpus side explodes to (doc_id, md5(gram)) — the
-    fixed-width hash, never gram text, is the join key.  The benchmark
-    n-gram set (small by construction) broadcast-joins against it, so the
-    corpus side never shuffles for the join; the only exchange is the
-    key-width per-doc count aggregate, partial-aggregated map-side.  The
-    final left join back to doc_ids is broadcast-sized in the common case
-    (hits ≪ corpus) and an equi-join otherwise.
-    """
-    grams = df.select(
-        "doc_id", F.explode(ngram_set_col(text, n)).alias("gram")
-    ).select("doc_id", F.md5("gram").alias("gram_h"))
-    bench = benchmark_ngrams(benchmark, n, text)
-    hits = (
-        grams.join(F.broadcast(bench), "gram_h")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_contam"))
-    )
-    return (
-        df.select("doc_id")
-        .join(hits, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_contam", F.lit(0)).cast("int").alias("n_contam"),
-            (F.coalesce("n_contam", F.lit(0)) > 0).alias("contaminated"),
-        )
     )
 
 
@@ -208,78 +95,8 @@ def stratified_sample(
         thr = F.when(s == name, F.lit(rate_threshold_hex(rate))).otherwise(thr)
     # '|' separator keeps (salt, key) injective — concat('1', '23') must
     # not collide with concat('12', '3'); no separator when unsalted so
-    # the plain md5(key) contract (and its SQL oracle) stays simple
+    # the plain md5(key) contract (and its DuckDB parity check) stays simple
     k = F.col(key).cast("string")
     hashed = F.concat(F.lit(salt + "|"), k) if salt else k
     h = F.substring(F.md5(hashed), 1, 8)
     return df.filter(h < thr)
-
-
-def pack_sequences(
-    df: DataFrame,
-    budget: int,
-    n_shard_hex: int = 2,
-    text: str = "text",
-    key: str = "doc_id",
-    tokens_fn=None,
-) -> DataFrame:
-    """GPT-style sequence packing plan: concatenate documents in a
-    deterministic order and cut every ``budget`` tokens, reporting for
-    each document which training sequences it lands in —
-    ``(doc_id, shard, n_tokens, tok_offset, seq_first, seq_last,
-    n_splits)``.  ``seq_first``/``seq_last`` are the first/last sequence
-    indices *within the shard* that contain any of the document's tokens
-    (boundary-straddling documents split across sequences, the standard
-    concat-and-chunk LM data layout); ``n_splits`` counts the cuts
-    through the document.
-
-    A single global concatenation order would serialize the cumsum into
-    one partition, so documents are first sharded by the leading
-    ``n_shard_hex`` hex chars of ``md5(key)`` (256 shards at 2) and
-    packed independently per shard — exactly how a multi-worker
-    tokenizer packs per input shard.  The only exchange is the window's
-    hash partitioning on ``shard``; the cumulative sum is a local sort
-    within each.  Deterministic: same input -> same layout, any cluster
-    size, any retry.
-
-    Empty documents (0 tokens) occupy no span; they are assigned the
-    sequence at their offset with ``seq_last = seq_first`` so row count
-    is preserved for auditing.
-
-    ``tokens_fn`` (text-column-name → array<string> Column) plugs in the
-    token budget's unit: default whitespace ``tokens_col``; pass
-    ``textops.subword_tokens_col`` — or a real-BPE column builder — to
-    budget model tokens instead of words.  The packing plan itself is
-    tokenizer-agnostic (only ``size(tokens_fn(text))`` enters the cumsum).
-    """
-    from pyspark.sql import Window
-
-    from .textops import tokens_col
-
-    if budget <= 0:
-        raise ValueError(f"budget must be positive, got {budget}")
-    shard = F.substring(F.md5(F.col(key).cast("string")), 1, n_shard_hex)
-    w = (
-        Window.partitionBy("shard")
-        .orderBy("doc_id")  # staged aliases `key` to doc_id below
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    staged = df.select(
-        F.col(key).alias("doc_id"),
-        shard.alias("shard"),
-        F.size((tokens_fn or tokens_col)(text)).alias("n_tokens"),
-    ).withColumn("cum", F.sum("n_tokens").over(w))
-    off = F.col("cum") - F.col("n_tokens")
-    seq_first = F.floor(off / budget).cast("int")
-    seq_last = F.floor(
-        F.greatest(F.col("cum") - 1, off) / budget
-    ).cast("int")
-    return staged.select(
-        "doc_id",
-        "shard",
-        "n_tokens",
-        off.cast("long").alias("tok_offset"),
-        seq_first.alias("seq_first"),
-        seq_last.alias("seq_last"),
-        (seq_last - seq_first).alias("n_splits"),
-    )

@@ -4,8 +4,8 @@ import duckdb
 import pytest
 
 from kgpipe.corpus import (
-    EMAIL_RE, IPV4_RE, PHONE_RE, decontaminate, rate_threshold_hex,
-    redact_pii, stratified_sample, url_stats,
+    EMAIL_RE, IPV4_RE, PHONE_RE, rate_threshold_hex, redact_pii,
+    stratified_sample,
 )
 
 
@@ -95,64 +95,6 @@ def test_redact_pii_matches_duckdb(docs):
         assert r["redacted"] == d[4]
 
 
-def test_url_stats(docs):
-    got = {
-        r["doc_id"]: r
-        for r in url_stats(docs, blocked_domains=["blocked.org"]).collect()
-    }
-    assert got[5]["n_urls"] == 2
-    # C4-style registrable-domain match: sub.blocked.org IS under blocked.org
-    assert got[5]["n_blocked"] == 1 and got[5]["blocked"]
-    assert got[3]["n_urls"] == 0 and not got[3]["blocked"]
-    # ...but suffix matching requires a dot boundary: notblocked.org is safe
-    got_b = {
-        r["doc_id"]: r
-        for r in url_stats(docs, blocked_domains=["locked.org"]).collect()
-    }
-    assert got_b[5]["n_blocked"] == 0 and not got_b[5]["blocked"]
-
-    got2 = {
-        r["doc_id"]: r
-        for r in url_stats(
-            docs, blocked_domains=["Sub.Blocked.org", "example.com"]
-        ).collect()
-    }
-    assert got2[5]["n_blocked"] == 2 and got2[5]["blocked"]
-
-
-def test_url_stats_empty_blocklist(docs):
-    got = {r["doc_id"]: r for r in url_stats(docs).collect()}
-    assert got[5]["n_urls"] == 2 and got[5]["n_blocked"] == 0
-
-
-def test_decontaminate(spark):
-    corpus = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "a totally different sentence with no overlap"),
-            (3, "quick brown fox jumps over something else entirely"),
-        ],
-        ["doc_id", "text"],
-    )
-    bench = spark.createDataFrame(
-        [(100, "watch the quick brown fox jumps over fences")],
-        ["bench_id", "text"],
-    )
-    got = {r["doc_id"]: r for r in decontaminate(corpus, bench, n=5).collect()}
-    assert got[1]["contaminated"] and got[1]["n_contam"] >= 1
-    assert not got[2]["contaminated"] and got[2]["n_contam"] == 0
-    # doc 3 shares "quick brown fox jumps over" (5-gram) with the benchmark
-    assert got[3]["contaminated"]
-    assert len(got) == 3
-
-
-def test_decontaminate_short_docs(spark):
-    corpus = spark.createDataFrame([(1, "too short")], ["doc_id", "text"])
-    bench = spark.createDataFrame([(9, "also short")], ["bench_id", "text"])
-    got = decontaminate(corpus, bench, n=5).collect()
-    assert len(got) == 1 and got[0]["n_contam"] == 0
-
-
 def test_rate_threshold_hex():
     assert rate_threshold_hex(0.0) == "00000000"
     assert rate_threshold_hex(1.0) == "g"  # sorts above every hex prefix
@@ -217,98 +159,3 @@ def test_stratified_sample_duckdb_parity(spark):
         ).fetchall()
     ]
     assert got == want
-
-
-def test_pack_sequences(spark):
-    from kgpipe.corpus import pack_sequences
-
-    # force one shard so the layout is a single deterministic stream
-    rows = [(i, " ".join(["w"] * n)) for i, n in
-            [(1, 3), (2, 4), (3, 10), (4, 0), (5, 2)]]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = {
-        r["doc_id"]: r
-        for r in pack_sequences(df, budget=5, n_shard_hex=0).collect()
-    }
-    # n_shard_hex=0 -> every md5 prefix is '' -> one shard, order by doc_id
-    # offsets: d1@0(3) d2@3(4) d3@7(10) d4@17(0) d5@17(2)
-    assert got[1]["tok_offset"] == 0 and (got[1]["seq_first"], got[1]["seq_last"]) == (0, 0)
-    assert got[2]["tok_offset"] == 3 and (got[2]["seq_first"], got[2]["seq_last"]) == (0, 1)
-    assert got[2]["n_splits"] == 1
-    assert got[3]["tok_offset"] == 7 and (got[3]["seq_first"], got[3]["seq_last"]) == (1, 3)
-    assert got[3]["n_splits"] == 2
-    # empty doc occupies no span but keeps a row
-    assert got[4]["n_tokens"] == 0 and got[4]["seq_first"] == got[4]["seq_last"] == 3
-    assert got[5]["tok_offset"] == 17 and (got[5]["seq_first"], got[5]["seq_last"]) == (3, 3)
-
-    with pytest.raises(ValueError):
-        pack_sequences(df, budget=0)
-
-
-def test_pack_sequences_sharded_deterministic(spark):
-    from kgpipe.corpus import pack_sequences
-
-    rows = [(i, " ".join(["tok"] * (1 + i % 7))) for i in range(500)]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    a = sorted(map(tuple, pack_sequences(df, budget=16).collect()))
-    b = sorted(map(tuple, pack_sequences(
-        df.repartition(13), budget=16).collect()))
-    assert a == b  # layout independent of input partitioning
-    # within every shard, offsets are contiguous: sum of tokens == max cum
-    from collections import defaultdict
-    per = defaultdict(list)
-    for r in pack_sequences(df, budget=16).collect():
-        per[r["shard"]].append(r)
-    for shard, rs in per.items():
-        rs.sort(key=lambda r: r["tok_offset"])
-        off = 0
-        for r in rs:
-            assert r["tok_offset"] == off
-            off += r["n_tokens"]
-
-
-def test_pack_sequences_pluggable_tokenizer(spark):
-    """VERDICT r4 #7: the token budget's unit is pluggable — the BPE-ish
-    subword splitter changes n_tokens/cut layout while the packing
-    invariants (contiguous offsets, determinism) hold."""
-    from kgpipe.corpus import pack_sequences
-    from kgpipe.textops import subword_tokens_col
-
-    rows = [(1, "hello, world!!"),       # 2 words / 5 subwords
-            (2, "a.b"),                  # 1 word  / 3 subwords
-            (3, "plain words here")]     # 3 words / 3 subwords
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    words = {r["doc_id"]: r for r in
-             pack_sequences(df, budget=4, n_shard_hex=0).collect()}
-    sub = {r["doc_id"]: r for r in
-           pack_sequences(df, budget=4, n_shard_hex=0,
-                          tokens_fn=subword_tokens_col).collect()}
-    assert (words[1]["n_tokens"], words[2]["n_tokens"]) == (2, 1)
-    assert (sub[1]["n_tokens"], sub[2]["n_tokens"]) == (5, 3)
-    # layout shifts with the unit: under subwords doc 1 already straddles
-    # the first cut
-    assert words[1]["n_splits"] == 0 and sub[1]["n_splits"] == 1
-    # contiguity invariant holds for the plugged counter
-    off = 0
-    for d in (1, 2, 3):
-        assert sub[d]["tok_offset"] == off
-        off += sub[d]["n_tokens"]
-
-    # token_count exposes the same seam
-    from kgpipe.textops import token_count
-
-    t = {r["doc_id"]: r for r in
-         token_count(df, tokens_fn=subword_tokens_col).collect()}
-    assert all(t[d]["n_tokens"] == t[d]["n_subwords"] for d in (1, 2, 3))
-
-
-def test_pack_sequences_custom_key(spark):
-    from kgpipe.corpus import pack_sequences
-
-    df = spark.createDataFrame(
-        [("k1", "a b"), ("k2", "c d e")], ["my_id", "text"]
-    )
-    got = {r["doc_id"]: r for r in
-           pack_sequences(df, budget=4, key="my_id").collect()}
-    assert set(got) == {"k1", "k2"}
-    assert got["k1"]["n_tokens"] == 2 and got["k2"]["n_tokens"] == 3
